@@ -13,7 +13,9 @@ The reference's feature engineering over the 11-table catalog:
 6. M16: targets — target_played = minutes > 0, target_points = points >= 4
    (§ 88)
 
-Everything is expression-level; one shuffle per window partitioning.
+Everything is expression-level; one shuffle per window partitioning. The
+returned frame is pinned by an eager, untracked ``localCheckpoint``, so its
+consumers read the materialized rows instead of re-running the windows.
 """
 
 from __future__ import annotations
@@ -169,4 +171,7 @@ def build_model_matrix(catalog: dict[str, DataFrame], *, max_gameweek: int | Non
     # M16 targets (EDA § 88)
     df = df.withColumn("target_played", (F.col("minutes") > 0).cast("int"))
     df = df.withColumn("target_points", (F.col("total_points") >= 4).cast("int"))
-    return df
+    # pinned: the split, class weights, scaler and model fits and the
+    # evaluation all read this frame, and each would otherwise re-run the
+    # window and join lineage (untracked: freed once unreachable)
+    return df.localCheckpoint(eager=True)

@@ -14,10 +14,20 @@ document as ``map<string, struct<...>>``, explode the map once — the dict
 key becomes the ``player_id`` column, and each sub-list explodes into its
 fact table. One scan, no unions, fully parallel.
 
-Schemas are declared (SURVEY §1.3: declared side primary, inference only at
-the JSON edge). String-typed numeric fields from the API (form, ict_index…)
-are kept as strings here; the transform layer casts them (F2 semantics via
-try_* = null-on-failure, matching pandas errors='coerce').
+Schemas are declared for all three documents (SURVEY §1.3: the declared
+side is primary), covering the fields the transform reads; inference
+would cost an extra read job per document.
+String-typed numeric fields from the API (form, ict_index…) are kept as
+strings here; the transform layer casts them (F2 semantics via try_* =
+null-on-failure, matching pandas errors='coerce').
+
+Each document is parsed once per call and pinned: the parsed document is
+materialized by an eager ``localCheckpoint`` and every returned frame is a
+projection over it, so the catalog's many consumers (transform, PK checks,
+parquet write) read memory instead of re-scanning and re-parsing the JSON.
+The checkpoint is untracked — Spark's ContextCleaner frees its blocks once
+the last returned frame is unreachable, so no bulk release can cut a frame
+a consumer still holds.
 """
 
 from __future__ import annotations
@@ -27,6 +37,93 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --- element schemas ------------------------------------------------------
+
+_FIXTURE_FIELDS = [
+    ("id", T.LongType()),
+    ("code", T.LongType()),
+    ("event", T.LongType()),
+    ("kickoff_time", T.StringType()),
+    ("started", T.BooleanType()),
+    ("finished", T.BooleanType()),
+    ("finished_provisional", T.BooleanType()),
+    ("minutes", T.LongType()),
+    ("team_h", T.LongType()),
+    ("team_a", T.LongType()),
+    ("team_h_score", T.LongType()),
+    ("team_a_score", T.LongType()),
+    ("team_h_difficulty", T.LongType()),
+    ("team_a_difficulty", T.LongType()),
+]
+
+_EVENT_FIELDS = [
+    ("id", T.LongType()),
+    ("name", T.StringType()),
+    ("deadline_time", T.StringType()),
+    ("is_previous", T.BooleanType()),
+    ("is_current", T.BooleanType()),
+    ("is_next", T.BooleanType()),
+    ("finished", T.BooleanType()),
+    ("data_checked", T.BooleanType()),
+    ("average_entry_score", T.LongType()),
+    ("highest_scoring_entry", T.LongType()),
+    ("highest_score", T.LongType()),
+    ("most_selected", T.LongType()),
+    ("most_transferred_in", T.LongType()),
+    ("top_element", T.LongType()),
+    ("most_captained", T.LongType()),
+    ("most_vice_captained", T.LongType()),
+    ("transfers_made", T.LongType()),
+]
+
+_TEAM_FIELDS = [
+    ("id", T.LongType()),
+    ("code", T.LongType()),
+    ("name", T.StringType()),
+    ("short_name", T.StringType()),
+    ("strength", T.LongType()),
+    ("strength_overall_home", T.LongType()),
+    ("strength_overall_away", T.LongType()),
+    ("strength_attack_home", T.LongType()),
+    ("strength_attack_away", T.LongType()),
+    ("strength_defence_home", T.LongType()),
+    ("strength_defence_away", T.LongType()),
+]
+
+_ELEMENT_TYPE_FIELDS = [
+    ("id", T.LongType()),
+    ("singular_name", T.StringType()),
+    ("singular_name_short", T.StringType()),
+    ("squad_select", T.LongType()),
+    ("squad_min_play", T.LongType()),
+    ("squad_max_play", T.LongType()),
+]
+
+_ELEMENT_FIELDS = [
+    ("id", T.LongType()),
+    ("code", T.LongType()),
+    ("first_name", T.StringType()),
+    ("second_name", T.StringType()),
+    ("element_type", T.LongType()),
+    ("team", T.LongType()),
+    ("team_code", T.LongType()),
+    ("event_points", T.LongType()),
+    *[(c, T.StringType()) for c in (
+        "selected_by_percent", "form", "points_per_game", "value_form", "value_season",
+        "ep_next", "ep_this", "influence", "creativity", "threat", "ict_index",
+        "news", "news_added", "status", "photo",
+    )],
+    ("in_dreamteam", T.BooleanType()),
+    ("special", T.BooleanType()),
+    *[(c, T.LongType()) for c in (
+        "now_cost", "chance_of_playing_next_round", "chance_of_playing_this_round",
+        "cost_change_event", "cost_change_event_fall", "cost_change_start",
+        "cost_change_start_fall", "dreamteam_count", "total_points",
+        "transfers_in", "transfers_out", "transfers_in_event", "transfers_out_event",
+        "minutes", "goals_scored", "assists", "clean_sheets", "goals_conceded",
+        "own_goals", "penalties_saved", "penalties_missed", "yellow_cards",
+        "red_cards", "saves", "bonus", "bps",
+    )],
+]
 
 _HISTORY_FIELDS = [
     ("element", T.LongType()),
@@ -121,37 +218,62 @@ PLAYER_DOC_SCHEMA = T.MapType(
 )
 
 
+FIXTURES_DOC_SCHEMA = T.ArrayType(_struct(_FIXTURE_FIELDS))
+
+_MAIN_LISTS = {
+    "events": _EVENT_FIELDS,
+    "teams": _TEAM_FIELDS,
+    "element_types": _ELEMENT_TYPE_FIELDS,
+    "elements": _ELEMENT_FIELDS,
+}
+
+MAIN_DOC_SCHEMA = T.StructType(
+    [T.StructField(key, T.ArrayType(_struct(fields)), True) for key, fields in _MAIN_LISTS.items()]
+)
+
+
+def _read_document(spark: SparkSession, path: str, schema: T.DataType, *, strict: bool = True) -> DataFrame:
+    """Parse a whole JSON document against ``schema`` and pin it: one row per
+    file with the parsed ``doc`` column, materialized by an eager, untracked
+    ``localCheckpoint``.
+
+    ``strict`` guards the silent-corruption mode of ``from_json``: a
+    malformed document parses to null (or, for an object schema, to a
+    struct of nulls) and would give an empty catalog with no error. Non-empty
+    input that fails to parse, or whose top level is not the JSON array or
+    object the schema expects, raises ``ValueError`` naming the path.
+    """
+    text = F.col("value")
+    shape = F.json_array_length(text) if isinstance(schema, T.ArrayType) else F.json_object_keys(text)
+    bad = (F.length(F.trim(text)) > 0) & (F.col("doc").isNull() | shape.isNull())
+    parsed = spark.read.text(path, wholetext=True).select(F.from_json(text, schema).alias("doc"), text)
+    pinned = parsed.select("doc", bad.alias("bad")).localCheckpoint(eager=True)
+    if strict and pinned.filter("bad").count():
+        raise ValueError(f"JSON document at {path} is not parseable as the expected schema")
+    return pinned.select("doc")
+
+
 def read_fixtures_json(spark: SparkSession, path: str) -> DataFrame:
     """fixtures.json: top-level array of fixture objects (S3)."""
-    return spark.read.option("multiLine", True).json(path)
+    doc = _read_document(spark, path, FIXTURES_DOC_SCHEMA)
+    return doc.select(F.explode("doc").alias("r")).select("r.*")
 
 
 def read_main_json(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """main.json: one object with keyed lists → {events, teams,
     element_types, elements} DataFrames."""
-    doc = spark.read.option("multiLine", True).json(path)
-    out = {}
-    for key in ("events", "teams", "element_types", "elements"):
-        out[key] = doc.select(F.explode(key).alias("r")).select("r.*")
-    return out
+    doc = _read_document(spark, path, MAIN_DOC_SCHEMA)
+    return {key: doc.select(F.explode(f"doc.{key}").alias("r")).select("r.*") for key in _MAIN_LISTS}
 
 
 def read_players_json(spark: SparkSession, path: str, *, strict: bool = True) -> dict[str, DataFrame]:
     """players.json: dict keyed by player_id → exploded history / fixtures /
     history_past DataFrames, each carrying ``player_id`` (the dict key,
-    reference run_transform.py:251-252).
-
-    ``strict`` guards the silent-corruption mode of ``from_json`` (a
-    malformed document parses to null → an empty catalog with no error):
-    non-empty input that fails to parse raises.
+    reference run_transform.py:251-252). The parsed map is pinned, not the
+    raw text; ``strict=False`` skips the malformed-document check.
     """
-    raw = spark.read.text(path, wholetext=True)
-    parsed = raw.select(F.from_json(F.col("value"), PLAYER_DOC_SCHEMA).alias("m"), "value")
-    if strict:
-        bad = parsed.filter(F.col("m").isNull() & (F.length(F.trim(F.col("value"))) > 0)).count()
-        if bad:
-            raise ValueError(f"players document at {path} is not parseable as the expected schema")
-    per_player = parsed.select(F.explode("m").alias("player_id", "doc"))
+    doc = _read_document(spark, path, PLAYER_DOC_SCHEMA, strict=strict)
+    per_player = doc.select(F.explode("doc").alias("player_id", "doc"))
     out = {}
     for key in ("history", "fixtures", "history_past"):
         out[key] = per_player.select("player_id", F.explode(f"doc.{key}").alias("r")).select(

@@ -3,8 +3,12 @@
 The reference enforces PK uniqueness and not-null PKs as runtime checks on
 every transform run (etl/transform.py:14-56, etl/run_transform.py:462-506),
 with a raise-vs-warn switch. Spark has no constraint enforcement, so these
-are deliberate actions; run them on cached inputs when checking many tables
-built from the same plan.
+are deliberate actions. :func:`run_catalog_checks` evaluates every table's
+unique and not-null PK checks in one fused action: a union of per-table
+``(table, key encoding, any-null flag)`` projections, one
+``groupBy(table, key)``, one per-table roll-up and one collect of at most
+one row per table. The single-table checks are the same action over one
+table.
 """
 
 from __future__ import annotations
@@ -12,6 +16,7 @@ from __future__ import annotations
 import logging
 import warnings
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,38 +40,70 @@ def _fail(result: CheckResult, raise_errors: bool) -> CheckResult:
     msg = f"{result.table}: {result.check} failed — {result.detail}"
     if raise_errors:
         raise DataValidationError(msg)
-    warnings.warn(msg, stacklevel=3)
+    warnings.warn(msg, stacklevel=4)
     log.warning(msg)
     return result
+
+
+def _pk_stats(tables: list[tuple[DataFrame, list[str]]]) -> list[tuple[int, int, int]]:
+    """Per table, in order: (duplicated key groups, rows in them, rows with
+    a null PK level), computed for every table in one action.
+
+    Each table projects to (table index, key, any-null flag) and the
+    projections are unioned, so one groupBy serves all tables. The key is
+    the PK tuple cast to strings and written as JSON: injective per table
+    (the field names are fixed, the string cast keeps full timestamp and
+    double precision, a null level is an omitted field), and null levels
+    group together exactly as ``groupBy(*pk)`` groups them.
+    """
+    if not tables:
+        return []
+    parts = []
+    for i, (df, pk) in enumerate(tables):
+        any_null = reduce(lambda a, b: a | b, [F.col(c).isNull() for c in pk])
+        parts.append(df.select(
+            F.lit(i).alias("t"),
+            F.to_json(F.struct(*[F.col(c).cast("string").alias(c) for c in pk])).alias("k"),
+            any_null.alias("null_pk"),
+        ))
+    per_key = reduce(DataFrame.unionAll, parts).groupBy("t", "k").agg(
+        F.count(F.lit(1)).alias("n"), F.max("null_pk").alias("null_pk")
+    )
+    dup = F.col("n") > 1
+    rows = per_key.groupBy("t").agg(
+        F.count(F.when(dup, 1)).alias("groups"),
+        F.coalesce(F.sum(F.when(dup, F.col("n"))), F.lit(0)).alias("rows"),
+        F.coalesce(F.sum(F.when(F.col("null_pk"), F.col("n"))), F.lit(0)).alias("nulls"),
+    ).collect()
+    by_table = {r["t"]: (r["groups"], r["rows"], r["nulls"]) for r in rows}
+    return [by_table.get(i, (0, 0, 0)) for i in range(len(tables))]
+
+
+def _unique_result(table: str, groups: int, rows: int, raise_errors: bool) -> CheckResult:
+    if groups:
+        return _fail(
+            CheckResult(table, "unique_pk", False, f"{groups} duplicated keys over {rows} rows"), raise_errors
+        )
+    return CheckResult(table, "unique_pk", True)
+
+
+def _notnull_result(table: str, nulls: int, raise_errors: bool) -> CheckResult:
+    if nulls:
+        return _fail(CheckResult(table, "notnull_pk", False, f"{nulls} rows with null PK"), raise_errors)
+    return CheckResult(table, "notnull_pk", True)
 
 
 def check_unique_pk(df: DataFrame, pk: list[str], table: str, *, raise_errors: bool = True) -> CheckResult:
     """Q1: no duplicate PK tuples (≙ dval_unique_index). Diagnostic counts
     come from one groupBy rather than count-vs-distinct-count twice."""
-    dup = (
-        df.groupBy(*pk)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .agg(F.count(F.lit(1)).alias("groups"), F.coalesce(F.sum("n"), F.lit(0)).alias("rows"))
-        .first()
-    )
-    if dup["groups"]:
-        return _fail(
-            CheckResult(table, "unique_pk", False, f"{dup['groups']} duplicated keys over {dup['rows']} rows"),
-            raise_errors,
-        )
-    return CheckResult(table, "unique_pk", True)
+    groups, rows, _ = _pk_stats([(df, pk)])[0]
+    return _unique_result(table, groups, rows, raise_errors)
 
 
 def check_notnull_pk(df: DataFrame, pk: list[str], table: str, *, raise_errors: bool = True) -> CheckResult:
     """Q2: no nulls in any PK level (≙ dval_notnull_index)."""
-    cond = None
-    for c in pk:
-        cond = F.col(c).isNull() if cond is None else (cond | F.col(c).isNull())
-    n = df.filter(cond).count()
-    if n:
-        return _fail(CheckResult(table, "notnull_pk", False, f"{n} rows with null PK"), raise_errors)
-    return CheckResult(table, "notnull_pk", True)
+    _, _, nulls = _pk_stats([(df, pk)])[0]
+    return _notnull_result(table, nulls, raise_errors)
 
 
 def check_join_cardinality(
@@ -93,7 +130,7 @@ def validated_join(
     cardinality *before* joining (EDA.ipynb § 33,40,65: validated m:1 and
     1:1 merges). ``validate`` in {'many_to_one', 'one_to_one'}; the right
     side must always be unique on the key, 1:1 additionally checks the
-    left. The checks are eager count actions; run them on cached inputs
+    left. The checks are eager actions; run them on cached inputs
     when validating many joins from one plan.
 
     ``on`` may be a column name / list of names (keys inferred) or an
@@ -124,10 +161,13 @@ def validated_join(
 def run_catalog_checks(
     tables: dict[str, DataFrame], pks: dict[str, list[str]], *, raise_errors: bool = True
 ) -> list[CheckResult]:
-    """Q1+Q2 across the whole catalog (≙ run_transform.py:462-506)."""
+    """Q1+Q2 across the whole catalog (≙ run_transform.py:462-506), in one
+    action. Results come in catalog order, unique before not-null per
+    table; with ``raise_errors`` the first failure in that order raises."""
+    names = list(tables)
+    stats = _pk_stats([(tables[name], pks[name]) for name in names])
     results = []
-    for name, df in tables.items():
-        pk = pks[name]
-        results.append(check_unique_pk(df, pk, name, raise_errors=raise_errors))
-        results.append(check_notnull_pk(df, pk, name, raise_errors=raise_errors))
+    for name, (groups, rows, nulls) in zip(names, stats):
+        results.append(_unique_result(name, groups, rows, raise_errors))
+        results.append(_notnull_result(name, nulls, raise_errors))
     return results

@@ -143,9 +143,7 @@ def build_players_summary(raw_elements: DataFrame) -> DataFrame:
         int_str(F.col("element_type")).alias("position_id"),
         int_str(F.col("team")).alias("team_id"),
         int_str(F.col("team_code")).alias("team_id_long"),
-        F.col("gameweek_points" if "gameweek_points" in raw_elements.columns else "event_points")
-        .cast("int")
-        .alias("gameweek_points"),
+        F.col("event_points").cast("int").alias("gameweek_points"),
         dbl("selected_by_percent"),
         dbl("form"),
         dbl("points_per_game"),

@@ -24,16 +24,23 @@ from pyspark.sql import functions as F
 
 
 def add_balanced_weights(df: DataFrame, *, label: str, out: str = "weight") -> DataFrame:
-    """M4: sklearn class_weight='balanced' ≙ w_c = n / (n_classes * n_c),
-    computed distributed and broadcast back (no driver collect of rows)."""
-    counts = df.groupBy(label).agg(F.count(F.lit(1)).alias("__n_c"))
-    totals = counts.agg(
-        F.sum("__n_c").alias("__n"), F.count(F.lit(1)).alias("__k")
-    )
-    weights = counts.crossJoin(F.broadcast(totals)).select(
-        label, (F.col("__n") / (F.col("__k") * F.col("__n_c"))).alias(out)
-    )
-    return df.join(F.broadcast(weights), label, "left")
+    """M4: sklearn class_weight='balanced' ≙ w_c = n / (n_classes * n_c).
+
+    One action collects the k per-class counts (k rows, never the data
+    rows); the weights go back as a literal ``CASE`` on the label, so later
+    passes over the frame do not re-run the count. A null label is its own
+    class in n and k but gets a null weight, as a join on the label would
+    give it.
+    """
+    counts = df.groupBy(label).agg(F.count(F.lit(1)).alias("n_c")).collect()
+    n, k = sum(r["n_c"] for r in counts), len(counts)
+    weight = None
+    for r in counts:
+        if r[label] is None:
+            continue
+        hit, w = F.col(label) == F.lit(r[label]), F.lit(n / (k * r["n_c"]))
+        weight = F.when(hit, w) if weight is None else weight.when(hit, w)
+    return df.withColumn(out, F.lit(None).cast("double") if weight is None else weight)
 
 
 def choose_pca_k(train: DataFrame, *, features_col: str, variance: float = 0.95) -> int:

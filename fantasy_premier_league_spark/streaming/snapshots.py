@@ -108,13 +108,30 @@ def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame, on: str, *, how: s
 def run_to_parquet(stream: DataFrame, *, path: str, checkpoint: str, mode: str = "append") -> None:
     """Drain a stream to parquet with trigger=availableNow (incremental
     batch): processes everything currently in the source, checkpoints, and
-    stops — the scheduled-ingest pattern for snapshot drops."""
-    (
-        stream.writeStream.format("parquet")
-        .outputMode(mode)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    stops — the scheduled-ingest pattern for snapshot drops.
+
+    A stateful stream (the snapshot dedup) fixes its state-store partition
+    count when its checkpoint is created. A new checkpoint gets one state
+    partition per task slot (``defaultParallelism``) instead of the
+    session's shuffle partition count, which is sized for batch exchanges:
+    every state partition is a task and a state-store commit per
+    micro-batch. A restored checkpoint keeps its own count (Spark reads it
+    from the offset log). The session conf is set only while the query
+    starts, which clones it, and is restored before waiting.
+    """
+    spark = stream.sparkSession
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        query = (
+            stream.writeStream.format("parquet")
+            .outputMode(mode)
+            .option("path", path)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, before)
+    query.awaitTermination()

@@ -146,3 +146,106 @@ class TestQualityChecks:
         )
         with pytest.raises(quality.DataValidationError, match="notnull_pk"):
             quality.check_notnull_pk(bad, ["team_id"], "teams", raise_errors=True)
+
+
+class TestFusedCatalogChecks:
+    @pytest.fixture(scope="class")
+    def broken(self, catalog):
+        from pyspark.sql import functions as F
+
+        bad = dict(catalog)
+        bad["teams"] = catalog["teams"].unionByName(catalog["teams"].filter(F.col("team_id") == "1"))
+        bad["players_past"] = catalog["players_past"].withColumn(
+            "fixture_id", F.when(F.col("fixture_id") == "1", None).otherwise(F.col("fixture_id"))
+        )
+        return bad
+
+    def test_matches_per_table_checks(self, broken):
+        with pytest.warns(UserWarning):
+            fused = quality.run_catalog_checks(broken, transform.PRIMARY_KEYS, raise_errors=False)
+        with pytest.warns(UserWarning):
+            single = [
+                check(df, transform.PRIMARY_KEYS[name], name, raise_errors=False)
+                for name, df in broken.items()
+                for check in (quality.check_unique_pk, quality.check_notnull_pk)
+            ]
+        assert fused == single
+        assert len(fused) == 22
+        failed = [(r.table, r.check, r.detail) for r in fused if not r.ok]
+        assert failed == [
+            ("teams", "unique_pk", "1 duplicated keys over 2 rows"),
+            ("players_past", "notnull_pk", "1 rows with null PK"),
+        ]
+
+    def test_raises_on_first_failure_in_catalog_order(self, broken):
+        with pytest.raises(quality.DataValidationError, match="^teams: unique_pk"):
+            quality.run_catalog_checks(broken, transform.PRIMARY_KEYS, raise_errors=True)
+        later = {name: df for name, df in broken.items() if name != "teams"}
+        with pytest.raises(quality.DataValidationError, match="^players_past: notnull_pk"):
+            quality.run_catalog_checks(later, transform.PRIMARY_KEYS, raise_errors=True)
+
+    def test_null_levels_group_like_group_by(self, spark):
+        df = spark.createDataFrame(
+            [("a", None), ("a", None), (None, "b"), ("a", "b"), (None, None)], "x string, y string"
+        )
+        with pytest.warns(UserWarning, match="1 duplicated keys over 2 rows"):
+            quality.check_unique_pk(df, ["x", "y"], "t", raise_errors=False)
+        with pytest.warns(UserWarning, match="4 rows with null PK"):
+            quality.check_notnull_pk(df, ["x", "y"], "t", raise_errors=False)
+
+
+class TestMalformedSnapshots:
+    @pytest.mark.parametrize(
+        "document, reader, wrong_shape",
+        [
+            ("fixtures", ingest.read_fixtures_json, {"fixtures": fpl_fixtures.FIXTURES}),
+            ("main", ingest.read_main_json, [{"events": fpl_fixtures.EVENTS}]),
+            ("players", ingest.read_players_json, [{"history": []}]),
+        ],
+    )
+    def test_truncated_and_wrong_shape_raise_naming_path(self, spark, tmp_path, document, reader, wrong_shape):
+        import json
+
+        paths = fpl_fixtures.write_fixture_files(str(tmp_path))
+        doc = open(paths[document]).read()
+        truncated = tmp_path / "truncated.json"
+        truncated.write_text(doc[: len(doc) // 2])
+        with pytest.raises(ValueError, match="truncated.json"):
+            reader(spark, str(truncated))
+        shaped = tmp_path / "wrong_shape.json"
+        shaped.write_text(json.dumps(wrong_shape))
+        with pytest.raises(ValueError, match="wrong_shape.json"):
+            reader(spark, str(shaped))
+
+
+class TestPinnedLifetime:
+    """The readers and the model matrix return frames over an untracked
+    local checkpoint: the JSON parse and the windows run once, and a bulk
+    release of operator caches cannot cut them."""
+
+    @staticmethod
+    def _plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def test_cut_lineage_survives_release(self, spark, tmp_path):
+        from fantasy_premier_league_spark.etl import features
+        from fantasy_premier_league_spark.operators.cache import release_operator_caches
+
+        paths = fpl_fixtures.write_fixture_files(str(tmp_path))
+        raw_main = ingest.read_main_json(spark, paths["main"])
+        raw_players = ingest.read_players_json(spark, paths["players"])
+        frames = {
+            "fixtures": ingest.read_fixtures_json(spark, paths["fixtures"]),
+            **{f"main.{k}": v for k, v in raw_main.items()},
+            **{f"players.{k}": v for k, v in raw_players.items()},
+        }
+        catalog = transform.build_all(frames["fixtures"], raw_main, raw_players)
+        frames["model_matrix"] = features.build_model_matrix(catalog)
+        for name, df in frames.items():
+            plan = self._plan(df)
+            assert "Relation" not in plan and "from_json" not in plan, (name, plan)
+            assert "Window" not in plan, (name, plan)
+        before = {name: df.count() for name, df in frames.items()}
+        assert before["fixtures"] == 12 and before["model_matrix"] > 0
+        release_operator_caches()
+        assert {name: df.count() for name, df in frames.items()} == before

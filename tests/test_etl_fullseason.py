@@ -166,6 +166,19 @@ class TestFullSeason:
         results = quality.run_catalog_checks(season, transform.PRIMARY_KEYS, raise_errors=True)
         assert all(r.ok for r in results)
 
+    def test_catalog_checks_are_one_fused_action(self, spark, season):
+        # one collect; AQE submits each broadcast and shuffle stage of the
+        # 11 table plans as its own job, so the bound is a handful, not 1
+        sc = spark.sparkContext
+        sc.setJobGroup("fused-pk-checks", "run_catalog_checks")
+        try:
+            results = quality.run_catalog_checks(season, transform.PRIMARY_KEYS, raise_errors=True)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup("fused-pk-checks")
+        assert len(results) == 22
+        assert 1 <= len(jobs) <= 12, jobs
+
     def test_league_table_conservation_laws(self, season):
         tbl = season["league_table"].collect()
         assert len(tbl) == N_TEAMS

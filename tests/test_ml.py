@@ -61,6 +61,20 @@ class TestPipeline:
         assert got[1] == pytest.approx(40 / (2 * 30))
         assert got[0] == pytest.approx(40 / (2 * 10))
 
+    def test_balanced_weights_match_join_formula_with_null_labels(self, spark):
+        df = spark.createDataFrame(
+            [(0,)] * 12 + [(1,)] * 5 + [(2,)] * 3 + [(None,)] * 4, "label int"
+        )
+        # the broadcast-join formula the literal CASE replaced
+        counts = df.groupBy("label").agg(F.count(F.lit(1)).alias("n_c"))
+        totals = counts.agg(F.sum("n_c").alias("n"), F.count(F.lit(1)).alias("k"))
+        joined = counts.crossJoin(totals).select("label", (F.col("n") / (F.col("k") * F.col("n_c"))).alias("w"))
+        expect = {r["label"]: r["w"] for r in df.join(joined, "label", "left").distinct().collect()}
+        got = {r["label"]: r["weight"] for r in P.add_balanced_weights(df, label="label").distinct().collect()}
+        assert got == expect
+        # n = 24 and k = 4 count the null-label rows; they get no weight
+        assert got == {0: 24 / (4 * 12), 1: 24 / (4 * 5), 2: 24 / (4 * 3), None: None}
+
     def test_pca_by_variance_detects_redundancy(self, clf_data):
         from pyspark.ml.feature import VectorAssembler
 

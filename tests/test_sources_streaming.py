@@ -162,6 +162,38 @@ class TestStreaming:
                           path=out, checkpoint=ckpt)
         assert spark.read.parquet(out).count() == 2
 
+    def test_status_log_keeps_session_conf_and_state_per_slot(self, spark, tmp_path):
+        snapdir = tmp_path / "drops3"
+        snapdir.mkdir()
+        doc = json.dumps({"elements": [{"id": i, "form": "1.0", "status": "a"} for i in (1, 2, 3)]})
+        for name in ("main_20200101-100000.json", "main_20200101-100000_redelivered.json"):
+            (snapdir / name).write_text(doc)
+        out, ckpt = str(tmp_path / "o"), str(tmp_path / "c")
+        key = "spark.sql.shuffle.partitions"
+        restore = spark.conf.get(key)
+        # a batch-sized count that differs from the task slot count
+        before = str(spark.sparkContext.defaultParallelism + 3)
+
+        def drain():
+            ST.run_to_parquet(ST.players_status_stream(ST.stream_snapshots(spark, str(snapdir))),
+                              path=out, checkpoint=ckpt)
+
+        spark.conf.set(key, before)
+        try:
+            drain()
+            assert spark.conf.get(key) == before
+            # the re-delivered copy carries the same snapshot_ts and is dropped
+            assert spark.read.parquet(out).count() == 3
+            # the new checkpoint holds one dedup-state partition per task slot
+            state = [d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()]
+            assert len(state) == spark.sparkContext.defaultParallelism
+            (snapdir / "main_20200102-100000.json").write_text(doc)
+            drain()
+            assert spark.conf.get(key) == before
+            assert spark.read.parquet(out).count() == 6
+        finally:
+            spark.conf.set(key, restore)
+
     def test_windowed_counts_match_batch(self, spark):
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         from fantasy_premier_league_spark.catalog import load as cat_load
