@@ -106,15 +106,6 @@ def check_notnull_pk(df: DataFrame, pk: list[str], table: str, *, raise_errors: 
     return _notnull_result(table, nulls, raise_errors)
 
 
-def check_join_cardinality(
-    build_side: DataFrame, keys: list[str], table: str, *, expect: str = "unique", raise_errors: bool = True
-) -> CheckResult:
-    """Q4: pre-join cardinality validation (≙ pandas merge validate=
-    'many_to_one'/'one_to_one' on the build side, EDA.ipynb § 33,40,65)."""
-    assert expect == "unique"
-    return check_unique_pk(build_side, keys, f"{table}<join-build-side>", raise_errors=raise_errors)
-
-
 def validated_join(
     left: DataFrame,
     right: DataFrame,

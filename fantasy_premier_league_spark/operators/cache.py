@@ -5,18 +5,19 @@ one returned plan (the dedup inverted index, MinHash/SimHash sketch tables,
 PageRank's degree-annotated edge list). The returned DataFrame is lazy, so
 the operator itself has no terminal action after which it could unpersist —
 left alone, the cached blocks outlive the query and accumulate across calls
-in a long-lived session or a 90-query bench run.
+in a long-lived session or a benchmark's closed loop of queries.
 
 ``tracked_persist`` registers every such frame; ``release_operator_caches``
-drops them all once the caller has consumed its results. The bench harness
-releases after every query, long-lived pipelines should release per stage.
+drops them all once the caller has consumed its results. perfbench's
+``Workload.after_op`` releases after every op, long-lived pipelines should
+release per stage.
 Unpersisting a CACHE is always safe in Spark (blocks drop, lineage
 recomputes), so for tracked_persist frames a release that races a
 still-running consumer costs performance, never correctness.
 TRACKED CHECKPOINTS are stricter: a localCheckpoint's lineage is truncated,
 so once its blocks release the returned DataFrame cannot be re-executed —
 release only AFTER all consumers (including any later re-collect of the
-same result frame) are done. The per-query bench/parity harnesses satisfy
+same result frame) are done. perfbench and the parity harness satisfy
 this by construction (collect once, release, never touch the frame again).
 """
 
@@ -59,15 +60,26 @@ def tracked_local_checkpoint(df: DataFrame, *, eager: bool = True) -> DataFrame:
     """``df.localCheckpoint(eager)`` + registration of the checkpoint's
     storage blocks for a later bulk release.
 
+    This is the right materialization for ARRAY-TYPED frames consumed a
+    handful of times within one query. ``persist()`` routes through
+    InMemoryRelation, whose columnar batch encode costs a multiple of the
+    plan's own execution for array columns (measured, 6k-row SimHash
+    fingerprint frame: 0.4s to compute, +0.6-2.0s to build the columnar
+    cache, +0.06s to checkpoint at the RDD layer — the array encoder
+    dominates). Sketch frames (MinHash sigs, SimHash fingerprints, per-doc
+    shingle arrays) are write-once/read-2-3x inside one query, so the
+    columnar encode never pays for itself; row-layout RDD blocks serve the
+    few readers directly.
+
     localCheckpoint persists its RDD at the RDD layer, invisible to
     ``DataFrame.unpersist`` (which only talks to the SQL cache manager) —
     without this wrapper every checkpointed iteration (PageRank, label
     propagation, connected components) would leave a nodes-sized block set
-    resident for the life of the session, accumulating across a 136-query
-    bench run. The newly-persisted RDD ids are observable as a before/after
-    delta of ``getPersistentRDDs`` for eager AND lazy checkpoints alike —
-    ``localCheckpoint`` persists (and so registers) its RDD at call time,
-    only the materialization is deferred.
+    resident for the life of the session, accumulating across every
+    query the session runs. The newly-persisted RDD ids are observable as
+    a before/after delta of ``getPersistentRDDs`` for eager AND lazy
+    checkpoints alike — ``localCheckpoint`` persists (and so registers)
+    its RDD at call time, only the materialization is deferred.
 
     ``eager=False`` returns a frame whose LINEAGE IS ALREADY CUT (the plan
     is rebased on the checkpoint RDD immediately) but whose blocks
@@ -108,28 +120,6 @@ def tracked_local_checkpoint(df: DataFrame, *, eager: bool = True) -> DataFrame:
     if new_ids:
         _TRACKED_CHECKPOINTS.append((sc, new_ids))
     return out
-
-
-def tracked_materialize(df: DataFrame, *, eager: bool = True) -> DataFrame:
-    """Materialize a frame at the RDD layer (tracked localCheckpoint)
-    instead of the SQL columnar cache — the right persist for ARRAY-TYPED
-    frames consumed a handful of times within one query.
-
-    ``persist()`` routes through InMemoryRelation, whose columnar batch
-    encode costs a multiple of the plan's own execution for array columns
-    (measured, 6k-row SimHash fingerprint frame: 0.4s to compute, +0.6-2.0s
-    to build the columnar cache, +0.06s to checkpoint at the RDD layer —
-    the array encoder dominates). Sketch frames (MinHash sigs, SimHash
-    fingerprints, per-doc shingle arrays) are write-once/read-2-3x inside
-    one query, so the columnar encode never pays for itself; row-layout
-    RDD blocks serve the few readers directly. Trade-offs inherited from
-    localCheckpoint: lineage is CUT (release only after all consumers are
-    done — the module contract) and blocks are not executor-loss-tolerant
-    (swap for checkpoint() to reliable storage on a real cluster).
-    ``eager=False`` defers materialization to the caller's next
-    full-scan action (see tracked_local_checkpoint).
-    """
-    return tracked_local_checkpoint(df, eager=eager)
 
 
 def release_operator_caches(*, blocking: bool = False) -> int:

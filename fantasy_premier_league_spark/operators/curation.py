@@ -432,9 +432,9 @@ def _words_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     spread first: the tokenize pass profiled as ONE 0.7s task on a
     single-file local scan (no-op at real scale)."""
     from ..catalog import spread_partitions
-    from .cache import tracked_materialize
+    from .cache import tracked_local_checkpoint
 
-    return tracked_materialize(
+    return tracked_local_checkpoint(
         spread_partitions(df.select(F.col(id_col).alias("id"), F.col(text_col)))
         .select("id", words(F.col(text_col)).alias("__w")),
         eager=False,

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .cache import tracked_local_checkpoint, tracked_materialize, tracked_persist
+from .cache import tracked_local_checkpoint, tracked_persist
 from .local import local_frame
 
 _MASK30 = (1 << 30) - 1
@@ -262,7 +262,7 @@ def ngram_jaccard_pairs(
         arr = (
             shingle_arrays
             if shingle_arrays is not None
-            else tracked_materialize(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
+            else tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
         )
         shs = arr.select(
             "id", F.size("__arr").alias("n_shingles"), F.explode("__arr").alias("shingle")
@@ -420,7 +420,7 @@ def containment_sketch_arrays(
 
     The TOKENIZE-ONCE hook for compositions that run the exact containment
     path and the sketch path over one corpus (the containment recall eval):
-    build this frame once, ``tracked_materialize`` it, and pass it to both
+    build this frame once, ``tracked_local_checkpoint`` it, and pass it to both
     operators via their ``shingle_arrays`` parameter — each operator
     otherwise builds and materializes its own copy, re-tokenizing the
     corpus per operator. Hash family matches the operator exactly, so
@@ -471,7 +471,7 @@ def containment_pairs(
         arr = (
             shingle_arrays.select("id", "__arr")
             if shingle_arrays is not None
-            else tracked_materialize(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
+            else tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
         )
         shs = arr.select(
             "id", F.size("__arr").alias("n_shingles"), F.explode("__arr").alias("shingle")
@@ -632,7 +632,7 @@ def containment_lsh_pairs(
             )
         arr = shingle_arrays
     else:
-        arr = tracked_materialize(
+        arr = tracked_local_checkpoint(
             containment_sketch_arrays(df, id_col, text_col, n, portable=portable),
             eager=False,
         )
@@ -696,7 +696,7 @@ def minhash_signatures(
     materializes or fully consumes the signature frame within one query,
     the module contract that makes the tracked checkpoint releasable.
     """
-    arr = tracked_materialize(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
+    arr = tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
     return minhash_signatures_from_arrays(
         arr, num_hashes=num_hashes, seed=seed, portable=portable
     )
@@ -761,12 +761,12 @@ def lsh_candidate_pairs(
     # RDD-layer materialization, NOT tracked_persist: `ids` is an array
     # column and the SQL columnar cache's array encoder costs a multiple
     # of the aggregate itself (the measured q41 adjacency trap —
-    # cache.py::tracked_materialize rationale; v52 profiled ~10s of task
+    # cache.py::tracked_local_checkpoint rationale; v52 profiled ~10s of task
     # CPU in the cache-build stage). eager=False folds materialization
     # into the accounting job below (LocalRDDCheckpointData fills every
     # partition at the end of the first job, the pinned lazy-checkpoint
     # contract), so the job count is unchanged.
-    buckets = tracked_materialize(
+    buckets = tracked_local_checkpoint(
         _banded(sig_df, bands)
         .groupBy("band_idx", "band_sig")
         .agg(F.collect_list("id").alias("ids")),
@@ -829,7 +829,7 @@ def minhash_dedup_pairs(
     # build inside that job instead of a separate eager fixed-cost job
     # (the round-7 bench regression); tracked so a long-lived session can
     # bulk-release via cache.release_operator_caches
-    sigs = tracked_materialize(
+    sigs = tracked_local_checkpoint(
         minhash_signatures_from_arrays(
             shingle_arrays, num_hashes=num_hashes, seed=seed, portable=portable
         )
@@ -890,7 +890,7 @@ def minhash_incremental_pairs(
     caller must build the index with identical (n, num_hashes, seed,
     portable) or estimates are meaningless.
     """
-    new_sigs = tracked_materialize(
+    new_sigs = tracked_local_checkpoint(
         minhash_signatures(
             new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed, portable=portable
         ),
@@ -1007,7 +1007,7 @@ def minhash_incremental_pairs_indexed(
     portable) contract as the index build, same output as the re-banding
     form (asserted in tests/test_guards_lifecycle.py).
     """
-    new_sigs = tracked_materialize(
+    new_sigs = tracked_local_checkpoint(
         minhash_signatures(
             new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed, portable=portable
         ),
@@ -1684,12 +1684,12 @@ def prefix_filtered_jaccard_pairs(
     cache the prefix route reuses for its global shingle order.
     """
     # RDD-layer materialization (columnar cache would re-encode the string
-    # arrays, see cache.tracked_materialize). Lazy when probing: the probe's
+    # arrays, see cache.tracked_local_checkpoint). Lazy when probing: the probe's
     # histogram job consumes arr as a single subtree and is the first full
     # scan, so the blocks materialize inside the job the route needs anyway;
     # eager when the probe is disabled (the prefix plan reads arr from
     # several subtrees — a lazy cut would race them into recomputing it).
-    arr = tracked_materialize(
+    arr = tracked_local_checkpoint(
         doc_shingle_arrays(df, id_col, text_col, n),
         eager=naive_candidate_ratio is None,
     )

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cache import tracked_local_checkpoint, tracked_materialize, tracked_persist
+from .cache import tracked_local_checkpoint, tracked_persist
 from .local import local_frame
 
 
@@ -321,15 +321,15 @@ def co_occurrence_edges(
     # WRITE: the reduce-side distinct HashAggregate still executed once
     # per branch (profiled at sf0.1: the 64-task distinct stage carried
     # 2x the CPU of a single pass, the dominant stage of every consumer).
-    # tracked_materialize at the RDD layer skips the columnar-cache
-    # encode (cache.py::tracked_materialize rationale); eager=False folds
+    # tracked_local_checkpoint at the RDD layer skips the columnar-cache
+    # encode (cache.py::tracked_local_checkpoint rationale); eager=False folds
     # materialization into the consumer's first full-scan action — every
     # consumer (LPA/PageRank node-stats probe, triangle build, a plain
     # sink) scans all partitions first. Measured on q42 (LPA end-to-end,
     # warm min-of-3): 3.35s -> 2.86s; first-touch 9.1s -> 3.9s. A plain
     # persist() here had measured SLOWER in earlier rounds — the columnar
     # encode, not the idea of materializing, was the cost.
-    und = tracked_materialize(und, eager=False)
+    und = tracked_local_checkpoint(und, eager=False)
     return und.union(und.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
 
@@ -377,7 +377,7 @@ def triangle_stats(
     # hash-aggregate of the edge list) that profiling showed re-doing
     # upstream work on the q41 composition.
     if assume_canonical:
-        und = tracked_materialize(
+        und = tracked_local_checkpoint(
             edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")),
             eager=False,
         )
@@ -415,9 +415,9 @@ def triangle_stats(
     # back-to-back 8.4MB aggregate stages on identical input). RDD
     # blocks, NOT the columnar cache: nbrs is array-typed and the
     # columnar array encoder costs a multiple of the aggregate itself
-    # (cache.py::tracked_materialize rationale; a tracked_persist here
+    # (cache.py::tracked_local_checkpoint rationale; a tracked_persist here
     # measured 2x SLOWER end-to-end than no persist at all).
-    adj = tracked_materialize(
+    adj = tracked_local_checkpoint(
         o.groupBy("a").agg(F.sort_array(F.collect_list("b")).alias("nbrs")),
         eager=False,
     )

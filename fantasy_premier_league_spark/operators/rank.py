@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .cache import tracked_materialize
+from .cache import tracked_local_checkpoint
 
 def _all_rows() -> "Window":
     """Window over the whole numPartitions-row offsets frame (tiny by
@@ -88,7 +88,7 @@ def global_cumsum(
     # registry consumes every build immediately, so the eager build is
     # the intended trade here; callers composing speculatively should
     # compute the rank column only on the path that runs.
-    sorted_df = tracked_materialize(sorted_df, eager=False)
+    sorted_df = tracked_local_checkpoint(sorted_df, eager=False)
 
     sizes = sorted_df.groupBy("__pid").agg(F.sum("__v").alias("__s"))
     cum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
@@ -116,7 +116,7 @@ def global_rank(df: DataFrame, order: list[Column], *, out: str = "rank", start:
     driver-side collect. Plan contains no BatchEvalPython / PythonRDD
     node (asserted in tests/test_crosschecks.py).
     """
-    sorted_df = tracked_materialize(
+    sorted_df = tracked_local_checkpoint(
         df.orderBy(*order).withColumn("__pid", F.spark_partition_id()),
         eager=False,
     )  # two consumers (offsets + final join); see global_cumsum
@@ -152,7 +152,7 @@ def global_ntile(
     has exactly the two branches of :func:`global_rank` — no third
     count branch over the data.
     """
-    sorted_df = tracked_materialize(
+    sorted_df = tracked_local_checkpoint(
         df.orderBy(*order).withColumn("__pid", F.spark_partition_id()),
         eager=False,
     )  # two consumers (offsets + final join); see global_cumsum

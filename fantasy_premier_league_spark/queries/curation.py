@@ -726,7 +726,7 @@ def v52_containment_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consume one materialized (id, __arr, __h) frame (operators/dedup.py::
     # containment_sketch_arrays) instead of three independently-built,
     # independently-tokenized copies of the shingle index
-    arr = cache.tracked_materialize(
+    arr = cache.tracked_local_checkpoint(
         D.containment_sketch_arrays(docs, "doc_id", "text", 3, portable=True),
         eager=True,
     )

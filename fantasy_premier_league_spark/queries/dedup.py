@@ -1010,9 +1010,9 @@ def q40_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-tokenizes the corpus (measured ~0.5s of the sf0.1 warm runtime).
     # Eager: two independent subtrees consume it inside one action, so a
     # lazy cut would race them into recomputing (cache.py contract).
-    from ..operators.cache import tracked_materialize
+    from ..operators.cache import tracked_local_checkpoint
 
-    arr = tracked_materialize(
+    arr = tracked_local_checkpoint(
         D.doc_shingle_arrays(docs, "doc_id", "text", 3), eager=True
     )
     lsh = D.minhash_dedup_pairs(

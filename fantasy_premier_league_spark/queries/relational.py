@@ -930,9 +930,9 @@ def v55_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pre-aggregation filter; n_sampled > 0 preserves the filtered
     # form's semantics exactly (a group with zero sampled rows produced
     # no sm row, and the join dropped it).
-    from ..operators.cache import tracked_materialize
+    from ..operators.cache import tracked_local_checkpoint
 
-    keyed = tracked_materialize(
+    keyed = tracked_local_checkpoint(
         spread_partitions(
             li.select("l_returnflag", "l_extendedprice", "l_orderkey", "l_linenumber")
         ).select(

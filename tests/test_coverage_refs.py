@@ -110,3 +110,25 @@ def test_window_is_physical_slots():
     rows_only = {"incremental_distinct", "compression_quality"}
     assert all(n in oracles for n in window if _slug(n) not in rows_only)
     assert set(E.queries()) == set(all_queries())
+
+
+_PY_PATH = re.compile(r"(?<![\w./-])((?:[\w-]+/)*[\w.-]+\.py)\b")
+
+
+def test_doc_py_paths_exist():
+    """Every ``*.py`` path that README.md or the verify skill names must
+    exist, so deleting a script cannot leave a stale run command behind.
+    A path with a directory is repo-relative; a bare name (a Layout-tree
+    leaf, a root script) must name a file somewhere in the repo."""
+    names = set()
+    for _root, dirs, files in os.walk(_REPO):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "__pycache__"]
+        names.update(f for f in files if f.endswith(".py"))
+    missing = []
+    for doc in ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md")):
+        text = open(os.path.join(_REPO, doc), encoding="utf-8").read()
+        for path in sorted(set(_PY_PATH.findall(text))):
+            ok = os.path.isfile(os.path.join(_REPO, path)) if "/" in path else path in names
+            if not ok:
+                missing.append(f"{doc}: {path}")
+    assert not missing, f"docs name *.py paths that do not exist: {missing}"

@@ -158,6 +158,37 @@ class TestCacheLifecycle:
         assert not (_persistent_ids(spark) & ours)
 
 
+class TestReleaseAfterSessionStop:
+    """A stopped session must not wedge the release path: frames and
+    checkpoint contexts whose JVM is gone raise on every call, and the
+    registries must still end empty so a later session cannot inherit
+    entries that point at the dead one. Fakes only, no Spark."""
+
+    class _Frame:
+        def __init__(self, fail: bool):
+            self.fail, self.unpersisted = fail, False
+
+        def unpersist(self, blocking: bool = False):
+            if self.fail:
+                raise RuntimeError("SparkContext was shut down")
+            self.unpersisted = True
+
+    class _StoppedContext:
+        @property
+        def _jsc(self):
+            raise RuntimeError("SparkContext was shut down")
+
+    def test_release_survives_stopped_session_and_empties_registries(self, monkeypatch):
+        from fantasy_premier_league_spark.operators import cache as C
+
+        healthy = self._Frame(fail=False)
+        monkeypatch.setattr(C, "_TRACKED", [healthy, self._Frame(fail=True)])
+        monkeypatch.setattr(C, "_TRACKED_CHECKPOINTS", [(self._StoppedContext(), [7, 8])])
+        assert release_operator_caches() == 1
+        assert healthy.unpersisted
+        assert C._TRACKED == [] and C._TRACKED_CHECKPOINTS == []
+
+
 class TestPagerankSemantics:
     def test_mass_conserved_with_dangling_and_no_in_edge_nodes(self, spark):
         # 1 -> 2 -> 3: node 1 has no in-edges (must stay in the vector),

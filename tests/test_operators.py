@@ -986,7 +986,7 @@ class TestContainmentLsh:
                 for i in range(1, 40)]
         df = self._docs(spark, rows)
         for portable in (True, False):
-            arr = C.tracked_materialize(
+            arr = C.tracked_local_checkpoint(
                 D.doc_shingle_arrays(df, "doc_id", "text", 3), eager=True
             )
             via_arrays = {

@@ -71,7 +71,7 @@ class TestCodegenAndCaching:
         # signatures materialized once and reused — either as a SQL columnar
         # cache (InMemoryTableScan) or, since round 7, an RDD-layer
         # checkpoint (Scan ExistingRDD; the columnar encoder's array cost is
-        # documented at cache.tracked_materialize) — never rebuilt from text
+        # documented at cache.tracked_local_checkpoint) — never rebuilt from text
         plan = plan_of(spark, "q47_minhash_lsh_pairs")
         assert "InMemoryTableScan" in plan or "Scan ExistingRDD" in plan
         assert "Scan parquet" not in plan

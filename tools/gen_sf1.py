@@ -188,40 +188,6 @@ def gen_embeddings(rng: np.random.Generator) -> None:
     )
 
 
-def gen_skewed(rng: np.random.Generator) -> None:
-    """A deliberately Zipf-skewed join workload (the 100 TB hot-key case):
-    30M click rows whose user_id follows Zipf(1.3) over 50k users — the
-    top key holds ~8-10% of all rows — plus a 50k-row user dim. Used by
-    tools/skew_demo.py to measure plain vs AQE-skew vs salted joins."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    n, n_users = 30_000_000, 50_000
-    ranks = rng.zipf(1.3, size=4 * n)
-    ranks = ranks[ranks <= n_users][:n]
-    user_id = ranks.astype(np.int64) - 1
-    pq.write_table(
-        pa.table(
-            {
-                "click_id": np.arange(n, dtype=np.int64),
-                "user_id": user_id,
-                "value": rng.random(n).round(6),
-            }
-        ),
-        f"{OUT}/skew_clicks.parquet",
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "user_id": np.arange(n_users, dtype=np.int64),
-                "segment": rng.integers(0, 20, size=n_users).astype(np.int32),
-                "weight": rng.random(n_users).round(6),
-            }
-        ),
-        f"{OUT}/skew_users.parquet",
-    )
-
-
 def main() -> None:
     os.makedirs(OUT, exist_ok=True)
     rng = np.random.Generator(np.random.PCG64(42))
@@ -232,10 +198,9 @@ def main() -> None:
     gen_dims(con)
     gen_documents(rng)
     gen_embeddings(rng)
-    gen_skewed(rng)
     for t in (
         "lineitem", "events", "orders", "customer", "part", "supplier",
-        "nation", "region", "documents", "embeddings", "skew_clicks", "skew_users",
+        "nation", "region", "documents", "embeddings",
     ):
         n = duckdb.sql(f"SELECT count(*) FROM '{OUT}/{t}.parquet'").fetchone()[0]
         print(f"{t}: {n} rows", file=sys.stderr)
