@@ -8,10 +8,11 @@
 - ``oracle_sql()`` — DuckDB-runnable SQL per query. Omitted only for
   genuinely non-replayable operators: approximate engine-internal
   sketches (r20 HLL merge state) and zlib DEFLATE (r31) — every
-  hash-sketch query (MinHash, SimHash, LSH, PQ, IVF) runs portable
-  hashing and IS value-hash checked, including the trained quantizer
-  (q18_ivf_topk unrolls its Lloyd's rounds in the oracle) and the topic
-  pipeline's deterministic pre-LDA stages (v71_topic_features).
+  hash-sketch query (MinHash, SimHash, LSH, PQ, IVF) hashes with the
+  md5 family an ANSI engine replays and IS value-hash checked,
+  including the trained quantizer (q18_ivf_topk unrolls its Lloyd's
+  rounds in the oracle) and the topic pipeline's deterministic pre-LDA
+  stages (v71_topic_features).
 
 Driver-window rotation
 ----------------------

@@ -72,12 +72,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL-first query path)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def spread_partitions(df: DataFrame, *, target: int | None = None) -> DataFrame:
     """Round-robin repartition, ONLY when upstream yields fewer partitions
     than the session's parallelism.

@@ -24,25 +24,11 @@ this by construction (collect once, release, never touch the frame again).
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
 _TRACKED_CHECKPOINTS: list[tuple[object, list[int]]] = []  # (SparkContext, rdd ids)
-
-
-def _reliable_checkpoint_dir() -> str | None:
-    """``SPARK_GRAFT_CHECKPOINT_DIR``: when set, every tracked checkpoint
-    routes through ``DataFrame.checkpoint()`` to this directory instead
-    of ``localCheckpoint()``. localCheckpoint blocks live on executors
-    and are NOT executor-loss-tolerant — fine in local mode (one JVM, a
-    lost executor is a lost job anyway), wrong on a real cluster where
-    the rank family and the graph mirrors materialize large frames. The
-    escape hatch makes the 100 TB story a code path, not a comment: set
-    the env var to a durable location (HDFS/S3) and the same operators
-    checkpoint reliably. Unset (the local default) nothing changes."""
-    return os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR") or None
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:
@@ -98,22 +84,8 @@ def tracked_local_checkpoint(df: DataFrame, *, eager: bool = True) -> DataFrame:
     Unlike plain caches, a released checkpoint cannot be recomputed (its
     lineage was truncated) — release only after the results are consumed,
     which is already the module contract.
-
-    With ``SPARK_GRAFT_CHECKPOINT_DIR`` set (see
-    :func:`_reliable_checkpoint_dir`), the cut routes through a RELIABLE
-    ``DataFrame.checkpoint()`` into that directory instead: same lineage
-    truncation and partition-order preservation, but the blocks survive
-    executor loss — the cluster-mode configuration. Reliable checkpoints
-    write files, not storage blocks, so there is nothing to register for
-    release (Spark's ContextCleaner handles the files when
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on).
     """
     sc = df.sparkSession.sparkContext
-    ckdir = _reliable_checkpoint_dir()
-    if ckdir:
-        if not sc._jsc.sc().getCheckpointDir().isDefined():
-            sc.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
     before = _persistent_rdd_ids(sc)
     out = df.localCheckpoint(eager=eager)
     new_ids = sorted(_persistent_rdd_ids(sc) - before)

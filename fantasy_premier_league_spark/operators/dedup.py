@@ -12,15 +12,11 @@ pipeline needs, each designed so the only shuffles are on bounded keys:
 - SimHash 64-bit fingerprints + banded near-dup candidates
 
 All hashing is JVM-side and deterministic across runs/partitions; there is no
-Python in any hot path. Two base-hash families are offered:
-
-- ``xxhash64`` (default): the fast production hash.
-- ``portable=True``: md5-derived 32-bit values (``conv(substring(md5(x),1,8),
-  16, 10)``) — bit-identical to ``('0x'||substr(md5(x),1,8))::BIGINT`` in any
-  ANSI engine, so MinHash/SimHash outputs become cross-engine verifiable
-  (the DuckDB oracle replays them exactly). Same plan shape, slightly more
-  CPU per row; at 100 TB you run xxhash64, in the correctness gate you run
-  portable.
+Python in any hot path. The sketch base hash is md5-derived
+(``conv(substring(md5(x),1,8), 16, 10)``), bit-identical to
+``('0x'||substr(md5(x),1,8))::BIGINT`` in any ANSI engine, so MinHash,
+SimHash and containment outputs are cross-engine verifiable (the DuckDB
+oracles replay them exactly).
 """
 
 from __future__ import annotations
@@ -103,11 +99,6 @@ def portable_hash32(col: F.Column) -> F.Column:
     return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
 
 
-def portable_hash32_hi(col: F.Column) -> F.Column:
-    """Second 32 bits of md5 as a long (hex chars 9-16)."""
-    return F.conv(F.substring(F.md5(col), 9, 8), 16, 10).cast("long")
-
-
 def md5_fraction(col: F.Column, *, salt: str) -> F.Column:
     """Deterministic uniform [0, 1) fraction of a key: the first 32 md5
     bits of ``salt || key`` over 2^32 — the shared hash-sampling
@@ -163,9 +154,7 @@ def shingle_array_from_words(w: F.Column, n: int) -> F.Column:
     return F.when(F.size(w) >= n, gram).otherwise(F.array().cast("array<string>"))
 
 
-def doc_shingle_arrays(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, *, sort: bool = False
-) -> DataFrame:
+def doc_shingle_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, __arr) — one row per doc, ``__arr`` the DISTINCT shingle array.
 
     The compact per-doc form of the inverted index: everything the
@@ -192,10 +181,9 @@ def doc_shingle_arrays(
     base = spread_partitions(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     )
-    arr = F.array_distinct(shingle_array(F.col("__text"), n))
-    if sort:
-        arr = F.sort_array(arr)
-    return base.select("id", arr.alias("__arr"))
+    return base.select(
+        "id", F.array_distinct(shingle_array(F.col("__text"), n)).alias("__arr")
+    )
 
 
 def doc_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
@@ -412,9 +400,7 @@ def _jaccard_pairs_from_sized_index(
     )
 
 
-def containment_sketch_arrays(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, *, portable: bool = False
-) -> DataFrame:
+def containment_sketch_arrays(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """(id, __arr, __h) — :func:`doc_shingle_arrays` plus the 60-bit
     hashed-shingle array :func:`containment_lsh_pairs` verifies with.
 
@@ -425,13 +411,9 @@ def containment_sketch_arrays(
     otherwise builds and materializes its own copy, re-tokenizing the
     corpus per operator. Hash family matches the operator exactly, so
     results are identical by construction."""
-    h60 = (
-        (lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long"))
-        if portable
-        else (lambda c: F.xxhash64(c))
-    )
+    h60 = F.transform("__arr", lambda c: F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long"))
     return doc_shingle_arrays(df, id_col, text_col, n).select(
-        "id", "__arr", F.array_distinct(F.transform("__arr", h60)).alias("__h")
+        "id", "__arr", F.array_distinct(h60).alias("__h")
     )
 
 
@@ -506,7 +488,7 @@ def containment_pairs(
 
 
 def minhash_signatures_from_arrays(
-    arr: DataFrame, *, num_hashes: int = 64, seed: int = 42, portable: bool = False
+    arr: DataFrame, *, num_hashes: int = 64, seed: int = 42
 ) -> DataFrame:
     """(id, sig) MinHash signatures computed from an (id, __arr) per-doc
     shingle-array frame (:func:`doc_shingle_arrays`) instead of raw text —
@@ -534,11 +516,7 @@ def minhash_signatures_from_arrays(
     full tokenization into the pushed-down filter (the round-7 trap
     documented on :func:`doc_shingles`)."""
     params = _hash_params(num_hashes, seed)
-    base_sql = (
-        "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)"
-        if portable
-        else "xxhash64(s)"
-    )
+    base_sql = "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)"
     mins = ", ".join(
         f"aggregate(hb, CAST(9223372036854775807 AS BIGINT), "
         f"(acc, h) -> least(acc, (h * CAST({a} AS BIGINT) + CAST({b} AS BIGINT))"
@@ -565,7 +543,6 @@ def containment_lsh_pairs(
     max_size_ratio: float = 4.0,
     num_hashes: int = 32,
     seed: int = 42,
-    portable: bool = False,
     max_bucket_size: int | None = 256,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
@@ -633,12 +610,10 @@ def containment_lsh_pairs(
         arr = shingle_arrays
     else:
         arr = tracked_local_checkpoint(
-            containment_sketch_arrays(df, id_col, text_col, n, portable=portable),
+            containment_sketch_arrays(df, id_col, text_col, n),
             eager=False,
         )
-    sig = minhash_signatures_from_arrays(
-        arr, num_hashes=num_hashes, seed=seed, portable=portable
-    )
+    sig = minhash_signatures_from_arrays(arr, num_hashes=num_hashes, seed=seed)
     cand = lsh_candidate_pairs(sig, bands=num_hashes, max_bucket_size=max_bucket_size)
     a = arr.select(
         F.col("id").alias("id_a"), F.col("__h").alias("__ha"), F.size("__arr").alias("n_a")
@@ -673,14 +648,13 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 64,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """(id, sig: array<long>) MinHash signatures over word n-gram shingles.
 
-    Base shingle hash is ``xxhash64`` (or the md5-derived portable hash)
-    reduced to 30 bits; the permutation family is ``(a*h + b) mod (2^31-1)``
-    — all arithmetic stays inside a signed 64-bit long (a,b < 2^31,
-    h < 2^30 → a*h+b < 2^61), JVM-side.
+    Base shingle hash is the md5-derived 32-bit hash reduced to 30 bits;
+    the permutation family is ``(a*h + b) mod (2^31-1)`` — all arithmetic
+    stays inside a signed 64-bit long (a,b < 2^31, h < 2^30 → a*h+b <
+    2^61), JVM-side.
 
     Computed per row by :func:`minhash_signatures_from_arrays` over a
     lazily-materialized :func:`doc_shingle_arrays` frame: the previous
@@ -697,9 +671,7 @@ def minhash_signatures(
     the module contract that makes the tracked checkpoint releasable.
     """
     arr = tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
-    return minhash_signatures_from_arrays(
-        arr, num_hashes=num_hashes, seed=seed, portable=portable
-    )
+    return minhash_signatures_from_arrays(arr, num_hashes=num_hashes, seed=seed)
 
 
 def _banded(sig_df: DataFrame, bands: int) -> DataFrame:
@@ -810,7 +782,6 @@ def minhash_dedup_pairs(
     bands: int = 16,
     est_threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     max_bucket_size: int | None = None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
@@ -830,13 +801,9 @@ def minhash_dedup_pairs(
     # (the round-7 bench regression); tracked so a long-lived session can
     # bulk-release via cache.release_operator_caches
     sigs = tracked_local_checkpoint(
-        minhash_signatures_from_arrays(
-            shingle_arrays, num_hashes=num_hashes, seed=seed, portable=portable
-        )
+        minhash_signatures_from_arrays(shingle_arrays, num_hashes=num_hashes, seed=seed)
         if shingle_arrays is not None
-        else minhash_signatures(
-            df, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed, portable=portable
-        ),
+        else minhash_signatures(df, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed),
         eager=False,
     )
     cands = lsh_candidate_pairs(sigs, bands=bands, max_bucket_size=max_bucket_size)
@@ -867,7 +834,6 @@ def minhash_incremental_pairs(
     bands: int = 16,
     est_threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dups of a NEW batch against a stored signature index — the
@@ -887,13 +853,11 @@ def minhash_incremental_pairs(
     exactly how the store grows.
 
     Same seeded permutation family as :func:`minhash_signatures` — the
-    caller must build the index with identical (n, num_hashes, seed,
-    portable) or estimates are meaningless.
+    caller must build the index with identical (n, num_hashes, seed) or
+    estimates are meaningless.
     """
     new_sigs = tracked_local_checkpoint(
-        minhash_signatures(
-            new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed, portable=portable
-        ),
+        minhash_signatures(new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed),
         eager=False,
     )
     nb = _cap_band_buckets(
@@ -991,7 +955,6 @@ def minhash_incremental_pairs_indexed(
     band_buckets: int = 64,
     est_threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """:func:`minhash_incremental_pairs` against a PERSISTED band-partitioned
@@ -1003,14 +966,12 @@ def minhash_incremental_pairs_indexed(
     become a static partition ``isin`` filter on the store, so the scan
     shows PartitionFilters and reads only the touched directories — at
     100 TB the nightly probe's index I/O is proportional to the batch's
-    bucket footprint, not the corpus history. Same (n, num_hashes, seed,
-    portable) contract as the index build, same output as the re-banding
+    bucket footprint, not the corpus history. Same (n, num_hashes, seed)
+    contract as the index build, same output as the re-banding
     form (asserted in tests/test_guards_lifecycle.py).
     """
     new_sigs = tracked_local_checkpoint(
-        minhash_signatures(
-            new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed, portable=portable
-        ),
+        minhash_signatures(new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed),
         eager=False,
     )
     nb = _cap_band_buckets(
@@ -1080,9 +1041,7 @@ def minhash_incremental_pairs_indexed(
     )
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, *, bits: int = 64, portable: bool = False
-) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 64) -> DataFrame:
     """(id, simhash: long, bands: array<long>[4]) SimHash fingerprint
     from term-frequency-weighted word hashes, PACKED into a single long.
 
@@ -1093,13 +1052,13 @@ def simhash(
     per doc instead of a 64-int array (the SQL columnar cache's array
     encoder measured 3-10x the frame's own compute). Band b is bits
     [b*width, (b+1)*width) of the packed long — the same equivalence
-    classes as the bit-string bands the portable oracle replays, so
+    classes as the bit-string bands the DuckDB oracle replays, so
     candidate generation partitions identically value-for-value.
 
     Explode words → per-(id, word) counts → for each bit, sum(+tf / -tf by
-    the word-hash bit) → sign → bit. One shuffle on id. The portable flag
-    draws bits 0-31 from the low md5 half and 32-63 from the high half so an
-    external SQL engine can replay the fingerprint bit-for-bit.
+    the word-hash bit) → sign → bit. One shuffle on id. Bits 0-31 come from
+    the low md5 half and 32-63 from the high half, so an external SQL
+    engine can replay the fingerprint bit-for-bit.
     """
     from ..catalog import spread_partitions
 
@@ -1127,25 +1086,15 @@ def simhash(
     # costs ~700 py4j round-trips for 64 bits (~2.4s of plan-BUILD time
     # per call at any data size, measured — execution itself is 0.7s at
     # sf0.001). Semantics identical; the parity gate replays them.
-    if portable:
-        # materialized once — referenced by all `bits` aggregate exprs.
-        # One md5 per row, substringed twice (the lo/hi helpers would
-        # each recompute the digest)
-        tf = (
-            tf.withColumn("__md5", F.md5("word"))
-            .withColumn(
-                "__wh_lo", F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long")
-            )
-            .withColumn(
-                "__wh_hi", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
-            )
-        )
-        halves = ["__wh_lo" if i < 32 else "__wh_hi" for i in range(bits)]
-        shifts = [i % 32 for i in range(bits)]
-    else:
-        tf = tf.withColumn("__wh", F.xxhash64("word"))
-        halves = ["__wh"] * bits
-        shifts = list(range(bits))
+    # the two word-hash halves are materialized once — referenced by all
+    # `bits` aggregate exprs. One md5 per row, substringed twice
+    tf = (
+        tf.withColumn("__md5", F.md5("word"))
+        .withColumn("__wh_lo", F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long"))
+        .withColumn("__wh_hi", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long"))
+    )
+    halves = ["__wh_lo" if i < 32 else "__wh_hi" for i in range(bits)]
+    shifts = [i % 32 for i in range(bits)]
     bit_sums = [
         F.expr(
             f"sum(IF(({halves[i]} & shiftleft(CAST(1 AS BIGINT), {shifts[i]})) != 0,"
@@ -1181,7 +1130,6 @@ def simhash_near_dup_pairs(
     text_col: str,
     *,
     max_hamming: int = 8,
-    portable: bool = False,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: banded candidates (pigeonhole: hamming<=3
@@ -1190,7 +1138,7 @@ def simhash_near_dup_pairs(
     # fingerprint frame feeds banding + both verify-join sides; with the
     # packed-long representation it is a plain (long, long, tiny array)
     # frame, cheap to cache columnar
-    fp = tracked_persist(simhash(df, id_col, text_col, portable=portable))
+    fp = tracked_persist(simhash(df, id_col, text_col))
     banded = _cap_band_buckets(
         fp.select("id", "simhash", F.posexplode("bands").alias("band_idx", "band_sig")),
         max_bucket_size,

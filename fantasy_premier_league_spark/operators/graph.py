@@ -65,7 +65,7 @@ def pagerank(
     drops out of the vector), and the mass held by dangling nodes (no
     out-edges) is redistributed uniformly each round — total rank mass
     stays 1 instead of leaking. Returns (node, rank) with rank rounded
-    to 6 dp (engine-portable: the rounding absorbs float-sum ordering
+    to 6 dp (engine-portable — the rounding absorbs float-sum ordering
     differences across engines).
 
     Plan shape: ONE bounded driver probe over the persisted nodes frame

@@ -595,8 +595,8 @@ def v57_epoch_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _containment_lsh_oracle(threshold: float, ratio: float, cap: int | None = 256) -> str:
-    """DuckDB SQL replaying containment_lsh_pairs(portable=True,
-    num_hashes=32, seed=42): single-hash-band MinHash candidates (the
+    """DuckDB SQL replaying containment_lsh_pairs(num_hashes=32,
+    seed=42): single-hash-band MinHash candidates (the
     _minhash_oracle at bands=num_hashes and threshold 0 is exactly the
     r=1 candidate set), the default degenerate-bucket cap (buckets over
     ``cap`` members dropped before pairing — deterministic, replayed
@@ -651,7 +651,7 @@ def v51_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return D.containment_lsh_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5, max_size_ratio=4.0,
-        num_hashes=32, seed=42, portable=True,
+        num_hashes=32, seed=42,
     )
 
 
@@ -727,7 +727,7 @@ def v52_containment_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # containment_sketch_arrays) instead of three independently-built,
     # independently-tokenized copies of the shingle index
     arr = cache.tracked_local_checkpoint(
-        D.containment_sketch_arrays(docs, "doc_id", "text", 3, portable=True),
+        D.containment_sketch_arrays(docs, "doc_id", "text", 3),
         eager=True,
     )
     exact = D.containment_pairs(
@@ -746,7 +746,7 @@ def v52_containment_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sketch = D.containment_lsh_pairs(
         docs, "doc_id", "text", n=3, threshold=0.5, max_size_ratio=4.0,
-        num_hashes=32, seed=42, portable=True, shingle_arrays=arr,
+        num_hashes=32, seed=42, shingle_arrays=arr,
     ).select("id_a", "id_b", F.lit(True).alias("__s"))
     if anchor is not None:
         # same stratum on the sketch side (pairs are id_a < id_b on both

@@ -1,10 +1,10 @@
 """Deduplication queries over the documents table.
 
 ALL of the dedup family is hash-matched against the DuckDB oracle — including
-MinHash+LSH and SimHash: the queries run the operators with ``portable=True``
-(md5-derived base hash, bit-identical in any ANSI engine) and the oracle SQL
-below replays the full sketch — shingle → 64 seeded permutations → banded
-LSH self-join → signature-estimated Jaccard — value-for-value in DuckDB.
+MinHash+LSH and SimHash: the operators hash with an md5-derived base hash,
+bit-identical in any ANSI engine, and the oracle SQL below replays the full
+sketch — shingle → 64 seeded permutations → banded LSH self-join →
+signature-estimated Jaccard — value-for-value in DuckDB.
 The SQL is generated from the same seeded permutation parameters the Spark
 operator uses, so the check covers the hashing, the banding, and the
 estimator, not just row counts.
@@ -39,7 +39,7 @@ _SH_CTE = f"""sh AS (
 def _minhash_oracle(
     num_hashes: int, bands: int, threshold: float, seed: int, max_bucket_size: int | None = None
 ) -> str:
-    """DuckDB SQL replaying minhash_dedup_pairs(portable=True) exactly:
+    """DuckDB SQL replaying minhash_dedup_pairs exactly:
     same md5-derived base hash, same seeded (a,b) permutation parameters,
     same banding, same agreement-fraction estimator. With
     ``max_bucket_size`` the candidate join is restricted to band buckets
@@ -94,8 +94,8 @@ def _minhash_oracle(
 
 
 def _simhash_oracle(max_hamming: int) -> str:
-    """DuckDB SQL replaying simhash_near_dup_pairs(portable=True): tf-weighted
-    bit votes from the two md5 halves, 4x16-bit bands, exact hamming rerank."""
+    """DuckDB SQL replaying simhash_near_dup_pairs: tf-weighted bit votes
+    from the two md5 halves, 4x16-bit bands, exact hamming rerank."""
     sums = ",\n               ".join(
         f"sum(CASE WHEN ({'hlo' if i < 32 else 'hhi'} >> {i % 32}) & 1 = 1 THEN tf ELSE -tf END) AS b{i}"
         for i in range(64)
@@ -314,7 +314,7 @@ def q38_dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def v36_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     pairs = D.minhash_dedup_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.5, portable=True
+        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.5
     )
     meta = docs.select("doc_id", "source")
     # no explicit broadcast on the doc->source joins: the meta frame is
@@ -420,7 +420,7 @@ def v45_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q47_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     return D.minhash_dedup_pairs(
-        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.3, portable=True
+        docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.3
     )
 
 
@@ -447,7 +447,6 @@ def v96_capped_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_hashes=64,
         bands=16,
         est_threshold=0.2,
-        portable=True,
         max_bucket_size=2,
     )
 
@@ -462,7 +461,7 @@ def v96_capped_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def v43_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    return D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=12, portable=True)
+    return D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=12)
 
 
 def _cluster_oracle(max_hamming: int) -> str:
@@ -508,7 +507,7 @@ def q43_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     # hamming <= 8: TIGHT near-dup groups (the survivor-selection use case);
     # q43's looser <=12 radius is for recall-side candidate review
-    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8, portable=True)
+    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8)
     cc = D.connected_components(pairs)
     return cc.select(F.col("id").alias("doc_id"), "cluster_id")
 
@@ -568,7 +567,7 @@ def v33_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import textstats
 
     docs = load(spark, sf_dir, "documents")
-    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8, portable=True)
+    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8)
     cc = D.connected_components(pairs)
     quality = textstats.quality_score(docs, "doc_id", "text").select("doc_id", "quality")
     members = quality.join(
@@ -693,7 +692,7 @@ def v89_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _minhash_incremental_oracle(num_hashes: int, bands: int, threshold: float, seed: int) -> str:
-    """DuckDB SQL replaying minhash_incremental_pairs(portable=True): the
+    """DuckDB SQL replaying minhash_incremental_pairs: the
     full sketch for BOTH sides (same md5 base hash + seeded permutations),
     banded join restricted to new-batch (doc_id % 3 = 0) vs index rows."""
     params = _hash_params(num_hashes, seed)
@@ -750,11 +749,11 @@ def q48_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_docs = docs.filter(F.col("doc_id") % 3 != 0)
     new_batch = docs.filter(F.col("doc_id") % 3 == 0)
     index_sigs = D.minhash_signatures(
-        index_docs, "doc_id", "text", n=3, num_hashes=64, seed=42, portable=True
+        index_docs, "doc_id", "text", n=3, num_hashes=64, seed=42
     )
     return D.minhash_incremental_pairs(
         new_batch, index_sigs, "doc_id", "text",
-        n=3, num_hashes=64, bands=16, est_threshold=0.3, portable=True,
+        n=3, num_hashes=64, bands=16, est_threshold=0.3,
     )
 
 
@@ -816,7 +815,7 @@ def q45_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate jobs for the same numbers).
     lsh = (
         D.minhash_dedup_pairs(
-            docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.3, portable=True
+            docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.3
         )
         .select("id_a", "id_b")
         .withColumn("__l", F.lit(1))
@@ -859,7 +858,7 @@ def q45_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q44_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
-    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8, portable=True)
+    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8)
     cc = D.connected_components_star(pairs)
     return cc.select(F.col("id").alias("doc_id"), "cluster_id")
 
@@ -1017,7 +1016,7 @@ def q40_cluster_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lsh = D.minhash_dedup_pairs(
         docs, "doc_id", "text", n=3, num_hashes=64, bands=16, est_threshold=0.3,
-        portable=True, shingle_arrays=arr,
+        shingle_arrays=arr,
     )
     exact = D.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.3, shingle_arrays=arr

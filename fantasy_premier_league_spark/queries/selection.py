@@ -664,7 +664,7 @@ def q49_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import portable_hash32
 
     docs = load(spark, sf_dir, "documents")
-    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8, portable=True)
+    pairs = D.simhash_near_dup_pairs(docs, "doc_id", "text", max_hamming=8)
     cc = D.connected_components(pairs).select(
         F.col("id").alias("doc_id"), "cluster_id"
     )

@@ -79,23 +79,16 @@ def run_near_dup_ingest(
     band_buckets: int = 64,
     est_threshold: float = 0.5,
     seed: int = 42,
-    portable: bool = False,
     max_bucket_size: int | None = None,
     available_now: bool = True,
     compact_delta_files: int = 16,
-    phase_log: list | None = None,
 ):
     """NEAR-dup ingest dedup against the persisted band-partitioned
     signature index — the streaming form of the nightly-ingest pattern
     (operators/dedup.py::minhash_incremental_pairs_indexed).
 
-    ``phase_log`` (instrumentation, harness-only): when a list is passed,
-    each micro-batch appends {"batch", "phase", "sec"} rows splitting the
-    batch cost into within_batch (batch sketch + internal LSH dedup),
-    index_probe (partition-pruned store probe), append_out,
-    append_bands, append_sigs. Splitting requires one extra count action
-    per phase boundary (the counted frames are persisted, so the work is
-    not redone by the writes) — leave it None in production.
+    Signatures use the md5-derived sketch hash of operators/dedup.py; an
+    index written with an earlier, xxhash64-based build must be rebuilt.
 
     Each micro-batch, inside ``foreachBatch``:
 
@@ -126,7 +119,7 @@ def run_near_dup_ingest(
     """
     import os
 
-    from ..operators.cache import release_operator_caches, tracked_local_checkpoint
+    from ..operators.cache import release_operator_caches
     from ..operators.dedup import (
         _band_pk,
         _banded,
@@ -136,7 +129,7 @@ def run_near_dup_ingest(
         minhash_signatures,
     )
 
-    kw = dict(n=n, num_hashes=num_hashes, seed=seed, portable=portable)
+    kw = dict(n=n, num_hashes=num_hashes, seed=seed)
     # LSM tombstones: files compacted into the store are DELETED one batch
     # LATE, via an on-disk manifest — the compacting batch's own plans
     # (kept, sigs, banded) keep their lineage valid, and the next batch
@@ -160,21 +153,8 @@ def run_near_dup_ingest(
         os.remove(tombstones)
 
     def process(batch: DataFrame, _batch_id: int) -> None:
-        import time
-
         spark = batch.sparkSession
-        t0 = time.time()
         _purge_tombstoned()
-
-        def mark(phase: str) -> None:
-            nonlocal t0
-            if phase_log is not None:
-                now = time.time()
-                phase_log.append(
-                    {"batch": _batch_id, "phase": phase, "sec": round(now - t0, 2)}
-                )
-                t0 = now
-
         # re-delivered duplicate ids inside one batch would double-count
         # postings in the sketches (doc_shingles' one-row-per-id
         # contract) — batch-sized dedup, cheap
@@ -185,11 +165,6 @@ def run_near_dup_ingest(
         )
         losers = internal.select(F.col("id_b").alias(id_col)).distinct()
         kept = batch_p.join(losers, id_col, "left_anti")
-        kept_pre = None
-        if phase_log is not None:
-            kept = kept_pre = kept.persist()
-            kept.count()
-            mark("within_batch")
         if os.path.exists(os.path.join(index_path, "sigs")):
             hits = minhash_incremental_pairs_indexed(
                 spark, kept, index_path, id_col, text_col,
@@ -199,11 +174,7 @@ def run_near_dup_ingest(
             dup_ids = hits.select(F.col("new_id").alias(id_col)).distinct()
             kept = kept.join(dup_ids, id_col, "left_anti")
         kept = kept.persist()
-        if phase_log is not None:
-            kept.count()
-            mark("index_probe")
         kept.write.mode("append").parquet(out_path)
-        mark("append_out")
         sigs = minhash_signatures(kept, id_col, text_col, **kw)
         banded = (
             _banded(sigs, bands)
@@ -220,7 +191,6 @@ def run_near_dup_ingest(
         # compaction below.
         delta_dir = f"{index_path}/bands_delta"
         banded.repartition(1).write.mode("append").parquet(delta_dir)
-        mark("append_bands")
         # compaction: every compact_delta_files batches, fold the delta
         # into the partitioned store in ONE amortized write, then drop
         # the delta. Crash between the two steps duplicates index rows,
@@ -238,12 +208,8 @@ def run_near_dup_ingest(
             with open(tombstones, "a") as fh:
                 for f in compacted:
                     fh.write(os.path.join(delta_dir, f) + "\n")
-            mark("compact")
         sigs.select("id", "sig").write.mode("append").parquet(f"{index_path}/sigs")
-        mark("append_sigs")
         kept.unpersist()
-        if kept_pre is not None and kept_pre is not kept:
-            kept_pre.unpersist()
         batch_p.unpersist()
         release_operator_caches()
 

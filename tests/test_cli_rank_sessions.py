@@ -117,7 +117,14 @@ class TestSessions:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # availableNow never ends a ProcessingTimeTimeout query: stop it once drained
+        try:
+            for _ in range(240):  # up to 120 s, until a batch reads no rows
+                assert not q.awaitTermination(0.5), q.exception()
+                if any(p["numInputRows"] == 0 for p in q.recentProgress):
+                    break
+        finally:
+            q.stop()
         got = {r["user_id"]: (r["n_events"], round(r["total_value"], 2))
                for r in spark.sql("SELECT * FROM user_state").collect()}
         expected = {r["user_id"]: (r["n"], round(r["s"], 2))

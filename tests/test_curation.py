@@ -150,8 +150,8 @@ class TestIncrementalDedup:
         index_docs = docs.filter("doc_id <= 3")
         batch = docs.filter("doc_id > 3")
 
-        kw = dict(n=3, num_hashes=32, bands=8, est_threshold=0.3, portable=True)
-        index_sigs = minhash_signatures(index_docs, "doc_id", "text", n=3, num_hashes=32, portable=True)
+        kw = dict(n=3, num_hashes=32, bands=8, est_threshold=0.3)
+        index_sigs = minhash_signatures(index_docs, "doc_id", "text", n=3, num_hashes=32)
         inc = {
             (r.new_id, r.index_id, r.jaccard_est)
             for r in minhash_incremental_pairs(batch, index_sigs, "doc_id", "text", **kw).collect()

@@ -323,38 +323,14 @@ class TestLazyCheckpointContract:
         assert not any("partially materialized" in r.message for r in caplog.records)
 
 
-class TestReliableCheckpointEscapeHatch:
-    """SPARK_GRAFT_CHECKPOINT_DIR routes every tracked checkpoint through
-    a RELIABLE DataFrame.checkpoint() (executor-loss-tolerant files)
-    instead of localCheckpoint storage blocks — the cluster-mode story
-    for the rank family / graph mirrors, as a code path rather than a
-    comment. The flag must flip the materialization kind: checkpoint
-    FILES appear under the directory and no local block set is
-    registered for release."""
+class TestCheckpointRegistration:
+    """tracked_local_checkpoint materializes through localCheckpoint and
+    registers the checkpoint's storage blocks, so release_operator_caches
+    can drop them."""
 
-    def test_flag_flips_to_reliable_checkpoint(self, spark, tmp_path, monkeypatch):
-        import os
-
+    def test_local_checkpoint_registers_for_release(self, spark):
         from fantasy_premier_league_spark.operators import cache as C
 
-        ckdir = str(tmp_path / "reliable-ck")
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", ckdir)
-        n_tracked_before = len(C._TRACKED_CHECKPOINTS)
-        df = spark.range(0, 100, 1, 4)
-        out = C.tracked_local_checkpoint(df, eager=True)
-        # same results, lineage rebased
-        assert out.count() == 100
-        # reliable: files on disk under the dir, nothing block-tracked
-        assert len(C._TRACKED_CHECKPOINTS) == n_tracked_before
-        found = []
-        for root, _dirs, files in os.walk(ckdir):
-            found.extend(files)
-        assert found, "no reliable checkpoint files written"
-
-    def test_unset_keeps_local_checkpoint(self, spark, monkeypatch):
-        from fantasy_premier_league_spark.operators import cache as C
-
-        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
         n_tracked_before = len(C._TRACKED_CHECKPOINTS)
         out = C.tracked_local_checkpoint(spark.range(0, 100, 1, 4), eager=True)
         assert out.count() == 100

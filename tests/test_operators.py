@@ -143,15 +143,27 @@ class TestDedup:
 
     def test_simhash_near_dup_low_hamming(self, spark):
         # simhash statistics need non-trivial docs: 40 shared words, 1 extra
-        base = " ".join(f"w{i}" for i in range(40))
+        import hashlib
+
+        words = [f"w{i}" for i in range(40)]
+        base = " ".join(words)
         rows = [(1, base), (2, base + " extra"),
                 (3, " ".join(f"z{i}" for i in range(40)))]
         df = spark.createDataFrame(rows, "id long, text string")
         pairs = {(r["id_a"], r["id_b"]): r["hamming"]
                  for r in D.simhash_near_dup_pairs(df, "id", "text", max_hamming=20).collect()}
         assert (1, 2) in pairs
-        assert pairs[(1, 2)] <= 4
         assert all(3 not in k for k in pairs)
+
+        # one added tf-1 word flips exactly the bits whose 40-word vote is
+        # tied at 0 and that its own hash sets (bits 0-31 from the low md5
+        # half, 32-63 from the high half)
+        def hash_bits(w):
+            halves = [int(hashlib.md5(w.encode()).hexdigest()[k:k + 8], 16) for k in (0, 8)]
+            return [halves[i // 32] >> (i % 32) & 1 for i in range(64)]
+
+        votes = [sum(2 * b - 1 for b in bit) for bit in zip(*map(hash_bits, words))]
+        assert pairs[(1, 2)] == sum(e for v, e in zip(votes, hash_bits("extra")) if v == 0)
 
 
 class TestFuzzy:
@@ -910,7 +922,7 @@ class TestContainmentLsh:
         df = self._docs(spark, [(1, outer), (2, inner), (3, "x y z w v u t")])
         out = D.containment_lsh_pairs(
             df, "doc_id", "text", n=3, threshold=0.9, max_size_ratio=4.0,
-            num_hashes=32, portable=True,
+            num_hashes=32,
         ).collect()
         assert [(r["id_a"], r["id_b"], r["containment"]) for r in out] == [(1, 2, 1.0)]
 
@@ -922,7 +934,7 @@ class TestContainmentLsh:
         df = self._docs(spark, [(1, inner + " " + filler), (2, inner)])
         sketch = D.containment_lsh_pairs(
             df, "doc_id", "text", n=3, threshold=0.9, max_size_ratio=2.0,
-            num_hashes=32, portable=True,
+            num_hashes=32,
         ).collect()
         assert sketch == []
         exact = D.containment_pairs(df, "doc_id", "text", n=3, threshold=0.9).collect()
@@ -933,7 +945,7 @@ class TestContainmentLsh:
         df = self._docs(spark, rows)
         kw = dict(n=2, threshold=0.4)
         sk = {(r["id_a"], r["id_b"], r["containment"]) for r in D.containment_lsh_pairs(
-            df, "doc_id", "text", max_size_ratio=100.0, num_hashes=32, portable=True, **kw
+            df, "doc_id", "text", max_size_ratio=100.0, num_hashes=32, **kw
         ).collect()}
         ex = {(r["id_a"], r["id_b"], r["containment"]) for r in D.containment_pairs(
             df, "doc_id", "text", **kw
@@ -960,7 +972,7 @@ class TestContainmentLsh:
             for i in range(1, 81)
         ] + [(999, boiler)]
         df = self._docs(spark, rows)
-        kw = dict(n=3, threshold=0.9, max_size_ratio=4.0, num_hashes=32, portable=True)
+        kw = dict(n=3, threshold=0.9, max_size_ratio=4.0, num_hashes=32)
         uncapped = {(r["id_a"], r["id_b"]) for r in D.containment_lsh_pairs(
             df, "doc_id", "text", max_bucket_size=None, **kw
         ).collect()}
@@ -985,26 +997,23 @@ class TestContainmentLsh:
         rows = [(i, " ".join(f"w{(i * 7 + j) % 23}" for j in range(i % 9)))
                 for i in range(1, 40)]
         df = self._docs(spark, rows)
-        for portable in (True, False):
-            arr = C.tracked_local_checkpoint(
-                D.doc_shingle_arrays(df, "doc_id", "text", 3), eager=True
-            )
-            via_arrays = {
-                r["id"]: tuple(r["sig"])
-                for r in D.minhash_signatures_from_arrays(
-                    arr, num_hashes=32, seed=7, portable=portable
-                ).collect()
-            }
-            via_text = {
-                r["id"]: tuple(r["sig"])
-                for r in D.minhash_signatures(
-                    df, "doc_id", "text", n=3, num_hashes=32, seed=7, portable=portable
-                ).collect()
-            }
-            assert via_arrays == via_text
-            assert all(len(s) == 32 for s in via_arrays.values())
-            # docs 1 and 2 have < 3 words -> empty shingle set -> no row
-            assert 1 not in via_arrays and 2 not in via_arrays
+        arr = C.tracked_local_checkpoint(
+            D.doc_shingle_arrays(df, "doc_id", "text", 3), eager=True
+        )
+        via_arrays = {
+            r["id"]: tuple(r["sig"])
+            for r in D.minhash_signatures_from_arrays(arr, num_hashes=32, seed=7).collect()
+        }
+        via_text = {
+            r["id"]: tuple(r["sig"])
+            for r in D.minhash_signatures(
+                df, "doc_id", "text", n=3, num_hashes=32, seed=7
+            ).collect()
+        }
+        assert via_arrays == via_text
+        assert all(len(s) == 32 for s in via_arrays.values())
+        # docs 1 and 2 have < 3 words -> empty shingle set -> no row
+        assert 1 not in via_arrays and 2 not in via_arrays
 
     def test_shared_shingle_arrays_identical_output(self, spark):
         # r13 tokenize-once hook: passing a containment_sketch_arrays frame
@@ -1013,9 +1022,9 @@ class TestContainmentLsh:
         # construction — this pins it)
         rows = [(i, f"common phrase tail {' '.join(f'tok{i}x{j}' for j in range(i % 5))}") for i in range(1, 30)]
         df = self._docs(spark, rows)
-        arr = D.containment_sketch_arrays(df, "doc_id", "text", 2, portable=True)
+        arr = D.containment_sketch_arrays(df, "doc_id", "text", 2)
         kw = dict(n=2, threshold=0.4)
-        lsh_kw = dict(max_size_ratio=100.0, num_hashes=32, portable=True)
+        lsh_kw = dict(max_size_ratio=100.0, num_hashes=32)
         sk_own = sorted(map(tuple, D.containment_lsh_pairs(df, "doc_id", "text", **kw, **lsh_kw).collect()))
         sk_shared = sorted(map(tuple, D.containment_lsh_pairs(
             df, "doc_id", "text", shingle_arrays=arr, **kw, **lsh_kw
@@ -1044,7 +1053,7 @@ class TestContainmentLsh:
         ):
             D.containment_lsh_pairs(
                 df, "doc_id", "text", n=3, threshold=0.9, max_size_ratio=4.0,
-                num_hashes=32, portable=True, max_bucket_size=8,
+                num_hashes=32, max_bucket_size=8,
             ).collect()
         dropped = [r for r in caplog.records if "oversized LSH band buckets" in r.getMessage()]
         assert dropped, "bucket-cap loss happened but no drop-accounting warning fired"

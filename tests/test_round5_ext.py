@@ -230,7 +230,7 @@ class TestClusterSafeSplit:
         docs = spark.read.parquet(f"{sf}/documents.parquet")
         assert len(split) == docs.count()
         pairs = D.simhash_near_dup_pairs(
-            docs, "doc_id", "text", max_hamming=8, portable=True
+            docs, "doc_id", "text", max_hamming=8
         ).collect()
         assert pairs  # the fixture corpus has implanted near-dups
         for p in pairs:
