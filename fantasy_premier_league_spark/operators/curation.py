@@ -388,41 +388,6 @@ def dedup_passages_keep_first(
     )
 
 
-def duplicate_spans(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    k: int = 10,
-    min_occ: int = 2,
-) -> DataFrame:
-    """(id, start, span, n_occ) for every length-``k`` SLIDING word window
-    whose exact normalized text occurs at least ``min_occ`` times
-    corpus-wide — sub-document exact-substring dedup at arbitrary
-    offsets (Lee et al., "Deduplicating Training Data Makes Language
-    Models Better", ACL 2022; their suffix-array pass re-expressed as
-    the equivalent fixed-width rolling window over a hash-groupBy).
-
-    The fixed-passage form (:func:`dedup_passages_keep_first` / q38)
-    misses a duplicate that straddles a passage boundary or starts at a
-    different offset; the sliding window catches any shared run of >= k
-    words, at k-times q38's explode fan-out (one row per word position,
-    built from shifted slices so the tokenizer runs O(k), not
-    O(k * n_words), per doc — shingle_array's measured lesson).
-
-    Scale shape: explode -> hash-groupBy on the span string -> hash join
-    back; identical skeleton to exact dedup, linear in corpus tokens,
-    never all-pairs. At 100 TB, span strings can be pre-hashed to 64-bit
-    before the frequency aggregate (not done here: the exact string keeps
-    the operator value-replayable by an external SQL engine, and a
-    same-length span COLLISION would fuse two different spans).
-    ``min_occ`` counts all occurrences, so a span repeated within one
-    document is duplicated too — exactly the paper's contract.
-    """
-    base = _words_frame(df, id_col, text_col)
-    return _duplicate_spans_from_words(base, k, min_occ)
-
-
 def _words_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Lazily-materialized (id, __w words-array) frame — the tokenizer,
     the per-row-dominant stage of every span operator, runs exactly once;
@@ -442,6 +407,13 @@ def _words_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _duplicate_spans_from_words(base: DataFrame, k: int, min_occ: int) -> DataFrame:
+    """(id, start, span, n_occ) for every length-``k`` SLIDING word window
+    whose exact normalized text occurs at least ``min_occ`` times
+    corpus-wide (Lee et al., ACL 2022: their suffix-array pass as the
+    equivalent fixed-width rolling window). Unlike the fixed passages of
+    :func:`dedup_passages_keep_first`, it catches a shared run of >= k
+    words at any offset. ``min_occ`` counts all occurrences, so a span
+    repeated within one document is duplicated too."""
     from .dedup import shingle_array_from_words
 
     spans = base.select(

@@ -9,6 +9,9 @@ written so the same code is correct on a 1000-executor cluster:
 - ``spark.sql.shuffle.partitions`` — sized for the local profile; on a real
   cluster AQE coalescing makes the static number mostly irrelevant.
 - Arrow enabled — all pandas_udf/mapInPandas paths are Arrow-batched.
+- ``spark.sql.codegen.cache.maxEntries`` — the generated-class cache holds
+  the whole session's working set, so a plan that runs again reuses its
+  compiled classes instead of recompiling them (static: builder only).
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (naive parquet timestamps) byte-for-byte.
 """
@@ -20,6 +23,13 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+
+# Generated classes kept per session (spark.sql.codegen.cache.maxEntries):
+# at least 2x the largest key count measured for one session, so nothing
+# a session compiled is evicted. Measured with an unbounded cache: ~190
+# per query_mix pass, ~295 per cold refresh, 5174 for the whole tier-1
+# suite's one session. Never 0: that disables the cache.
+CODEGEN_CACHE_ENTRIES = 12000
 
 
 def get_spark(app_name: str = "fantasy_premier_league_spark", *, cpus: int | None = None) -> SparkSession:
@@ -98,6 +108,15 @@ def get_spark(app_name: str = "fantasy_premier_league_spark", *, cpus: int | Non
         # converts to micros (matching DuckDB's truncation semantics)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Static conf, so it must be set here. Spark's generated-class
+        # cache defaults to 100 entries, and in local mode each
+        # whole-stage class takes two (the driver compiles it to
+        # validate it, the task thread compiles it again). At 100 a warm
+        # query_mix pass (about 190 keys) evicted its own classes and
+        # recompiled 133-162 of them, 1.6-1.8 s of Janino per pass plus
+        # their lost JIT state; sized as CODEGEN_CACHE_ENTRIES says, warm
+        # passes compile 0-6.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # local mode runs everything in the driver JVM, so this IS the
         # engine heap: 8g showed GC-driven 2-3x per-query variance across
         # a 141-query bench run; 24g (of the 128 GiB profile) settles it

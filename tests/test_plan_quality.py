@@ -76,6 +76,21 @@ class TestCodegenAndCaching:
         assert "InMemoryTableScan" in plan or "Scan ExistingRDD" in plan
         assert "Scan parquet" not in plan
 
+    def test_warm_plan_reuses_generated_class(self, spark):
+        # Each inlined literal is a new generated class, and in local mode
+        # each class takes two cache keys (driver and task thread), so 80
+        # plans need 160 keys: past Spark's default of 100, which evicts
+        # the first plan's class and recompiles it on the re-run.
+        from pyspark.sql import functions as F
+
+        compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        plans = [spark.range(4).select(F.col("id") * F.lit(i)) for i in range(1000, 1080)]
+        for df in plans:
+            df.collect()
+        before = compiles.getCount()
+        assert plans[0].collect() == [(0,), (1000,), (2000,), (3000,)]
+        assert compiles.getCount() == before
+
 
 class TestNewOperatorPlans:
     def test_q63_sessionization_single_exchange(self, spark):

@@ -8,6 +8,10 @@ job/stage breakdown — stage wall, task count, input / shuffle-read /
 shuffle-write bytes — so time can be attributed to scan vs exchange vs
 compute before anything is changed.
 
+Each timed run also reports the generated classes Spark compiled during
+it and their Janino milliseconds (``codegen=`` and ``compile_ms=``), so a
+recompile storm shows per query.
+
 Usage: python tools/profile_query.py q42_label_communities [-n 2] [--sf-dir D]
 """
 
@@ -30,6 +34,17 @@ def fmt_bytes(n: float) -> str:
             return f"{n:.1f}{unit}"
         n /= 1024
     return f"{n:.1f}GB"
+
+
+def codegen_totals(spark) -> tuple[int, float | None, float]:
+    """(classes compiled, compile ms, mean ms) so far in this JVM, all from
+    Spark's CodegenMetrics compile-time histogram. Its reservoir keeps
+    1028 samples, so the ms sum is None once it no longer holds every
+    compile; the mean (recency-weighted) then stands in."""
+    hist = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    count, snap = hist.getCount(), hist.getSnapshot()
+    total = float(sum(snap.getValues())) if snap.size() == count else None
+    return count, total, snap.getMean()
 
 
 def main() -> None:
@@ -57,17 +72,25 @@ def main() -> None:
     windows: dict[str, tuple[float, float, list[float]]] = {}
     for name in args.names:
         q = registry[name]
-        runs = []
-        t_first = None
+        runs, compiled, compile_ms = [], [], []
         for i in range(args.n):
+            c0, ms0, _ = codegen_totals(spark)
             t0 = time.time() * 1000
             q.fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
             t1 = time.time() * 1000
+            c1, ms1, mean = codegen_totals(spark)
             release_operator_caches()
             runs.append(round((t1 - t0) / 1000, 3))
-            t_first = t0 if t_first is None else t_first
+            compiled.append(c1 - c0)
+            if ms1 is not None:
+                compile_ms.append(f"{ms1 - ms0:.0f}")
+            else:  # sampled: estimate from the mean
+                compile_ms.append(f"~{(c1 - c0) * mean:.0f}")
             windows[name] = (t0, t1, runs)  # profile the LAST run's window
-        print(f"## {name}: runs={runs}", flush=True)
+        print(
+            f"## {name}: runs={runs} codegen={compiled} compile_ms=[{', '.join(compile_ms)}]",
+            flush=True,
+        )
 
     # flush + parse the in-progress event log
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
