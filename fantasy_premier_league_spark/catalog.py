@@ -10,12 +10,22 @@ Scale note: at 100 TB these would be partitioned/bucketed parquet or Iceberg
 tables; ``spark.read.parquet`` on a directory plus Catalyst partition
 pruning covers that case with the same call. Filters and projections written
 against these DataFrames reach the scan (PushedFilters / ReadSchema) because
-nothing here materializes or caches eagerly.
+nothing here materializes or caches data.
+
+A schema-less ``spark.read.parquet`` runs a Spark job to infer the schema
+from the footers, about 100 ms warm. :func:`load` therefore memoizes the
+unexecuted frame (inferred schema and file listing, never its rows) per
+session and local path, and hands the same frame back while the file's
+signature (mtime and size of the file, or of every file under a directory)
+and the read confs that shape the schema are unchanged. A path that cannot
+be stat'ed is read afresh on every call.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,19 +48,47 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    if table not in TABLES:
-        raise KeyError(f"unknown table {table!r}; catalog has {TABLES}")
-    # The engine must behave identically under ANY caller-provided session
-    # (the driver builds its own): pin the session timezone to UTC so
-    # timestamp wall-clock values match the oracle's naive timestamps.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if table == "events":
-        # events.ts is TIMESTAMP(NANOS) in parquet — a vanilla session
-        # refuses it outright (PARQUET_TYPE_ILLEGAL). Read as long nanos,
-        # truncate to micros exactly like DuckDB reading the same file.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+#: Read confs that change the schema ``spark.read.parquet`` infers.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+)
+
+#: (id(session), absolute path) -> (session, file signature, read confs,
+#: frame). An entry holds its session, so that id is not reused while it lives.
+_MEMO: dict[tuple[int, str], tuple[SparkSession, tuple, tuple, DataFrame]] = {}
+_MEMO_LOCK = threading.Lock()  # held while _MEMO is iterated or written
+
+
+def _signature(path: str) -> tuple | None:
+    """(mtime_ns, size) of a file, or (relative name, mtime_ns, size) of
+    every file under a directory; None when the path cannot be stat'ed."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_mtime_ns, st.st_size)
+        sig = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                fst = os.stat(full)
+                sig.append((os.path.relpath(full, path), fst.st_mtime_ns, fst.st_size))
+        return tuple(sig)
+    except OSError:
+        return None
+
+
+def _live(spark: SparkSession) -> bool:
+    jsc = spark.sparkContext._jsc
+    return jsc is not None and not jsc.sc().isStopped()
+
+
+def _read(spark: SparkSession, path: str, table: str) -> DataFrame:
+    df = spark.read.parquet(path)
     if table == "events":
         from pyspark.sql import functions as F, types as T
 
@@ -63,8 +101,38 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
             # Naive micros parquet reads as TIMESTAMP_NTZ under Spark 4's
             # default inferTimestampNTZ. The unix_* family rejects NTZ, so
             # normalize to TIMESTAMP; with the session tz pinned to UTC
-            # above, wall-clock == epoch, matching the oracle's epoch_us.
+            # in load, wall-clock == epoch, matching the oracle's epoch_us.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    if table not in TABLES:
+        raise KeyError(f"unknown table {table!r}; catalog has {TABLES}")
+    # The engine must behave identically under ANY caller-provided session
+    # (callers build their own): pin the session timezone to UTC so
+    # timestamp wall-clock values match the oracle's naive timestamps.
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if table == "events":
+        # events.ts is TIMESTAMP(NANOS) in parquet — a vanilla session
+        # refuses it outright (PARQUET_TYPE_ILLEGAL). Read as long nanos,
+        # truncate to micros exactly like DuckDB reading the same file.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    sig = _signature(path)
+    if sig is None:
+        return _read(spark, path, table)
+    key = (id(spark), os.path.abspath(path))
+    confs = tuple(spark.conf.get(c) for c in _SCHEMA_CONFS)
+    hit = _MEMO.get(key)
+    if hit is not None and hit[1:3] == (sig, confs) and _live(spark):
+        return hit[3]
+    df = _read(spark, path, table)
+    with _MEMO_LOCK:
+        # a miss: forget the frames of stopped sessions, then store this one
+        for k in [k for k, e in _MEMO.items() if not _live(e[0])]:
+            del _MEMO[k]
+        _MEMO[key] = (spark, sig, confs, df)
     return df
 
 

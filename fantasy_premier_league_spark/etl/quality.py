@@ -7,8 +7,9 @@ are deliberate actions. :func:`run_catalog_checks` evaluates every table's
 unique and not-null PK checks in one fused action: a union of per-table
 ``(table, key encoding, any-null flag)`` projections, one
 ``groupBy(table, key)``, one per-table roll-up and one collect of at most
-one row per table. The single-table checks are the same action over one
-table.
+one row per table. The same roll-up counts each table's rows, which every
+result carries as ``rows``, so a caller needs no further count job. The
+single-table checks are the same action over one table.
 """
 
 from __future__ import annotations
@@ -34,6 +35,7 @@ class CheckResult:
     check: str
     ok: bool
     detail: str = ""
+    rows: int | None = None  # rows in the checked table
 
 
 def _fail(result: CheckResult, raise_errors: bool) -> CheckResult:
@@ -45,9 +47,9 @@ def _fail(result: CheckResult, raise_errors: bool) -> CheckResult:
     return result
 
 
-def _pk_stats(tables: list[tuple[DataFrame, list[str]]]) -> list[tuple[int, int, int]]:
+def _pk_stats(tables: list[tuple[DataFrame, list[str]]]) -> list[tuple[int, int, int, int]]:
     """Per table, in order: (duplicated key groups, rows in them, rows with
-    a null PK level), computed for every table in one action.
+    a null PK level, rows), computed for every table in one action.
 
     Each table projects to (table index, key, any-null flag) and the
     projections are unioned, so one groupBy serves all tables. The key is
@@ -74,36 +76,41 @@ def _pk_stats(tables: list[tuple[DataFrame, list[str]]]) -> list[tuple[int, int,
         F.count(F.when(dup, 1)).alias("groups"),
         F.coalesce(F.sum(F.when(dup, F.col("n"))), F.lit(0)).alias("rows"),
         F.coalesce(F.sum(F.when(F.col("null_pk"), F.col("n"))), F.lit(0)).alias("nulls"),
+        F.sum("n").alias("total"),
     ).collect()
-    by_table = {r["t"]: (r["groups"], r["rows"], r["nulls"]) for r in rows}
-    return [by_table.get(i, (0, 0, 0)) for i in range(len(tables))]
+    by_table = {r["t"]: (r["groups"], r["rows"], r["nulls"], r["total"]) for r in rows}
+    return [by_table.get(i, (0, 0, 0, 0)) for i in range(len(tables))]
 
 
-def _unique_result(table: str, groups: int, rows: int, raise_errors: bool) -> CheckResult:
+def _unique_result(table: str, groups: int, dup_rows: int, total: int, raise_errors: bool) -> CheckResult:
     if groups:
         return _fail(
-            CheckResult(table, "unique_pk", False, f"{groups} duplicated keys over {rows} rows"), raise_errors
+            CheckResult(table, "unique_pk", False, f"{groups} duplicated keys over {dup_rows} rows", rows=total),
+            raise_errors,
         )
-    return CheckResult(table, "unique_pk", True)
+    return CheckResult(table, "unique_pk", True, rows=total)
 
 
-def _notnull_result(table: str, nulls: int, raise_errors: bool) -> CheckResult:
+def _notnull_result(table: str, nulls: int, total: int, raise_errors: bool) -> CheckResult:
     if nulls:
-        return _fail(CheckResult(table, "notnull_pk", False, f"{nulls} rows with null PK"), raise_errors)
-    return CheckResult(table, "notnull_pk", True)
+        return _fail(
+            CheckResult(table, "notnull_pk", False, f"{nulls} rows with null PK", rows=total),
+            raise_errors,
+        )
+    return CheckResult(table, "notnull_pk", True, rows=total)
 
 
 def check_unique_pk(df: DataFrame, pk: list[str], table: str, *, raise_errors: bool = True) -> CheckResult:
     """Q1: no duplicate PK tuples (≙ dval_unique_index). Diagnostic counts
     come from one groupBy rather than count-vs-distinct-count twice."""
-    groups, rows, _ = _pk_stats([(df, pk)])[0]
-    return _unique_result(table, groups, rows, raise_errors)
+    groups, dup_rows, _, total = _pk_stats([(df, pk)])[0]
+    return _unique_result(table, groups, dup_rows, total, raise_errors)
 
 
 def check_notnull_pk(df: DataFrame, pk: list[str], table: str, *, raise_errors: bool = True) -> CheckResult:
     """Q2: no nulls in any PK level (≙ dval_notnull_index)."""
-    _, _, nulls = _pk_stats([(df, pk)])[0]
-    return _notnull_result(table, nulls, raise_errors)
+    _, _, nulls, total = _pk_stats([(df, pk)])[0]
+    return _notnull_result(table, nulls, total, raise_errors)
 
 
 def validated_join(
@@ -158,7 +165,7 @@ def run_catalog_checks(
     names = list(tables)
     stats = _pk_stats([(tables[name], pks[name]) for name in names])
     results = []
-    for name, (groups, rows, nulls) in zip(names, stats):
-        results.append(_unique_result(name, groups, rows, raise_errors))
-        results.append(_notnull_result(name, nulls, raise_errors))
+    for name, (groups, dup_rows, nulls, total) in zip(names, stats):
+        results.append(_unique_result(name, groups, dup_rows, total, raise_errors))
+        results.append(_notnull_result(name, nulls, total, raise_errors))
     return results

@@ -31,8 +31,9 @@ def run(
     raw_main = ingest.read_main_json(spark, os.path.join(data_input, "main.json"))
     raw_players = ingest.read_players_json(spark, os.path.join(data_input, "players.json"))
     catalog = transform.build_all(raw_fixtures, raw_main, raw_players)
-    quality.run_catalog_checks(catalog, transform.PRIMARY_KEYS, raise_errors=raise_errors)
-    counts = {}
+    checks = quality.run_catalog_checks(catalog, transform.PRIMARY_KEYS, raise_errors=raise_errors)
+    # the fused check action already counted every table's rows
+    counts = {r.table: r.rows for r in checks}
     for name, df in catalog.items():
         path = os.path.join(data_output, name)
         writer = df.write.mode("overwrite")
@@ -42,7 +43,6 @@ def run(
             writer.json(path)
         else:
             writer.parquet(path)
-        counts[name] = spark.read.format(fmt).option("header", True).load(path).count()
         log.info("wrote %s (%d rows, %s)", path, counts[name], fmt)
     return counts
 

@@ -130,6 +130,13 @@ class TestQualityChecks:
         assert all(r.ok for r in results)
         assert len(results) == 22
 
+    def test_check_rows_equal_table_counts(self, catalog):
+        results = quality.run_catalog_checks(catalog, transform.PRIMARY_KEYS, raise_errors=True)
+        counts = {name: df.count() for name, df in catalog.items()}
+        assert {(r.table, r.check): r.rows for r in results} == {
+            (name, check): n for name, n in counts.items() for check in ("unique_pk", "notnull_pk")
+        }
+
     def test_duplicate_pk_raises_and_warns(self, spark, catalog):
         dup = catalog["teams"].unionByName(catalog["teams"].limit(1))
         with pytest.raises(quality.DataValidationError, match="unique_pk"):

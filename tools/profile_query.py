@@ -8,9 +8,10 @@ job/stage breakdown — stage wall, task count, input / shuffle-read /
 shuffle-write bytes — so time can be attributed to scan vs exchange vs
 compute before anything is changed.
 
-Each timed run also reports the generated classes Spark compiled during
-it and their Janino milliseconds (``codegen=`` and ``compile_ms=``), so a
-recompile storm shows per query.
+Each timed run also reports the Spark jobs it submitted (``jobs=``) and
+the generated classes Spark compiled during it and their Janino
+milliseconds (``codegen=`` and ``compile_ms=``), so a per-call metadata
+job or a recompile storm shows per query.
 
 Usage: python tools/profile_query.py q42_label_communities [-n 2] [--sf-dir D]
 """
@@ -65,6 +66,7 @@ def main() -> None:
 
     spark = get_spark("profile")
     app_id = spark.sparkContext.applicationId
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
     registry = all_queries()
     registry["v01_pricing_summary"].fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
     release_operator_caches()
@@ -72,12 +74,14 @@ def main() -> None:
     windows: dict[str, tuple[float, float, list[float]]] = {}
     for name in args.names:
         q = registry[name]
-        runs, compiled, compile_ms = [], [], []
+        runs, submitted, compiled, compile_ms = [], [], [], []
         for i in range(args.n):
             c0, ms0, _ = codegen_totals(spark)
+            j0 = dag.numTotalJobs()
             t0 = time.time() * 1000
             q.fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
             t1 = time.time() * 1000
+            submitted.append(dag.numTotalJobs() - j0)
             c1, ms1, mean = codegen_totals(spark)
             release_operator_caches()
             runs.append(round((t1 - t0) / 1000, 3))
@@ -88,7 +92,8 @@ def main() -> None:
                 compile_ms.append(f"~{(c1 - c0) * mean:.0f}")
             windows[name] = (t0, t1, runs)  # profile the LAST run's window
         print(
-            f"## {name}: runs={runs} codegen={compiled} compile_ms=[{', '.join(compile_ms)}]",
+            f"## {name}: runs={runs} jobs={submitted} codegen={compiled} "
+            f"compile_ms=[{', '.join(compile_ms)}]",
             flush=True,
         )
 
