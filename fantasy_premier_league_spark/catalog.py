@@ -4,7 +4,7 @@ The driver generates TPC-H-ish tables plus ``events`` (stream-shaped),
 ``documents`` (text corpus) and ``embeddings`` (vector corpus) at
 ``/root/testdata/sf{0.001,0.01,0.1}`` (TESTDATA.md). This module is the one
 place that knows the physical layout; queries take a ``sf_dir`` and call
-:func:`load` / :func:`load_all`.
+:func:`load`.
 
 Scale note: at 100 TB these would be partitioned/bucketed parquet or Iceberg
 tables; ``spark.read.parquet`` on a directory plus Catalyst partition
@@ -41,11 +41,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-#: dimensions small enough to broadcast at any realistic scale factor
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 #: Read confs that change the schema ``spark.read.parquet`` infers.
@@ -136,10 +131,6 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
 def spread_partitions(df: DataFrame, *, target: int | None = None) -> DataFrame:
     """Round-robin repartition, ONLY when upstream yields fewer partitions
     than the session's parallelism.
@@ -160,9 +151,7 @@ def spread_partitions(df: DataFrame, *, target: int | None = None) -> DataFrame:
     number, and that work is then redone by the real query. So frames
     whose logical plan already contains a wide operator are returned
     untouched — a shuffle upstream means the data is already spread at
-    ~shuffle.partitions. Streaming frames pass through unchanged (the
-    foreachBatch batches the streaming operators hand over are batch
-    frames and do get spread).
+    ~shuffle.partitions. Streaming frames pass through unchanged.
     """
     if df.isStreaming:
         return df

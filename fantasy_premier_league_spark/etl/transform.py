@@ -26,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-FIXTURE_TS_FMT = None  # ISO-8601; try_to_timestamp default parsing
-
 
 def int_str(col: F.Column) -> F.Column:
     """Null-safe integer-string cast (F1). 3.0 → "3", null → null."""

@@ -12,7 +12,6 @@ the driver, so the same code serves 38 gameweeks or 38 million groups.
 
 from __future__ import annotations
 
-from pyspark import keyword_only
 from pyspark.ml import Estimator, Model
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

@@ -31,7 +31,7 @@ driver only ever holds one (pair, count) row per round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, IntegerType, StringType, StructField, StructType
 

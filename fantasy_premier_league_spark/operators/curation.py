@@ -22,9 +22,9 @@ from pyspark.sql import functions as F
 from .dedup import doc_shingles, normalize_text, words
 
 
-def decontaminate_overlap(
-    corpus: DataFrame,
-    eval_df: DataFrame,
+def decontaminate_overlap_split(
+    docs: DataFrame,
+    eval_pred: F.Column,
     id_col: str,
     text_col: str,
     *,
@@ -36,54 +36,20 @@ def decontaminate_overlap(
     The contamination check every training pipeline runs before a data
     release: a corpus document whose word n-grams substantially appear in
     the benchmark/eval set is flagged so it can be dropped from training.
+    Corpus and eval set are a PREDICATE split of one table (holdout
+    benchmarks carved from the same catalog), so the table is shingled once
+    and the exploded postings are split; the split is exact — eval docs
+    never reach the corpus side. ``eval_pred`` is evaluated on the
+    POST-SHINGLE frame, whose id column is named ``id`` regardless of
+    ``id_col`` (e.g. ``F.col("id") % 17 == 0``).
 
     Returns (id, n_shingles, n_hit, overlap, contaminated) for every corpus
     doc with >= 1 shingle (docs shorter than ``n`` words have no n-grams and
     are trivially clean; callers needing them re-attach with a left join).
 
-    Scale shape: the eval universe is DISTINCT shingles only — typically
-    millions of rows even for large benchmark suites, so the probe is a
-    shuffle (or, when genuinely tiny, AQE-promoted broadcast) hash join on
-    the shingle key, never a cross product. Corpus side streams through one
-    explode -> join -> groupBy(id) with partial aggregation. No collect.
-    """
-    corpus_sh = doc_shingles(corpus, id_col, text_col, n)
-    eval_sh = (
-        doc_shingles(eval_df, id_col, text_col, n)
-        .select("shingle")
-        .distinct()
-        .withColumn("__hit", F.lit(1))
-    )
-    return (
-        corpus_sh.join(eval_sh, "shingle", "left")
-        .groupBy("id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.coalesce(F.sum("__hit"), F.lit(0)).alias("n_hit"),
-        )
-        .withColumn("overlap", F.round(F.col("n_hit") / F.col("n_shingles"), 6))
-        .withColumn("contaminated", (F.col("overlap") >= F.lit(threshold)).cast("int"))
-    )
-
-
-def decontaminate_overlap_split(
-    docs: DataFrame,
-    eval_pred: F.Column,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 5,
-    threshold: float = 0.2,
-) -> DataFrame:
-    """:func:`decontaminate_overlap` for the common case where corpus and
-    eval set are a PREDICATE split of one table (holdout benchmarks carved
-    from the same catalog): shingle the table once and split the exploded
-    postings, instead of running the scan → spread → shingle pipeline per
-    side. One spread repartition instead of two and one combined shingle
-    pass; measured 0.93s vs 1.23s for the two-frame form at sf0.1. The
-    predicate split is exact — eval docs never reach the corpus side.
-    ``eval_pred`` is evaluated on the POST-SHINGLE frame, whose id column
-    is named ``id`` regardless of ``id_col`` (e.g. ``F.col("id") % 17 == 0``).
+    Scale shape: the eval universe is DISTINCT shingles only, so the probe
+    is a shuffle (or, when genuinely tiny, AQE-promoted broadcast) hash join
+    on the shingle key, never a cross product. No collect.
     """
     sh = doc_shingles(docs, id_col, text_col, n).withColumn(
         "__is_eval", eval_pred
@@ -323,71 +289,6 @@ def domain_mix_rates(
     )
 
 
-def dedup_passages_keep_first(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    passage_words: int = 10,
-) -> DataFrame:
-    """C4-style exact passage dedup that REWRITES documents, keeping the
-    first occurrence of every duplicated passage corpus-wide.
-
-    q38 scores sub-document duplication; this operator removes it: text
-    splits into non-overlapping ``passage_words``-word passages, each
-    passage survives only at its lexicographically-first occurrence
-    (min doc id, then min position within that doc — C4 dedups exact
-    three-sentence spans this way, Raffel et al. 2020 §2.2), and each doc is
-    reassembled from its surviving passages in original order.
-
-    Scale shape: one explode (~n_words/passage_words rows per doc), two
-    window functions over the SAME passage-keyed sort (Catalyst runs them
-    in one shuffle: partition by passage covers partition by passage+doc),
-    then one groupBy(doc) that rebuilds the text with an ordered
-    array_sort/array_join — no collect, no second corpus scan. The passage
-    key is high-cardinality and uniform, so the shuffle is skew-free.
-    """
-    wds = words(F.col(text_col))
-    pw = passage_words
-    n_pass = F.ceil(F.size(wds) / F.lit(pw)).cast("int")
-    passages = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), n_pass - 1),
-                lambda i: F.array_join(F.slice(wds, i * pw + 1, pw), " "),
-            )
-        ).alias("pos", "passage"),
-    )
-    w_first_doc = W.partitionBy("passage")
-    w_first_pos = W.partitionBy("passage", "doc_id")
-    flagged = passages.select(
-        "doc_id",
-        "pos",
-        "passage",
-        (
-            (F.col("doc_id") == F.min("doc_id").over(w_first_doc))
-            & (F.col("pos") == F.min("pos").over(w_first_pos))
-        )
-        .cast("int")
-        .alias("kept"),
-    )
-    return flagged.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_passages"),
-        F.sum("kept").cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(F.collect_list(F.struct("pos", "kept", "passage"))),
-                    lambda s: s["kept"] == 1,
-                ),
-                lambda s: s["passage"],
-            ),
-            " ",
-        ).alias("text_dedup"),
-    )
-
-
 def _words_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Lazily-materialized (id, __w words-array) frame — the tokenizer,
     the per-row-dominant stage of every span operator, runs exactly once;
@@ -410,10 +311,10 @@ def _duplicate_spans_from_words(base: DataFrame, k: int, min_occ: int) -> DataFr
     """(id, start, span, n_occ) for every length-``k`` SLIDING word window
     whose exact normalized text occurs at least ``min_occ`` times
     corpus-wide (Lee et al., ACL 2022: their suffix-array pass as the
-    equivalent fixed-width rolling window). Unlike the fixed passages of
-    :func:`dedup_passages_keep_first`, it catches a shared run of >= k
-    words at any offset. ``min_occ`` counts all occurrences, so a span
-    repeated within one document is duplicated too."""
+    equivalent fixed-width rolling window). Unlike fixed-offset passages
+    (q26), it catches a shared run of >= k words at any offset.
+    ``min_occ`` counts all occurrences, so a span repeated within one
+    document is duplicated too."""
     from .dedup import shingle_array_from_words
 
     spans = base.select(
@@ -501,104 +402,6 @@ def trim_duplicate_spans(
     )
 
 
-def token_budget_sample(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    group_col: str,
-    *,
-    budget: int,
-    salt: str = "tb",
-) -> DataFrame:
-    """Deterministic per-domain token-budget cap: within each group, docs
-    are taken in seeded-hash order until the cumulative token count would
-    exceed ``budget``.
-
-    This is how a mixture spec ("at most N tokens from source X") is
-    enforced when materializing a training corpus. Hash order makes the
-    sample uniform AND reproducible across engines/runs; the budget is a
-    prefix-sum cut, so adding documents to the corpus never changes which
-    earlier-hashed docs survive.
-
-    Scale shape: one window (running token sum) per group — the same
-    single-shuffle prefix-sum as pack_sequences. Group cardinality is the
-    domain count (bounded); if one domain is 100 TB alone, the two-phase
-    global-rank decomposition (operators/rank.py) applies verbatim since
-    the hash order is arbitrary-tie-breakable.
-    """
-    n_tokens = F.size(words(F.col(text_col))).cast("long")
-    order_key = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-    w = (
-        W.partitionBy(group_col)
-        .orderBy(order_key, F.col(id_col))
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        df.select(
-            F.col(id_col),
-            F.col(group_col),
-            n_tokens.alias("n_tokens"),
-            F.sum(n_tokens).over(w).alias("cum_tokens"),
-        )
-        .filter(F.col("cum_tokens") <= budget)
-    )
-
-
-def materialize_mixture(
-    df: DataFrame,
-    id_col: str,
-    group_col: str,
-    *,
-    multipliers: dict[str, float],
-    default_mult: float = 1.0,
-    salt: str = "mix",
-) -> DataFrame:
-    """Materialize a target corpus mixture as explicit (doc, epoch) rows.
-
-    Each group's target size is round(multiplier * n_docs) (half-up).
-    Docs are ranked by seeded hash within the group; every doc gets
-    floor(target / n) copies and the first (target mod n) ranked docs get
-    one extra — so upsampling (mult > 1) repeats docs evenly ("epochs" of
-    the domain) and downsampling (mult < 1) keeps a deterministic hash
-    prefix, exactly the repetition policy domain_mix_rates leaves to the
-    sampler. Output is one row per (doc, epoch) — the corpus a trainer
-    would actually iterate.
-
-    Scale shape: group counts are a bounded-cardinality aggregate joined
-    back broadcast; the rank is the same one-shuffle per-group window as
-    token_budget_sample; repetition is sequence+explode (row fan-out
-    proportional to the OUTPUT size, never materialized on the driver).
-    """
-    counts = df.groupBy(group_col).agg(F.count(F.lit(1)).alias("__n"))
-    mult_map = F.create_map(*[F.lit(x) for kv in multipliers.items() for x in kv])
-    order_key = F.md5(F.concat(F.lit(salt + ":"), F.col(id_col).cast("string")))
-    w = W.partitionBy(group_col).orderBy(order_key, F.col(id_col))
-    mult = F.coalesce(mult_map[F.col(group_col)], F.lit(float(default_mult)))
-    ranked = df.join(F.broadcast(counts), group_col).select(
-        F.col(id_col),
-        F.col(group_col),
-        F.col("__n"),
-        F.floor(mult * F.col("__n") + F.lit(0.5)).cast("long").alias("__target"),
-        F.row_number().over(w).alias("__rank"),
-    )
-    copies = (
-        F.floor(F.col("__target") / F.col("__n")).cast("long")
-        + (F.col("__rank") <= F.col("__target") % F.col("__n")).cast("long")
-    )
-    return (
-        ranked.withColumn("n_copies", copies)
-        .withColumn(
-            "epoch",
-            F.explode(
-                F.when(copies >= 1, F.sequence(F.lit(1).cast("long"), copies)).otherwise(
-                    F.array().cast("array<long>")
-                )
-            ),
-        )
-        .select(F.col(id_col), F.col(group_col), "n_copies", "epoch")
-    )
-
-
 def chunk_tokens(
     df: DataFrame,
     id_col: str,
@@ -675,7 +478,7 @@ def temperature_mix_rates(
 
     Same output contract as ``domain_mix_rates`` (n_docs, target_n,
     sample_rate, expected_n), so either feeds the deterministic hash
-    sampler / ``materialize_mixture`` unchanged.
+    sampler unchanged.
 
     Scale shape: one groupBy on the bounded-cardinality domain key, then
     arithmetic over n_groups rows with the two scalar totals broadcast as
@@ -816,7 +619,7 @@ def waterfill_budgets(
     proportion to ``weight``, capped at each group's ``capacity``, with
     every capped group's surplus redistributed proportionally among the
     uncapped — the step that turns a mixture spec ("weights w_i, budget
-    B") into the per-domain budgets ``token_budget_sample`` then enforces.
+    B") into the per-domain budgets a sampler then enforces.
 
     Exact closed form, no iteration: allocation_i = min(c_i, lambda*w_i)
     where lambda makes the allocations sum to min(B, sum c). Sorting
@@ -921,8 +724,8 @@ def epoch_interleave(
     A trainer reading a multi-domain corpus front-to-back wants every
     domain spread uniformly through the epoch, not concatenated blocks —
     otherwise the model sees 100% web for hours, then 100% code (the
-    ordering half of mixture materialization; ``materialize_mixture``
-    decides HOW MANY copies, this decides WHERE they land). Stride
+    ordering half of mixture materialization; the mixture rates decide
+    HOW MANY copies, this decides WHERE they land). Stride
     scheduling: within each domain, docs take seeded-hash order (uniform
     + reproducible across engines/runs); doc with within-domain rank r of
     n_g lands at fraction (r - 0.5) / n_g, and the global order sorts by
@@ -930,10 +733,9 @@ def epoch_interleave(
     domain in proportion to its size — the property that makes
     sequential-read training sample the mixture correctly.
 
-    Scale shape: one per-group window (the same single-shuffle rank as
-    token_budget_sample) + the two-phase global rank from operators/rank
-    (range sort + partition-offset join, no single-partition window over
-    the data).
+    Scale shape: one per-group window (a single-shuffle rank) + the
+    two-phase global rank from operators/rank (range sort +
+    partition-offset join, no single-partition window over the data).
     """
     from .rank import global_rank
 

@@ -42,7 +42,6 @@ def _cap_band_buckets(
     max_bucket_size: int | None,
     *,
     context: str,
-    key_cols: tuple[str, str] = ("band_idx", "band_sig"),
 ) -> DataFrame:
     """Drop band buckets with more than ``max_bucket_size`` members.
 
@@ -70,7 +69,7 @@ def _cap_band_buckets(
     # input untouched, so the sane-corpus fast path costs only the
     # counts job
     counts = (
-        banded.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__n")).persist()
+        banded.groupBy("band_idx", "band_sig").agg(F.count(F.lit(1)).alias("__n")).persist()
     )
     try:
         oversized = counts.filter(F.col("__n") > max_bucket_size)
@@ -87,8 +86,8 @@ def _cap_band_buckets(
             max_bucket_size,
             stats["rows"],
         )
-        drop_keys = tracked_local_checkpoint(oversized.select(*key_cols))
-        return banded.join(F.broadcast(drop_keys), list(key_cols), "left_anti")
+        drop_keys = tracked_local_checkpoint(oversized.select("band_idx", "band_sig"))
+        return banded.join(F.broadcast(drop_keys), ["band_idx", "band_sig"], "left_anti")
     finally:
         counts.unpersist()
 
@@ -781,7 +780,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     est_threshold: float = 0.5,
-    seed: int = 42,
     max_bucket_size: int | None = None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
@@ -801,9 +799,9 @@ def minhash_dedup_pairs(
     # (the round-7 bench regression); tracked so a long-lived session can
     # bulk-release via cache.release_operator_caches
     sigs = tracked_local_checkpoint(
-        minhash_signatures_from_arrays(shingle_arrays, num_hashes=num_hashes, seed=seed)
+        minhash_signatures_from_arrays(shingle_arrays, num_hashes=num_hashes)
         if shingle_arrays is not None
-        else minhash_signatures(df, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed),
+        else minhash_signatures(df, id_col, text_col, n=n, num_hashes=num_hashes),
         eager=False,
     )
     cands = lsh_candidate_pairs(sigs, bands=bands, max_bucket_size=max_bucket_size)
@@ -843,11 +841,8 @@ def minhash_incremental_pairs(
 
     Only the new batch pays the shingle explode; candidates come from the
     band join new-bands ⋈ index-bands, so the shuffle is new-batch-sized
-    plus the touched index buckets. This form re-bands the in-memory
-    ``index_sigs`` per call (exactly oracle-replayable — q44); the
-    production store that avoids the per-batch re-band is
-    :func:`write_signature_index` + :func:`minhash_incremental_pairs_indexed`,
-    whose partition-pruned probe reads only the touched band directories.
+    plus the touched index buckets. The in-memory ``index_sigs`` are
+    re-banded per call (exactly oracle-replayable — q48).
     Returns (new_id, index_id, jaccard_est); new ids that
     survive (no pair ≥ threshold) are appended to the index, which is
     exactly how the store grows.
@@ -874,159 +869,6 @@ def minhash_incremental_pairs(
     )
     a = new_sigs.withColumnsRenamed({"id": "new_id", "sig": "sig_a"})
     b = index_sigs.withColumnsRenamed({"id": "index_id", "sig": "sig_b"})
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.size("sig_a")
-    return (
-        cand.join(a, "new_id")
-        .join(b, "index_id")
-        .withColumn("jaccard_est", F.round(est, 6))
-        .filter(F.col("jaccard_est") >= est_threshold)
-        .select("new_id", "index_id", "jaccard_est")
-    )
-
-
-def _band_pk(band_buckets: int) -> F.Column:
-    """Single partition key encoding (band_idx, hash-bucket of band_sig):
-    ``band_idx * band_buckets + pmod(xxhash64(band_sig), band_buckets)``.
-    Equal (band_idx, band_sig) ⇒ equal band_pk, so joining on
-    (band_pk, band_sig) is exactly the banded-LSH join — but band_pk is
-    LOW-cardinality (bands × band_buckets values), which makes it a
-    legal parquet partition column the scanner can prune on."""
-    return (
-        F.col("band_idx") * band_buckets
-        + F.pmod(F.xxhash64("band_sig"), F.lit(band_buckets))
-    ).cast("int")
-
-
-def _delta_files(delta_path: str) -> list[str]:
-    """Parquet data files currently in a signature-store delta dir."""
-    import os
-
-    if not os.path.isdir(delta_path):
-        return []
-    return [f for f in os.listdir(delta_path) if f.endswith(".parquet")]
-
-
-def write_signature_index(
-    sig_df: DataFrame,
-    path: str,
-    *,
-    bands: int = 16,
-    band_buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Persist a MinHash signature index in the band-partitioned layout —
-    the production store for nightly incremental dedup.
-
-    Layout::
-
-        {path}/bands/band_pk=N/   (id, band_sig)  — banded once, at write
-        {path}/sigs/              (id, sig)       — for the verify join
-
-    Banding is paid ONCE here; every nightly probe then reads only the
-    ``band_pk`` partitions its batch actually touches
-    (:func:`minhash_incremental_pairs_indexed`) instead of re-scanning and
-    re-banding the whole historical index per batch.
-    """
-    from ..sources.warehouse import write_partitioned
-
-    banded = (
-        _banded(sig_df, bands)
-        .withColumn("band_pk", _band_pk(band_buckets))
-        .select("id", "band_sig", "band_pk")
-    )
-    write_partitioned(banded, f"{path}/bands", partition_cols=["band_pk"], mode=mode)
-    sig_df.select("id", "sig").write.mode(mode).parquet(f"{path}/sigs")
-
-
-def minhash_incremental_pairs_indexed(
-    spark,
-    new_docs: DataFrame,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    band_buckets: int = 64,
-    est_threshold: float = 0.5,
-    seed: int = 42,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """:func:`minhash_incremental_pairs` against a PERSISTED band-partitioned
-    index (:func:`write_signature_index`) — the store is probed, never
-    re-banded.
-
-    Only the new batch is sketched and banded. Its distinct ``band_pk``
-    keys (a driver-side list bounded by bands × band_buckets, not data)
-    become a static partition ``isin`` filter on the store, so the scan
-    shows PartitionFilters and reads only the touched directories — at
-    100 TB the nightly probe's index I/O is proportional to the batch's
-    bucket footprint, not the corpus history. Same (n, num_hashes, seed)
-    contract as the index build, same output as the re-banding
-    form (asserted in tests/test_guards_lifecycle.py).
-    """
-    new_sigs = tracked_local_checkpoint(
-        minhash_signatures(new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed),
-        eager=False,
-    )
-    nb = _cap_band_buckets(
-        _banded(new_sigs, bands),
-        max_bucket_size,
-        context="minhash_incremental_pairs_indexed[new]",
-    ).withColumn("band_pk", _band_pk(band_buckets))
-    touched = sorted(r["band_pk"] for r in nb.select("band_pk").distinct().collect())
-    # LSM overlay: streaming ingest appends each batch's banded rows to a
-    # FLAT delta (one file per batch) instead of fanning 1024 dynamic
-    # partition dirs per append, and compacts the delta into the
-    # partitioned store every K batches (run_near_dup_ingest). The probe
-    # therefore reads store ∪ delta; the delta is bounded by the
-    # compaction threshold, so its unpruned scan stays batch-sized while
-    # the store keeps partition pruning. Either half may not exist yet
-    # (pre-compaction ingest has no bands/; a batch-built index has no
-    # delta) — read whichever is populated.
-    import os
-
-    parts = []
-    if os.path.isdir(f"{index_path}/bands"):
-        parts.append(
-            spark.read.parquet(f"{index_path}/bands").filter(F.col("band_pk").isin(touched))
-        )
-    delta_path = f"{index_path}/bands_delta"
-    if _delta_files(delta_path):
-        parts.append(
-            spark.read.parquet(delta_path)
-            .filter(F.col("band_pk").isin(touched))
-            .select("id", "band_sig", "band_pk")
-        )
-    if not parts:
-        raise FileNotFoundError(
-            f"no signature store at {index_path} (neither bands/ nor bands_delta/)"
-        )
-    bands_df = parts[0]
-    for extra in parts[1:]:
-        bands_df = bands_df.select("id", "band_sig", "band_pk").unionByName(extra)
-    store = _cap_band_buckets(
-        bands_df,
-        max_bucket_size,
-        context="minhash_incremental_pairs_indexed[store]",
-        key_cols=("band_pk", "band_sig"),
-    )
-    cand = (
-        nb.select("band_pk", "band_sig", F.col("id").alias("new_id"))
-        .join(store.withColumnRenamed("id", "index_id"), ["band_pk", "band_sig"])
-        .filter(F.col("new_id") != F.col("index_id"))
-        .select("new_id", "index_id")
-        .distinct()
-    )
-    a = new_sigs.withColumnsRenamed({"id": "new_id", "sig": "sig_a"})
-    b = spark.read.parquet(f"{index_path}/sigs").withColumnsRenamed(
-        {"id": "index_id", "sig": "sig_b"}
-    )
     est = F.aggregate(
         F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
         F.lit(0),

@@ -8,7 +8,7 @@ combine), and fold each new delta batch into the stored state with a
 state-sized union+groupBy. The 100 TB property is that maintenance cost
 is O(|delta| + |state|), never O(|history|): the raw historical rows are
 read exactly once, ever. Derived metrics that are NOT algebraic (avg,
-range) are computed at read time from the merged state (``finalize``) —
+range) are computed at read time from the merged state (q13) —
 the classic partial-aggregate decomposition Spark itself uses for
 map-side combine (partial_sum/partial_count under HashAggregate).
 
@@ -60,20 +60,6 @@ def merge_partial_aggs(*parts: DataFrame) -> DataFrame:
         F.sum("sum_v").alias("sum_v"),
         F.min("min_v").alias("min_v"),
         F.max("max_v").alias("max_v"),
-    )
-
-
-def finalize_aggs(state: DataFrame, *, round_avg: int = 6) -> DataFrame:
-    """Read-time derived metrics from merged state: avg (non-algebraic —
-    computed from sum/cnt, never maintained directly) and range."""
-    return state.select(
-        *[c for c in state.columns if c not in STATE_COLS],
-        "cnt",
-        "sum_v",
-        "min_v",
-        "max_v",
-        F.round(F.col("sum_v") / F.col("cnt"), round_avg).alias("avg_v"),
-        (F.col("max_v") - F.col("min_v")).alias("range_v"),
     )
 
 

@@ -1,20 +1,16 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads as feature vectors.
 
 Design for a 100 TB training-data pipeline: media lives in parquet as
-``binary`` columns (or object-store URIs) beside a typed metadata struct;
-decode / feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages so bytes never leave the executor and Python sees
-whole record batches, not rows.
+``binary`` columns (or object-store URIs); feature extraction and frame
+sampling run as Arrow-batched ``mapInPandas`` stages so bytes never leave
+the executor and Python sees whole record batches, not rows.
 
 Codec libraries (PIL/ffmpeg/torchaudio) are NOT in this container, so
-decoding is a ``decoder=`` hook with three tiers:
+decoding is a ``decoder=`` hook:
 - default → ``NotImplementedError`` with a clear message
-- ``image_stats_decoder`` → REAL decode of PNG (stdlib zlib + the five
-  per-row filters), uncompressed 24-bit BMP, and binary PPM — actual
-  pixel features end-to-end without any codec dependency
 - ``fake_image_decoder`` → deterministic md5-derived features for
-  opaque/unsupported bytes (the oracle-replayable stand-in).
-JPEG/video remain hook-only: entropy coding belongs to a codec library.
+  opaque bytes (the oracle-replayable stand-in).
+Real image/video decoding belongs to a codec library passed as the hook.
 """
 
 from __future__ import annotations
@@ -25,194 +21,16 @@ from collections.abc import Callable, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-#: metadata struct carried beside every payload column
-MEDIA_META_SCHEMA = "struct<modality:string,mime:string,n_bytes:bigint,digest:string>"
 
 FEATURE_DIM = 8
 
 Decoder = Callable[[bytes], np.ndarray]
 
 
-def attach_media_meta(df: DataFrame, payload_col: str, *, modality: str, mime: str) -> DataFrame:
-    """Typed metadata from an opaque binary column — JVM-side only."""
-    p = F.col(payload_col)
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(modality).alias("modality"),
-            F.lit(mime).alias("mime"),
-            F.length(p).cast("bigint").alias("n_bytes"),
-            F.md5(p).alias("digest"),
-        ),
-    )
-
-
 def _not_implemented_decoder(payload: bytes) -> np.ndarray:
     raise NotImplementedError(
         "media codecs are not available in this environment; pass an explicit "
-        "decoder — image_stats_decoder handles real PNG/BMP/PPM bytes with "
-        "the stdlib only, fake_image_decoder is the opaque-bytes stand-in"
-    )
-
-
-# --- real decoders (stdlib-only; no codec libraries required) -----------
-#
-# PNG (zlib + per-row unfilter), uncompressed 24-bit BMP, and binary PPM
-# cover the "decode" stage with actual pixel semantics: the container has
-# no PIL/ffmpeg, but these formats need nothing beyond zlib/struct. JPEG &
-# video stay behind the explicit decoder hook (entropy coding is a codec
-# library's job, not an analytics engine's).
-
-
-def decode_ppm(payload: bytes) -> np.ndarray:
-    """Binary PPM (P6, maxval <= 255) → (h, w, 3) uint8."""
-    if not payload.startswith(b"P6"):
-        raise ValueError("not a P6 PPM")
-    # header = magic, width, height, maxval separated by whitespace/comments
-    fields: list[int] = []
-    i = 2
-    while len(fields) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":  # comment to end of line
-            i = payload.index(b"\n", i) + 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        fields.append(int(payload[i:j]))
-        i = j
-    i += 1  # single whitespace after maxval
-    w, h, maxval = fields
-    if maxval > 255:
-        raise ValueError("16-bit PPM not supported")
-    pix = np.frombuffer(payload, dtype=np.uint8, count=w * h * 3, offset=i)
-    return pix.reshape(h, w, 3).copy()
-
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Uncompressed 24-bit bottom-up BMP → (h, w, 3) uint8 (RGB)."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP")
-    data_off = struct.unpack_from("<I", payload, 10)[0]
-    w, h = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    compression = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or compression != 0:
-        raise ValueError(f"only uncompressed 24-bit BMP supported (bpp={bpp})")
-    flip = h > 0  # positive height = bottom-up row order
-    h = abs(h)
-    stride = ((24 * w + 31) // 32) * 4  # rows pad to 4 bytes
-    rows = np.frombuffer(payload, dtype=np.uint8, count=h * stride, offset=data_off)
-    img = rows.reshape(h, stride)[:, : w * 3].reshape(h, w, 3)
-    if flip:
-        img = img[::-1]
-    return img[:, :, ::-1].copy()  # BGR → RGB
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """PNG (8-bit depth, color types 0/2/4/6, non-interlaced) → (h, w, c)
-    uint8. Stdlib-only: chunk walk + zlib inflate + the five per-row
-    filters (None/Sub/Up/Average/Paeth) unapplied exactly per the spec."""
-    import struct
-    import zlib
-
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG")
-    pos, idat, meta = 8, b"", None
-    while pos < len(payload):
-        (length,) = struct.unpack_from(">I", payload, pos)
-        ctype = payload[pos + 4 : pos + 8]
-        body = payload[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            meta = struct.unpack(">IIBBBBB", body)
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + body + crc
-    if meta is None:
-        raise ValueError("PNG missing IHDR")
-    w, h, depth, color_type, _comp, _filt, interlace = meta
-    channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
-    if depth != 8 or channels is None or interlace != 0:
-        raise ValueError(
-            f"unsupported PNG (depth={depth} color_type={color_type} interlace={interlace})"
-        )
-    raw = zlib.decompress(idat)
-    stride = w * channels
-    img = np.zeros((h, stride), dtype=np.uint8)
-    bpp = channels  # bytes per pixel at depth 8
-    for y in range(h):
-        ftype = raw[y * (stride + 1)]
-        line = np.frombuffer(raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1)
-        prev = img[y - 1] if y else np.zeros(stride, dtype=np.uint8)
-        if ftype == 0:  # None
-            img[y] = line
-        elif ftype == 2:  # Up
-            img[y] = line + prev
-        else:  # Sub / Average / Paeth need the in-progress row
-            cur = img[y]
-            for x in range(stride):
-                a = int(cur[x - bpp]) if x >= bpp else 0  # left
-                b = int(prev[x])  # up
-                if ftype == 1:
-                    pred = a
-                elif ftype == 3:
-                    pred = (a + b) // 2
-                elif ftype == 4:
-                    c = int(prev[x - bpp]) if x >= bpp else 0  # up-left
-                    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                else:
-                    raise ValueError(f"bad PNG filter {ftype}")
-                cur[x] = (int(line[x]) + pred) & 0xFF
-    return img.reshape(h, w, channels)
-
-
-def decode_image(payload: bytes) -> np.ndarray:
-    """Sniff the magic bytes and decode PNG / BMP / PPM to an (h, w, 3)
-    uint8 RGB array (grayscale replicated, alpha dropped)."""
-    if payload[:8] == b"\x89PNG\r\n\x1a\n":
-        img = decode_png(payload)
-    elif payload[:2] == b"BM":
-        img = decode_bmp(payload)
-    elif payload[:2] == b"P6":
-        img = decode_ppm(payload)
-    else:
-        raise ValueError(f"unrecognized image magic: {payload[:8]!r}")
-    if img.shape[2] == 1:  # gray → RGB
-        img = np.repeat(img, 3, axis=2)
-    elif img.shape[2] == 2:  # gray+alpha → RGB
-        img = np.repeat(img[:, :, :1], 3, axis=2)
-    elif img.shape[2] == 4:  # RGBA → RGB
-        img = img[:, :, :3]
-    return img
-
-
-def image_stats_decoder(payload: bytes) -> np.ndarray:
-    """Real-decode feature extractor (the non-default ``decoder=`` hook):
-    FEATURE_DIM floats = (w, h, mean R/G/B, gray std/min/max, pixel stats
-    scaled to [0, 1]) from actual PNG/BMP/PPM pixels."""
-    img = decode_image(payload)
-    h, w = img.shape[:2]
-    rgb = img.reshape(-1, 3).astype(np.float64)
-    gray = rgb.mean(axis=1)
-    return np.array(
-        [
-            float(w),
-            float(h),
-            rgb[:, 0].mean() / 255.0,
-            rgb[:, 1].mean() / 255.0,
-            rgb[:, 2].mean() / 255.0,
-            gray.std() / 255.0,
-            gray.min() / 255.0,
-            gray.max() / 255.0,
-        ]
+        "decoder — fake_image_decoder is the opaque-bytes stand-in"
     )
 
 
@@ -235,9 +53,7 @@ def extract_features(
 
     Output: (id, n_bytes, features array<double>[batch_feature_dim]).
     Partitioning is preserved (no shuffle); each Arrow batch decodes in one
-    Python call. Failures raise (fail-fast contract);
-    :func:`extract_features_quarantined` routes them to a dead-letter
-    column instead.
+    Python call. Failures raise (fail-fast contract).
     """
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -256,54 +72,6 @@ def extract_features(
     return df.select(id_col, payload_col).mapInPandas(
         decode_batches,
         schema=f"id long, n_bytes long, features array<double>",
-    )
-
-
-def extract_features_quarantined(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    *,
-    decoder: Decoder = _not_implemented_decoder,
-) -> DataFrame:
-    """Dead-letter variant of :func:`extract_features`: a payload whose
-    decode raises does NOT kill the stage — it yields a row with null
-    ``features`` and the exception text in ``decode_error``, so one
-    corrupt file in a 100 TB scan costs one quarantined row, not a
-    re-run of the job. Split downstream with
-    ``df.filter("decode_error IS NULL")`` / ``IS NOT NULL`` (the
-    dead-letter sink).
-
-    Output: (id, n_bytes, features array<double> | null, decode_error
-    string | null). Same Arrow-batched map-only dataflow as the raising
-    variant.
-    """
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            feats: list[list[float] | None] = []
-            errs: list[str | None] = []
-            for p in pdf[payload_col]:
-                try:
-                    feats.append(decoder(p).tolist())
-                    errs.append(None)
-                except Exception as exc:  # noqa: BLE001 — quarantine by contract
-                    feats.append(None)
-                    errs.append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "n_bytes": [len(p) for p in pdf[payload_col]],
-                    "features": feats,
-                    "decode_error": errs,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        decode_batches,
-        schema="id long, n_bytes long, features array<double>, decode_error string",
     )
 
 
@@ -335,46 +103,4 @@ def sample_frames(
 
     return df.select(id_col, payload_col).mapInPandas(
         sample_batches, schema="id long, frame_idx int, frame_digest string"
-    )
-
-
-def resize_media(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    *,
-    target_w: int = 224,
-    target_h: int = 224,
-    resizer: Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Resize plumbing: (id, payload, width, height) with the payload
-    replaced by the resized bytes. ``resizer`` is the codec hook (a real
-    pipeline passes a PIL/opencv-backed callable); the default is the
-    deterministic stand-in ``md5(payload) * ceil`` truncated to
-    ``target_w*target_h//64`` bytes, so batching/schema/row-alignment are
-    testable without image libs. Arrow-batched, no shuffle, output
-    partitioning preserved — at 100 TB this runs as a pure map stage."""
-
-    def default_resizer(payload: bytes, w: int, h: int) -> bytes:
-        n = max(1, (w * h) // 64)
-        digest = hashlib.md5(payload).digest()
-        return (digest * (n // len(digest) + 1))[:n]
-
-    fn = resizer or default_resizer
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "payload": [fn(p, target_w, target_h) for p in pdf[payload_col]],
-                    "width": target_w,
-                    "height": target_h,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        resize_batches, schema="id long, payload binary, width int, height int"
     )

@@ -11,16 +11,10 @@ n-gram counts and two categorical distributions:
 with add-alpha smoothing over ``n_buckets`` hash buckets. Documents with
 high weight are the ones importance resampling keeps for pre-training.
 
-Split into the two halves a production pipeline deploys separately:
-
-- :func:`dsir_bucket_model` — TRAIN: one bucket-keyed groupBy builds
-  both distributions in a single shuffle whose key space is
-  ``n_buckets``; the returned model is a 256-row frame, persistable
-  like any other tokenizer-sized artifact;
-- :func:`dsir_score` — APPLY: re-join a token stream to the broadcast
-  model and average per document — one groupBy(doc) with partial agg.
-  The same call scores a batch corpus or a ``foreachBatch`` micro-batch
-  (streaming/quality.py).
+:func:`dsir_weights` trains and scores in one call: one bucket-keyed
+groupBy builds both distributions in a single shuffle whose key space is
+``n_buckets``, and the per-document scores re-join that model and average
+per document — one groupBy(doc) with partial agg.
 
 Nothing is collected to the driver; both passes are linear scans. The
 portable hash keeps the whole computation replayable in ANSI SQL, so the
@@ -46,69 +40,6 @@ def _bucketed_tokens(df: DataFrame, text_col: str, n_buckets: int, *extra_cols: 
     ).withColumn("bucket", portable_hash32(F.col("word")) % n_buckets)
 
 
-def dsir_bucket_model(
-    df: DataFrame,
-    text_col: str,
-    is_target_col: str,
-    *,
-    n_buckets: int = 256,
-    alpha: float = 1.0,
-) -> DataFrame:
-    """Train the DSIR model: ``(bucket, log_ratio)`` with add-alpha
-    smoothing. ``is_target_col`` is a boolean column marking the target
-    (reference) slice; everything else is background. The output is
-    ``n_buckets`` rows — artifact-sized, broadcastable, persistable."""
-    toks = _bucketed_tokens(
-        df.withColumn("__is_t", F.col(is_target_col).cast("boolean")),
-        text_col,
-        n_buckets,
-        "__is_t",
-    )
-    buckets = toks.groupBy("bucket").agg(
-        F.sum(F.when(F.col("__is_t"), 1).otherwise(0)).alias("ct"),
-        F.sum(F.when(~F.col("__is_t"), 1).otherwise(0)).alias("cb"),
-    )
-    totals = buckets.agg(F.sum("ct").alias("tt"), F.sum("cb").alias("tb"))
-    a = F.lit(float(alpha))
-    b = F.lit(float(n_buckets))
-    return buckets.crossJoin(F.broadcast(totals)).select(
-        "bucket",
-        (
-            F.log((F.col("ct") + a) / (F.col("tt") + a * b))
-            - F.log((F.col("cb") + a) / (F.col("tb") + a * b))
-        ).alias("log_ratio"),
-    )
-
-
-def dsir_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    model: DataFrame,
-    *,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Apply a trained model: ``(doc_id, n_tokens, dsir_score)`` — the
-    mean per-token log-likelihood ratio, rounded to 6 places. Documents
-    with no tokens produce no row (nothing to average); callers routing
-    accept/reject streams should left-join and treat null as reject.
-    ``n_buckets`` must match the model's training value."""
-    toks = _bucketed_tokens(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("__text")),
-        "__text",
-        n_buckets,
-        "doc_id",
-    )
-    return (
-        toks.join(F.broadcast(model), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("log_ratio"), 6).alias("dsir_score"),
-        )
-    )
-
-
 def dsir_weights(
     df: DataFrame,
     id_col: str,
@@ -132,9 +63,9 @@ def dsir_weights(
     Train-and-score shares ONE tokenize pass: the corpus reduces to a
     persisted (doc_id, is_target, bucket, cnt) histogram — doc x bucket
     sized, the map-side aggregate running on a spread scan — and both
-    the bucket model and the per-doc scores aggregate from it (the
-    separate model/score calls each re-tokenized the corpus, profiled
-    as back-to-back single-task 0.5-0.7s stages locally; at scale the
+    the bucket model and the per-doc scores aggregate from it (separate
+    model and score passes each re-tokenized the corpus, profiled as
+    back-to-back single-task 0.5-0.7s stages locally; at scale the
     histogram is also what should shuffle, not token rows — guide
     §2.3). The per-doc mean log-ratio is the cnt-weighted mean over
     buckets, accumulated EXACTLY: the per-bucket log-ratio is cast to

@@ -1,9 +1,8 @@
 """Batch sessionization — gaps-and-islands session assignment.
 
-The batch sibling of ``streaming/sessions.py`` (which uses
-``F.session_window`` / ``applyInPandasWithState`` on a stream): identical
-session semantics — a session closes after ``gap`` of inactivity — expressed
-as two windows over the keyed, time-ordered history:
+The session semantics of Spark's ``F.session_window`` — a session closes
+after ``gap`` of inactivity — expressed as two windows over the keyed,
+time-ordered history:
 
 1. ``lag(ts)`` per key → flag rows that OPEN a new session (gap exceeded or
    first event),

@@ -294,7 +294,6 @@ def semantic_decontaminate(
     vec_col: str = "embedding",
     threshold: float = 0.35,
     round_digits: int = 4,
-    eval_rows: int | None = None,
     eval_broadcast_max_rows: int = _DECON_EVAL_BROADCAST_MAX_ROWS,
     n_probe: int = 8,
     seed: int = 42,
@@ -302,7 +301,7 @@ def semantic_decontaminate(
     """Embedding-space decontamination: for every TRAIN vector, its best
     cosine match in the EVAL set, plus a contamination verdict — the
     semantic complement of the 5-gram lexical decontaminate
-    (operators/curation.py::decontaminate_overlap): paraphrased or
+    (operators/curation.py::decontaminate_overlap_split): paraphrased or
     reformatted benchmark leakage that shares no 5-gram still lands at
     high cosine.
 
@@ -316,9 +315,8 @@ def semantic_decontaminate(
     the exchange. Determinism: rounded cosine with min-eval-id
     tie-break (the struct max ordering), replayable in any engine.
 
-    Past ``eval_broadcast_max_rows`` (one bounded count job, skipped
-    when the caller passes ``eval_rows``) the broadcast fold is the
-    wrong plan — the eval side no longer fits an executor broadcast —
+    Past ``eval_broadcast_max_rows`` (one bounded count job) the
+    broadcast fold is the wrong plan — the eval side no longer fits an executor broadcast —
     and the call routes through :func:`semantic_decontaminate_ivf`
     (VERDICT r12 #4): probe only each train vector's ``n_probe``
     nearest eval cells. That path is approximate (recall governed by
@@ -330,7 +328,7 @@ def semantic_decontaminate(
     Returns (train_id, eval_id, cosine, contaminated) — one row per
     train vector; ``contaminated`` = best cosine >= threshold.
     """
-    n_eval = eval_rows if eval_rows is not None else eval_df.count()
+    n_eval = eval_df.count()
     if n_eval > eval_broadcast_max_rows:
         return semantic_decontaminate_ivf(
             train,

@@ -222,9 +222,8 @@ def v62_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sessions GROUP BY user_id, session_seq
     """,
     doc="Batch sessionization (gaps-and-islands, 30-min inactivity gap): "
-    "per-user dense session numbers + per-session aggregates — the batch "
-    "twin of streaming/sessions.py session_window, same semantics checked "
-    "there by the batch/stream parity test. One shuffle: both windows and "
+    "per-user dense session numbers + per-session aggregates — "
+    "session_window's semantics as plain windows. One shuffle: both windows and "
     "the final groupBy share the user_id partitioning.",
     tags=("sessionization", "windows"),
 )
@@ -555,8 +554,8 @@ _Z_TERMS = " + ".join(
     SELECT o_orderkey, x, y, ({_Z_TERMS})::BIGINT AS zval FROM b
     """,
     doc="Morton (Z-order) locality key over (customer, order day) — "
-    "sources/warehouse.py::zorder_key, the layout lever behind "
-    "write_zordered: range-partition + sort on the interleaved key "
+    "sources/warehouse.py::zorder_key, a layout lever: range-partition "
+    "+ sort on the interleaved key "
     "clusters rows close in BOTH dimensions into the same files, so "
     "min/max file stats prune scans on EITHER column (a plain (x,y) sort "
     "only prunes the leading one). Exact integer bit arithmetic, "

@@ -1037,30 +1037,6 @@ def v22_pk_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     return o.unionByName(l)
 
 
-def q69_sketch_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pytest-only demo since round 11 (was the rows-only q69 registry slot).
-
-    The approximate-analytics toolbox every 100 TB profile job leans on,
-    one row per order priority: approx_count_distinct customers (HLL, ~2%
-    err), percentile_approx price p50/p95 (KLL-style quantile sketch), plus
-    exact count for reference. All sketches are one-pass, partial-aggregated
-    map-side, fixed memory per group — the scalable substitutes for q20's
-    exact percentiles and exact countDistinct. The engine-internal registers
-    are not DuckDB-replayable, so the same capability is covered under the
-    full value-hash gate by the PORTABLE sketches instead (q03/q04 KMV
-    distinct/resemblance, q05 sampled quantiles); this demo is pinned by
-    tests/test_round5b_ext.py::TestSketchProfileDemo (determinism + error
-    bounds vs exact, schema pinned).
-    """
-    orders = load(spark, sf_dir, "orders")
-    return orders.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.approx_count_distinct("o_custkey", 0.02).alias("n_cust_hll"),
-        F.round(F.percentile_approx("o_totalprice", 0.5, 10000), 2).alias("p50_approx"),
-        F.round(F.percentile_approx("o_totalprice", 0.95, 10000), 2).alias("p95_approx"),
-    )
-
-
 @query(
     "v78_unpivot_metrics",
     """

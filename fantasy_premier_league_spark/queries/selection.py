@@ -990,8 +990,8 @@ def q42_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     "'historical' batch (< 1998-01-01) and a 'delta' batch, each reduced "
     "to per-priority ALGEBRAIC state (count/sum/min/max — "
     "operators/incremental.py), and the two states are merged with a "
-    "state-sized union+groupBy; avg and range are derived at read time "
-    "(finalize). The oracle is the FULL single-pass recompute — the "
+    "state-sized union+groupBy; avg and range are derived at read time. "
+    "The oracle is the FULL single-pass recompute — the "
     "value-hash proves merge(partial(A), partial(B)) == agg(A ∪ B), the "
     "algebraic-decomposition law that makes O(|delta|) materialized-view "
     "maintenance sound at 100 TB (history's raw rows are never "

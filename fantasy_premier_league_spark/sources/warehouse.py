@@ -1,92 +1,38 @@
-"""Warehouse layout primitives: partitioned and bucketed tables.
-
-The two physical-layout levers that matter most at 100 TB:
+"""Warehouse layout primitives: partitioned writes and Z-order keys.
 
 - **Partitioned writes** (``partitionBy``): date/tenant directories the
   scanner prunes entirely — a filter on the partition column reads only
   matching directories (PartitionFilters in the plan, zero I/O elsewhere).
-- **Bucketed tables** (``bucketBy`` + ``saveAsTable``): pre-shuffled on the
-  join/agg key at write time. Two tables bucketed on the same key with the
-  same bucket count join with NO exchange — the shuffle was paid once at
-  load, not per query. This is how the fact-to-fact joins (players_past ⋈
-  fixtures at FPL scale, lineitem ⋈ orders here) stay viable.
-
-Both are demonstrated + plan-asserted in tests/test_warehouse_layout.py.
+  Plan-asserted in tests/test_warehouse_layout.py.
+- **Z-order keys**: one locality key over two dimensions, for layouts that
+  must prune on either column (q04).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
-def write_partitioned(df: DataFrame, path: str, *, partition_cols: list[str], mode: str = "overwrite") -> None:
+def write_partitioned(df: DataFrame, path: str, *, partition_cols: list[str]) -> None:
     # repartition ON the partition columns first: a dynamic-partition
     # write otherwise opens (tasks x live partition values) parquet
-    # writers — 32 tasks x 64 band_pk values = 2048 tiny files and ~50s
-    # of writer churn for a 5k-doc index drop; after the shuffle each
-    # task owns a few whole partition values and writes one file per
-    # value. Same discipline Spark recommends before INSERT ... PARTITION.
-    df.repartition(*[df[c] for c in partition_cols]).write.mode(mode).partitionBy(
+    # writers — 32 tasks x 64 partition values = 2048 tiny files; after
+    # the shuffle each task owns a few whole partition values and writes
+    # one file per value. Same discipline Spark recommends before
+    # INSERT ... PARTITION.
+    df.repartition(*[df[c] for c in partition_cols]).write.mode("overwrite").partitionBy(
         *partition_cols
     ).parquet(path)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_col: str,
-    n_buckets: int,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (optionally sorted) managed table. Joins and
-    aggregations keyed on ``bucket_col`` against tables with the same
-    bucketing skip their exchange (and with ``sort_col``, their sort)."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, on: str) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — shuffle-free."""
-    return spark.table(left_table).join(spark.table(right_table), on)
-
-
-def write_sharded_corpus(
-    df: DataFrame,
-    path: str,
-    *,
-    shard_cols: list[str],
-    max_records_per_file: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize a packed corpus (operators/curation.py::pack_sequences
-    output) as the training-data layout: one directory per shard key, files
-    capped at ``max_records_per_file`` rows so downstream loaders get
-    uniformly sized inputs regardless of shard skew.
-
-    The row cap is Spark's write-side ``maxRecordsPerFile`` — enforcement
-    happens inside each task with no extra shuffle; combined with
-    ``partitionBy(shard_cols)`` the output is the
-    ``.../pack_bucket=N/shard_id=M/part-*.parquet`` tree a data loader
-    streams shard-by-shard (and the scanner partition-prunes when a single
-    shard is re-read for inspection)."""
-    writer = df.write.mode(mode)
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*shard_cols).parquet(path)
 
 
 def zorder_key(x_col, y_col, *, bits: int = 10):
     """Morton (Z-order) interleave of two bounded ints -> one locality key.
 
-    The third physical-layout lever after partitioning and bucketing:
-    range-partitioning + sorting by the interleaved key clusters rows that
-    are close in BOTH dimensions into the same files, so per-file min/max
-    statistics prune scans on EITHER column (a sort on (x, y) only ever
-    prunes the leading column). This is how multi-dimensional predicates
+    The physical-layout lever after partitioning: range-partitioning +
+    sorting by the interleaved key clusters rows that are close in BOTH
+    dimensions into the same files, so per-file min/max statistics prune
+    scans on EITHER column (a sort on (x, y) only ever prunes the leading
+    column). This is how multi-dimensional predicates
     (tenant x date, customer x time) stay I/O-proportional at 100 TB —
     the same layout Delta/Iceberg OPTIMIZE ZORDER produces.
 
@@ -102,29 +48,3 @@ def zorder_key(x_col, y_col, *, bits: int = 10):
         z = z + F.shiftleft(F.shiftright(x, i).bitwiseAND(F.lit(1)), 2 * i)
         z = z + F.shiftleft(F.shiftright(y, i).bitwiseAND(F.lit(1)), 2 * i + 1)
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    *,
-    bits: int = 10,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered by the Z-order key of (x_col, y_col):
-    range-partition on the key (contiguous z-ranges per file), sort within
-    partitions, drop the helper column. Readers filtering on either
-    dimension skip whole files via parquet row-group/file min-max stats."""
-    from pyspark.sql import functions as F
-
-    keyed = df.withColumn("__z", zorder_key(F.col(x_col), F.col(y_col), bits=bits))
-    (
-        keyed.repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )

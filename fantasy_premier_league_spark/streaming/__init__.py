@@ -1,9 +1,7 @@
-"""Structured Streaming extension (SURVEY §2.11).
+"""Structured Streaming over the snapshot drops (SURVEY §2.11).
 
 The reference is batch-only; its stream-shaped structures are the
 timestamped snapshot drops and the append-only ``players_statuses`` log.
-This module is the beyond-parity extension: the same snapshot directory
-consumed incrementally, plus watermarked windowed aggregation over event
-streams. Batch and streaming share the transform functions — a DataFrame
-expression doesn't care which engine mode runs it.
+``snapshots.py`` consumes the snapshot directory incrementally into that
+log.
 """

@@ -1,4 +1,4 @@
-"""Streaming ingestion of snapshot drops + windowed event aggregation.
+"""Streaming ingestion of snapshot drops.
 
 Design: the S12 snapshot convention (``main_YYYYmmdd-HHMMSS.json`` files
 landing in a directory) is exactly a Structured Streaming file source. The
@@ -8,7 +8,7 @@ per player, keyed (snapshot_ts, player_id) — late/duplicate files are
 dropped by watermark + dropDuplicates, which the batch reference cannot do.
 
 At scale: file-source listing is incremental (maxFilesPerTrigger), state
-for dedup/windows is bounded by the watermark, and checkpointing makes the
+for the dedup is bounded by the watermark, and checkpointing makes the
 append log exactly-once.
 """
 
@@ -19,14 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.files import TS_FORMAT, TS_PATTERN
-
-#: point-in-time columns carried into the status log (run_load.py:205-214,
-#: FIXTURES.md §5)
-STATUS_COLS = [
-    "id", "form", "news", "news_added", "status",
-    "chance_of_playing_next_round", "chance_of_playing_this_round",
-    "transfers_in_event", "transfers_out_event",
-]
 
 SNAPSHOT_ELEMENT_SCHEMA = T.StructType(
     [
@@ -81,28 +73,6 @@ def players_status_stream(snapshots: DataFrame, *, watermark: str = "1 hour") ->
     return exploded.withWatermark("snapshot_ts", watermark).dropDuplicates(
         ["snapshot_ts", "player_id"]
     )
-
-
-def windowed_event_counts(
-    events: DataFrame, *, ts: str = "ts", window: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event type — the canonical
-    late-data-tolerant streaming aggregation (works identically as a batch
-    expression; tests assert batch/stream equivalence)."""
-    return (
-        events.withWatermark(ts, watermark)
-        .groupBy(F.window(F.col(ts), window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-
-
-def enrich_stream_with_dim(stream: DataFrame, dim: DataFrame, on: str, *, how: str = "left") -> DataFrame:
-    """Stream-static join: enrich a stream with a (broadcastable) dimension
-    — the standard shape for attaching user/team attributes to events in
-    flight. The static side is re-read per micro-batch, so a slowly
-    changing dimension picks up updates without restarting the query."""
-    return stream.join(F.broadcast(dim), on, how)
 
 
 def run_to_parquet(stream: DataFrame, *, path: str, checkpoint: str, mode: str = "append") -> None:

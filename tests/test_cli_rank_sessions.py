@@ -1,25 +1,26 @@
-"""ETL CLI, scalable global rank, sessionization + custom stateful op."""
+"""ETL CLI and the scalable global rank."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
-import pytest
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.catalog import load as cat_load
 from fantasy_premier_league_spark.operators.rank import global_rank
-from fantasy_premier_league_spark.streaming import sessions as SE
 from tests import fpl_fixtures
+
+#: root of this checkout; the CLI subprocess runs from it, so it imports
+#: this tree's package
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_adaptive_timeout(base: float = 300.0) -> float:
     """Scale the subprocess budget by the host's current 1-min load per
     CPU — a fixed 300s failed under judge-induced contention (VERDICT
     r10 item 3) while passing 5/5 in isolation. Capped at 4x base."""
-    import os
-
     try:
         load_per_cpu = os.getloadavg()[0] / max(os.cpu_count() or 1, 1)
     except OSError:
@@ -36,9 +37,9 @@ class TestEtlCli:
         proc = subprocess.run(
             [sys.executable, "-m", "fantasy_premier_league_spark.etl.run",
              "--data-input", str(indir), "--data-output", str(outdir), "--raise-errors"],
-            capture_output=True, text=True, timeout=_load_adaptive_timeout(), cwd="/root/repo",
+            capture_output=True, text=True, timeout=_load_adaptive_timeout(), cwd=_REPO,
             env={"PATH": "/usr/bin:/bin", "HOME": "/root",
-                 "JAVA_HOME": __import__("os").environ.get("JAVA_HOME", ""),
+                 "JAVA_HOME": os.environ.get("JAVA_HOME", ""),
                  "SPARK_GRAFT_CPUS": "4", "SPARK_GRAFT_SHUFFLE_PARTITIONS": "4"},
         )
         assert proc.returncode == 0, proc.stderr[-2000:]
@@ -64,70 +65,3 @@ class TestGlobalRank:
         assert got == exp
         # ranks are a contiguous 1..N sequence
         assert sorted(got.values()) == list(range(1, len(got) + 1))
-
-
-class TestSessions:
-    def test_session_window_batch_semantics(self, spark):
-        import datetime as dt
-
-        t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-        rows = [
-            (1, t0, 1.0), (1, t0 + dt.timedelta(minutes=10), 2.0),  # same session
-            (1, t0 + dt.timedelta(hours=2), 5.0),                    # new session
-            (2, t0, 1.5),
-        ]
-        ev = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        out = SE.session_event_counts(ev, gap="30 minutes")
-        got = {(r["user_id"], str(r["session_start"])): (r["n_events"], r["total_value"])
-               for r in out.collect()}
-        assert got[(1, "2024-01-01 10:00:00")] == (2, 3.0)
-        assert got[(1, "2024-01-01 12:00:00")] == (1, 5.0)
-        assert got[(2, "2024-01-01 10:00:00")] == (1, 1.5)
-
-    def test_stream_static_dim_enrichment(self, spark, tmp_path):
-        from fantasy_premier_league_spark.streaming.snapshots import enrich_stream_with_dim
-
-        src = tmp_path / "enrich_src"
-        ev = cat_load(spark, "/root/testdata/sf0.001", "events").select("event_id", "user_id", "value")
-        ev.limit(100).write.mode("overwrite").parquet(str(src))
-        cust = cat_load(spark, "/root/testdata/sf0.001", "customer").select(
-            F.col("c_custkey").alias("user_id"), "c_mktsegment"
-        )
-        stream = spark.readStream.schema(ev.schema).parquet(str(src))
-        enriched = enrich_stream_with_dim(stream, cust, "user_id")
-        q = (
-            enriched.writeStream.format("memory").queryName("enriched")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT count(*) n, count(c_mktsegment) seg FROM enriched").first()
-        assert got["n"] == 100 and got["seg"] == 100  # every event enriched
-
-    def test_apply_in_pandas_with_state_stream(self, spark, tmp_path):
-        # stage a small event stream as parquet files
-        src = tmp_path / "stream_src"
-        ev = cat_load(spark, "/root/testdata/sf0.001", "events").select("user_id", "ts", "value")
-        ev.limit(200).write.mode("overwrite").parquet(str(src))
-        stream = spark.readStream.schema(ev.schema).parquet(str(src))
-        counted = SE.running_user_state(stream)
-        q = (
-            counted.writeStream.format("memory")
-            .queryName("user_state")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # availableNow never ends a ProcessingTimeTimeout query: stop it once drained
-        try:
-            for _ in range(240):  # up to 120 s, until a batch reads no rows
-                assert not q.awaitTermination(0.5), q.exception()
-                if any(p["numInputRows"] == 0 for p in q.recentProgress):
-                    break
-        finally:
-            q.stop()
-        got = {r["user_id"]: (r["n_events"], round(r["total_value"], 2))
-               for r in spark.sql("SELECT * FROM user_state").collect()}
-        expected = {r["user_id"]: (r["n"], round(r["s"], 2))
-                    for r in ev.limit(200).groupBy("user_id")
-                    .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")).collect()}
-        assert got == expected

@@ -14,10 +14,10 @@ from fantasy_premier_league_spark.operators.cache import release_operator_caches
 from tools.check_parity import compare, duck_connect
 
 SF = "/root/testdata/sf0.001"
-# a call to one of the 9 sketch operators of operators/dedup.py
+# a call to one of the 8 sketch operators of operators/dedup.py
 _CALLS_SKETCH = re.compile(
     r"\b(?:containment_sketch_arrays|containment_lsh_pairs|minhash_signatures(?:_from_arrays)?"
-    r"|minhash_dedup_pairs|minhash_incremental_pairs(?:_indexed)?|simhash(?:_near_dup_pairs)?)\("
+    r"|minhash_dedup_pairs|minhash_incremental_pairs|simhash(?:_near_dup_pairs)?)\("
 )
 SKETCH_QUERIES = [n for n, fn in E.queries().items() if _CALLS_SKETCH.search(inspect.getsource(fn))]
 

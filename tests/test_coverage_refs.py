@@ -8,6 +8,7 @@ accurate at the time they were written) to a registered query.
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 
@@ -132,3 +133,125 @@ def test_doc_py_paths_exist():
             if not ok:
                 missing.append(f"{doc}: {path}")
     assert not missing, f"docs name *.py paths that do not exist: {missing}"
+
+
+#: Top-level package defs that no root reaches but that stay: each maps to a
+#: reference capability (its COVERAGE.md ID) or is a test-side reference.
+#: Their private helpers need no entry — an entry is a root of the scan.
+_REACH_KEEP = {
+    "etl/features.py:point_in_time_features": "training-data additions: point-in-time features",
+    "etl/fifa.py:read_fifa_csv": "S6",
+    "etl/fifa.py:clean_fifa": "F4/F6",
+    "etl/quality.py:check_unique_pk": "Q1",
+    "etl/quality.py:check_notnull_pk": "Q2",
+    "etl/quality.py:validated_join": "Q4 (J6/J7)",
+    "etl/statuses.py:current_gameweek": "training-data additions: players_statuses log",
+    "etl/statuses.py:players_statuses_snapshot": "training-data additions: players_statuses log",
+    "functions/features.py:group_mean_impute": "A6",
+    "functions/features.py:missingness_profile": "A8",
+    "functions/features.py:one_hot": "U5/F20",
+    "functions/features.py:bin_values": "F21",
+    "functions/features.py:tag_columns": "F23",
+    "ml/impute.py:regression_impute_loglog": "M14",
+    "ml/percentage.py:PercentageCalc": "M7 (A2)",
+    "ml/persist.py:save_model_with_metadata": "S14",
+    "ml/persist.py:load_model_with_metadata": "S14",
+    "ml/pipeline.py:choose_pca_k": "M2",
+    "ml/pipeline.py:grid_search_grouped": "M8",
+    "ml/pipeline.py:baseline_prediction": "M12",
+    "ml/splits.py:with_group_fold": "M9",
+    "ml/splits.py:cross_validate_grouped": "M9",
+    "ml/stats.py:correlation_matrix": "A13",
+    "ml/stats.py:top_correlations": "O5",
+    "ml/text.py:topic_features": "M13",
+    "operators/dedup.py:exact_dedup": "A12",
+    "operators/similarity.py:cosine_pairs_block": "test reference for cosine_pairs_grid (test_scale_ops)",
+    "plancheck.py:unpartitioned_window_count": "test-side plan invariant helper",
+    "sources/files.py:timestamped_name": "S12",
+    "sources/files.py:latest_snapshot": "S13",
+    "sources/files.py:snapshot_listing": "S15",
+    "sources/jdbc.py:read_query": "S8",
+    "sources/jdbc.py:align_columns": "S9",
+    "sources/jdbc.py:batch_overwrite": "S9",
+    "sources/jdbc.py:batch_append": "S10",
+    "sources/jdbc.py:ordered_tables": "S10 (FK-ordered catalog load)",
+    "sources/jdbc.py:load_catalog": "S10 (FK-ordered catalog load)",
+    "sources/jdbc.py:audit_record": "S11",
+    "sources/rest.py:fetch_document": "S1",
+    "sources/rest.py:fetch_keyed_documents": "S2",
+}
+
+
+def _used_names(node, aliases: dict[str, set[str]]) -> set[str]:
+    """Names and attribute names ``node`` uses (strings and docstrings never
+    count), plus the original name behind any ``import ... as`` alias."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+    return out.union(*(aliases.get(n, ()) for n in out))
+
+
+def test_package_defs_reachable():
+    """Every top-level package def is reachable from a root or kept on
+    ``_REACH_KEEP`` with its reason, so code that no query, tool or
+    benchmark calls cannot pile up behind tests alone.
+
+    Roots: ``@query``-registered functions, module-level package code,
+    ``__spark_entry__.py``, ``tools/*.py`` and perfbench's non-test files.
+    A def becomes reachable when reached code uses its NAME anywhere, so
+    the scan over-approximates: a shared name can keep dead code alive,
+    but live code is never flagged — as long as nothing dispatches to a
+    package def through a string (``getattr`` by name), which the scan
+    cannot see."""
+    import glob
+
+    pkg = os.path.join(_REPO, "fantasy_premier_league_spark")
+    trees = {p: ast.parse(open(p, encoding="utf-8").read()) for p in glob.glob(f"{pkg}/**/*.py", recursive=True)}
+    others = [os.path.join(_REPO, "__spark_entry__.py"), *glob.glob(f"{_REPO}/tools/*.py")]
+    others += [p for p in glob.glob(f"{_REPO}/perfbench/*.py") if not os.path.basename(p).startswith("test_")]
+    other_trees = [ast.parse(open(p, encoding="utf-8").read()) for p in others]
+
+    aliases: dict[str, set[str]] = {}
+    for tree in [*trees.values(), *other_trees]:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ImportFrom):
+                for a in n.names:
+                    if a.asname:
+                        aliases.setdefault(a.asname, set()).add(a.name)
+
+    defs, reached = {}, set()
+    for path, tree in trees.items():
+        for st in tree.body:
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                key = f"{os.path.relpath(path, pkg)}:{st.name}"
+                defs[key] = (st.name, _used_names(st, aliases))
+                if any(
+                    isinstance(d, ast.Call) and getattr(d.func, "id", None) == "query"
+                    for d in st.decorator_list
+                ):
+                    reached.add(st.name)
+            elif not isinstance(st, (ast.Import, ast.ImportFrom)):
+                reached |= _used_names(st, aliases)
+    for tree in other_trees:
+        reached |= _used_names(tree, aliases)
+
+    def close(names: set[str]) -> set[str]:
+        names, live = set(names), set()
+        while True:
+            new = {k for k, (name, _) in defs.items() if k not in live and name in names}
+            if not new:
+                return live
+            live |= new
+            for k in new:
+                names |= defs[k][1]
+
+    missing = sorted(set(_REACH_KEEP) - set(defs))
+    assert not missing, f"keep-list names no def: {missing}"
+    redundant = sorted(set(_REACH_KEEP) & close(reached))
+    assert not redundant, f"reachable, drop from keep-list: {redundant}"
+    live = close(reached | {defs[k][0] for k in _REACH_KEEP})
+    dead = sorted(set(defs) - live)
+    assert not dead, f"package defs no root reaches (delete them or keep-list them with a reason): {dead}"

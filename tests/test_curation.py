@@ -16,11 +16,14 @@ def _docs(spark, rows):
 
 
 class TestDecontaminate:
+    """Corpus and eval set are one frame split by ``eval_pred``: ids >= 100
+    are eval docs."""
+
     def test_copied_doc_fully_contaminated(self, spark):
-        eval_df = _docs(spark, [(100, "a b c d e f g h")])
-        corpus = _docs(
+        docs = _docs(
             spark,
             [
+                (100, "a b c d e f g h"),  # the eval doc
                 (1, "a b c d e f g h"),  # verbatim eval copy
                 (2, "x y z w v u t s"),  # disjoint
                 (3, "a b c d e zz yy xx"),  # one shared 5-gram
@@ -28,19 +31,19 @@ class TestDecontaminate:
         )
         out = {
             r["id"]: r
-            for r in C.decontaminate_overlap(
-                corpus, eval_df, "doc_id", "text", n=5, threshold=0.2
+            for r in C.decontaminate_overlap_split(
+                docs, F.col("id") >= 100, "doc_id", "text", n=5, threshold=0.2
             ).collect()
         }
+        assert set(out) == {1, 2, 3}  # eval docs never reach the corpus side
         assert out[1]["overlap"] == pytest.approx(1.0)
         assert out[1]["contaminated"] == 1
         assert out[2]["n_hit"] == 0 and out[2]["contaminated"] == 0
         assert out[3]["n_hit"] == 1 and out[3]["n_shingles"] == 4
 
     def test_short_docs_have_no_shingles(self, spark):
-        corpus = _docs(spark, [(1, "too short")])
-        eval_df = _docs(spark, [(2, "a b c d e")])
-        assert C.decontaminate_overlap(corpus, eval_df, "doc_id", "text", n=5).count() == 0
+        docs = _docs(spark, [(1, "too short"), (102, "a b c d e")])
+        assert C.decontaminate_overlap_split(docs, F.col("id") >= 100, "doc_id", "text", n=5).count() == 0
 
 
 class TestPii:
@@ -226,33 +229,6 @@ class TestBigramLogprob:
         r = C.bigram_logprob(df, "doc_id", "text").collect()[0]
         want = (2 * math.log(2.5 / 3.0) + math.log(1.5 / 2.0)) / 3
         assert r["avg_logprob"] == pytest.approx(round(want, 6), abs=1e-6)
-
-
-class TestShardedCorpusWriter:
-    def test_layout_row_cap_and_roundtrip(self, spark, tmp_path):
-        import os
-
-        from fantasy_premier_league_spark.sources.warehouse import write_sharded_corpus
-
-        df = _docs(spark, [(i, "w " * 40) for i in range(40)])
-        packed = C.pack_sequences(df, "doc_id", "text", budget=100, sub_buckets=2)
-        out = str(tmp_path / "corpus")
-        write_sharded_corpus(
-            packed, out, shard_cols=["pack_bucket", "shard_id"], max_records_per_file=3
-        )
-        # directory-per-shard layout
-        assert any(d.startswith("pack_bucket=") for d in os.listdir(out))
-        back = spark.read.parquet(out)
-        assert back.count() == 40
-        # row cap enforced: no file holds more than 3 records
-        from pyspark.sql import functions as SF
-
-        per_file = back.groupBy(SF.input_file_name()).count().collect()
-        assert max(r["count"] for r in per_file) <= 3
-        # partition pruning: a single-shard read touches one directory
-        one = back.filter("pack_bucket = 0 AND shard_id = 0")
-        files = {r[0] for r in one.select(SF.input_file_name()).distinct().collect()}
-        assert all("pack_bucket=0" in f and "shard_id=0" in f for f in files)
 
 
 class TestChunkTokens:

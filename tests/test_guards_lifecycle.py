@@ -72,57 +72,6 @@ class TestBucketGuard:
         assert any("minhash_incremental_pairs" in r.message for r in caplog.records)
 
 
-class TestSignatureIndexStore:
-    def test_indexed_probe_matches_rebanded_form_and_prunes(self, spark, tmp_path):
-        from fantasy_premier_league_spark.catalog import load
-
-        docs = load(spark, "/root/testdata/sf0.001", "documents")
-        index_docs = docs.filter(F.col("doc_id") % 3 != 0)
-        # a small nightly batch: pruning should keep the probe's store scan
-        # well under the full partition tree
-        new_docs = docs.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") < 30))
-        index_sigs = D.minhash_signatures(index_docs, "doc_id", "text")
-        idx = str(tmp_path / "sig_index")
-        D.write_signature_index(index_sigs, idx, bands=16, band_buckets=64)
-
-        expected = {
-            tuple(r)
-            for r in D.minhash_incremental_pairs(
-                new_docs, index_sigs, "doc_id", "text", est_threshold=0.3
-            ).collect()
-        }
-        got_df = D.minhash_incremental_pairs_indexed(
-            spark,
-            new_docs,
-            idx,
-            "doc_id",
-            "text",
-            bands=16,
-            band_buckets=64,
-            est_threshold=0.3,
-        )
-        assert {tuple(r) for r in got_df.collect()} == expected
-        assert expected  # the comparison is not vacuous
-
-        # the probe must READ ONLY the touched band_pk directories: replay
-        # its static partition filter and compare scanned files vs the
-        # whole store
-        nb = D._banded(
-            D.minhash_signatures(new_docs, "doc_id", "text"), 16
-        ).withColumn("band_pk", D._band_pk(64))
-        touched = sorted(
-            r["band_pk"] for r in nb.select("band_pk").distinct().collect()
-        )
-        store = spark.read.parquet(f"{idx}/bands")
-        pruned = store.filter(F.col("band_pk").isin(touched))
-        # inputFiles() ignores pruning; count the files actually read
-        n_pruned = pruned.select(F.input_file_name()).distinct().count()
-        n_all = store.select(F.input_file_name()).distinct().count()
-        assert 0 < n_pruned < n_all
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "band_pk" in plan
-
-
 def _persistent_ids(spark) -> set[int]:
     """Ids of currently persisted RDDs. Id SETS, not counts: Spark's
     ContextCleaner may concurrently unpersist other tests' garbage-

@@ -351,10 +351,7 @@ class TestMultimodal:
         rows = [(1, b"abc" * 500), (2, b"xyz" * 900)]
         return spark.createDataFrame(rows, "id long, payload binary")
 
-    def test_meta_and_fake_decode(self, payloads):
-        meta = multimodal.attach_media_meta(payloads, "payload", modality="image", mime="image/png")
-        m = {r["id"]: r["media_meta"] for r in meta.collect()}
-        assert m[1]["n_bytes"] == 1500 and m[1]["modality"] == "image"
+    def test_fake_decode(self, payloads):
         feats = multimodal.extract_features(payloads, "id", "payload", decoder=multimodal.fake_image_decoder)
         got = {r["id"]: r["features"] for r in feats.collect()}
         assert len(got[1]) == multimodal.FEATURE_DIM
@@ -367,137 +364,6 @@ class TestMultimodal:
     def test_default_decoder_raises(self, payloads):
         with pytest.raises(Exception, match="NotImplementedError|codecs"):
             multimodal.extract_features(payloads, "id", "payload").collect()
-
-    @staticmethod
-    def _make_png(arr, color_type: int, filter_type: int) -> bytes:
-        """Minimal PNG encoder (8-bit, chosen per-row filter) so every
-        unfilter branch is exercised against real spec-conformant bytes."""
-        import struct
-        import zlib
-
-        import numpy as np
-
-        h, w, ch = arr.shape
-        bpp = ch
-        raw = bytearray()
-        prev = np.zeros(w * ch, dtype=np.int32)
-        for y in range(h):
-            line = arr[y].reshape(-1).astype(np.int32)
-            raw.append(filter_type)
-            for x in range(w * ch):
-                a = int(line[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                if filter_type == 0:
-                    pred = 0
-                elif filter_type == 1:
-                    pred = a
-                elif filter_type == 2:
-                    pred = b
-                elif filter_type == 3:
-                    pred = (a + b) // 2
-                else:  # paeth
-                    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
-                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                raw.append((int(line[x]) - pred) & 0xFF)
-            prev = line
-
-        def chunk(ctype: bytes, body: bytes) -> bytes:
-            return (
-                struct.pack(">I", len(body))
-                + ctype
-                + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-            )
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
-
-    @staticmethod
-    def _make_bmp(arr) -> bytes:
-        """Uncompressed 24-bit bottom-up BMP with 4-byte row padding."""
-        import struct
-
-        h, w, _ = arr.shape
-        stride = ((24 * w + 31) // 32) * 4
-        rows = bytearray()
-        for y in range(h - 1, -1, -1):  # bottom-up
-            row = bytearray()
-            for x in range(w):
-                r, g, b = arr[y, x]
-                row += bytes([b, g, r])  # BGR on disk
-            row += b"\x00" * (stride - len(row))
-            rows += row
-        off = 14 + 40
-        header = b"BM" + struct.pack("<IHHI", off + len(rows), 0, 0, off)
-        dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(rows), 2835, 2835, 0, 0)
-        return header + dib + bytes(rows)
-
-    def test_real_decoders_recover_exact_pixels(self):
-        import numpy as np
-
-        rng = np.random.default_rng(7)
-        img = rng.integers(0, 256, size=(5, 3, 3), dtype=np.uint8)
-        # every PNG filter type must unapply back to the same pixels
-        for ftype in range(5):
-            png = self._make_png(img, color_type=2, filter_type=ftype)
-            assert (multimodal.decode_image(png) == img).all(), f"filter {ftype}"
-        assert (multimodal.decode_image(self._make_bmp(img)) == img).all()
-        ppm = b"P6\n# comment\n3 5\n255\n" + img.tobytes()
-        assert (multimodal.decode_image(ppm) == img).all()
-        # grayscale PNG replicates to RGB; RGBA drops alpha
-        gray = rng.integers(0, 256, size=(4, 4, 1), dtype=np.uint8)
-        g3 = multimodal.decode_image(self._make_png(gray, color_type=0, filter_type=4))
-        assert (g3 == np.repeat(gray, 3, axis=2)).all()
-        rgba = rng.integers(0, 256, size=(4, 4, 4), dtype=np.uint8)
-        a3 = multimodal.decode_image(self._make_png(rgba, color_type=6, filter_type=2))
-        assert (a3 == rgba[:, :, :3]).all()
-
-    def test_real_decode_through_mapinpandas_stage(self, spark):
-        import numpy as np
-
-        solid = np.full((4, 6, 3), [255, 0, 0], dtype=np.uint8)  # 6x4 pure red
-        png = self._make_png(solid, color_type=2, filter_type=4)
-        bmp = self._make_bmp(solid)
-        df = spark.createDataFrame(
-            [(1, png), (2, bmp), (3, b"not an image")], "id long, payload binary"
-        )
-        out = {
-            r["id"]: r
-            for r in multimodal.extract_features_quarantined(
-                df, "id", "payload", decoder=multimodal.image_stats_decoder
-            ).collect()
-        }
-        for i in (1, 2):  # PNG and BMP agree on the same pixels
-            w, h, mr, mg, mb, gstd, gmin, gmax = out[i]["features"]
-            assert (w, h) == (6.0, 4.0)
-            assert (mr, mg, mb) == (1.0, 0.0, 0.0)
-            assert gstd == 0.0 and gmin == gmax == pytest.approx(85 / 255)
-            assert out[i]["decode_error"] is None
-        # unrecognized bytes quarantine instead of killing the stage
-        assert out[3]["features"] is None
-        assert "unrecognized image magic" in out[3]["decode_error"]
-
-    def test_quarantine_routes_failures_to_dead_letter(self, payloads):
-        def flaky(payload: bytes):
-            if payload.startswith(b"xyz"):
-                raise ValueError("corrupt header")
-            return multimodal.fake_image_decoder(payload)
-
-        out = {r["id"]: r for r in multimodal.extract_features_quarantined(
-            payloads, "id", "payload", decoder=flaky).collect()}
-        # good row decodes normally
-        assert out[1]["decode_error"] is None
-        assert len(out[1]["features"]) == multimodal.FEATURE_DIM
-        # corrupt row is quarantined, not fatal
-        assert out[2]["features"] is None
-        assert "ValueError: corrupt header" in out[2]["decode_error"]
-        assert out[2]["n_bytes"] == 2700
 
     def test_frame_sampling_shape(self, payloads):
         frames = multimodal.sample_frames(payloads, "id", "payload", every_n_bytes=1000, max_frames=4)
@@ -720,31 +586,6 @@ class TestZOrder:
         #   = 1 + 2 + 4 + 0 + 0 + 32 = 39
         got = df.select(zorder_key(F.col("x"), F.col("y")).alias("z")).first()["z"]
         assert got == 39
-
-    def test_write_zordered_clusters_both_dims(self, spark, tmp_path):
-        import pyarrow.parquet as pq
-        import os
-
-        from fantasy_premier_league_spark.sources.warehouse import write_zordered
-
-        # 32x32 grid, one row per cell
-        rows = [(x, y) for x in range(32) for y in range(32)]
-        df = spark.createDataFrame(rows, "x long, y long")
-        out = str(tmp_path / "z")
-        write_zordered(df, out, "x", "y", bits=5, n_files=8)
-        spans = []
-        for f in os.listdir(out):
-            if not f.endswith(".parquet"):
-                continue
-            t = pq.read_table(os.path.join(out, f))
-            xs, ys = t.column("x").to_pylist(), t.column("y").to_pylist()
-            spans.append(((max(xs) - min(xs)), (max(ys) - min(ys))))
-        # Z-order clustering: every file must cover a narrow range in BOTH
-        # dimensions (a lexicographic (x,y) sort would leave the y span at
-        # the full 31 in every file)
-        assert len(spans) >= 4
-        assert all(sx <= 16 for sx, _ in spans)
-        assert all(sy <= 16 for _, sy in spans)
 
 
 class TestBpeTokenCount:

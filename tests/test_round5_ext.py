@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.operators.bpe import bpe_apply, bpe_train_merges
 from fantasy_premier_league_spark.operators.quantize import int8_quantize
@@ -254,102 +253,10 @@ class TestEmptyInputs:
         assert bpe_train_merges(empty_docs, "doc_id", "text").collect() == []
 
 
-class TestStreamingDsirGate:
-    def test_stream_routing_matches_batch_scoring(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from fantasy_premier_league_spark.operators.selection import (
-            dsir_bucket_model,
-            dsir_score,
-        )
-        from fantasy_premier_league_spark.streaming.quality import run_dsir_gate
-
-        # offline: train the model on a static reference corpus
-        ref = _docs(
-            spark,
-            [(i, "alpha beta alpha beta", True) for i in range(5)]
-            + [(10 + i, "gamma delta gamma delta", False) for i in range(5)],
-        )
-        model = dsir_bucket_model(ref, "text", "is_t", n_buckets=64)
-
-        src = tmp_path / "src"
-        src.mkdir()
-
-        def write_batch(name, rows):
-            pq.write_table(
-                pa.table(
-                    {
-                        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                        "text": pa.array([r[1] for r in rows]),
-                    }
-                ),
-                str(src / name),
-            )
-
-        def run_once():
-            stream = spark.readStream.schema("doc_id long, text string").parquet(
-                str(src)
-            )
-            q = run_dsir_gate(
-                stream,
-                model,
-                accept_path=str(tmp_path / "acc"),
-                reject_path=str(tmp_path / "rej"),
-                checkpoint=str(tmp_path / "ck"),
-                n_buckets=64,
-            )
-            q.awaitTermination(180)
-
-        batches = [
-            [(100, "alpha beta alpha"), (101, "gamma delta gamma")],
-            [(102, "beta beta alpha"), (103, "")],  # 103 has no tokens → reject
-        ]
-        write_batch("b1.parquet", batches[0])
-        run_once()
-        write_batch("b2.parquet", batches[1])
-        run_once()
-
-        acc = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "acc")).collect()}
-        rej = {r["doc_id"] for r in spark.read.parquet(str(tmp_path / "rej")).collect()}
-        assert acc | rej == {100, 101, 102, 103} and not (acc & rej)
-
-        # the stream's routing must equal batch scoring on the union
-        all_docs = spark.createDataFrame(
-            [r for b in batches for r in b], "doc_id long, text string"
-        )
-        scores = {
-            r["doc_id"]: r["dsir_score"]
-            for r in dsir_score(all_docs, "doc_id", "text", model, n_buckets=64).collect()
-        }
-        expect_acc = {d for d, s in scores.items() if s >= 0.0}
-        assert acc == expect_acc
-        assert 103 in rej  # token-less doc scored null → rejected
-
-
 class TestArtifactRoundtrip:
-    def test_dsir_model_and_bpe_merges_survive_parquet(self, spark, tmp_path):
-        """Both round-5 model artifacts (the 256-row DSIR bucket model and
-        the 3-row merge table) persist like any warehouse table and score
-        identically after reload — the deploy path for the streaming gate
-        and bpe_apply."""
-        from fantasy_premier_league_spark.operators.selection import (
-            dsir_bucket_model,
-            dsir_score,
-        )
-
-        ref = _docs(
-            spark,
-            [(1, "alpha beta alpha", True), (2, "gamma delta gamma", False)],
-        )
-        model = dsir_bucket_model(ref, "text", "is_t", n_buckets=32)
-        model.write.parquet(str(tmp_path / "dsir_model"))
-        reloaded = spark.read.parquet(str(tmp_path / "dsir_model"))
-        pool = _docs(spark, [(9, "alpha gamma beta", False)])
-        a = dsir_score(pool, "doc_id", "text", model, n_buckets=32).collect()
-        b = dsir_score(pool, "doc_id", "text", reloaded, n_buckets=32).collect()
-        assert [r.asDict() for r in a] == [r.asDict() for r in b]
-
+    def test_bpe_merges_survive_parquet(self, spark, tmp_path):
+        """The learned merge table persists like any warehouse table and
+        encodes identically after reload — the deploy path for bpe_apply."""
         docs = spark.createDataFrame([(1, "banana bandana")], BPE_SCHEMA)
         merges = bpe_train_merges(docs, "doc_id", "text", n_merges=2)
         merges.write.parquet(str(tmp_path / "merges"))
@@ -512,146 +419,3 @@ class TestWeightedSample:
         # deterministic: a second run returns the identical sample
         again = weighted_sample(df, "doc_id", "quality", k=40).collect()
         assert [r.asDict() for r in again] == [r.asDict() for r in got]
-
-
-class TestStreamingDecontaminateGate:
-    def test_stream_routing_matches_batch_query(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        import pytest as _pytest
-
-        from fantasy_premier_league_spark.operators.similarity import (
-            semantic_decontaminate,
-        )
-        from fantasy_premier_league_spark.streaming.decontaminate import (
-            run_decontaminate_gate,
-        )
-
-        # frozen eval set: two orthogonal directions
-        eval_df = spark.createDataFrame(
-            [(900, [1.0, 0.0, 0.0]), (901, [0.0, 1.0, 0.0])],
-            "vec_id long, embedding array<float>",
-        )
-
-        src = tmp_path / "src"
-        src.mkdir()
-
-        def write_batch(name, rows):
-            pq.write_table(
-                pa.table(
-                    {
-                        "vec_id": pa.array([r[0] for r in rows], pa.int64()),
-                        "embedding": pa.array(
-                            [r[1] for r in rows], pa.list_(pa.float32())
-                        ),
-                    }
-                ),
-                str(src / name),
-            )
-
-        def run_once():
-            stream = spark.readStream.schema(
-                "vec_id long, embedding array<float>"
-            ).parquet(str(src))
-            q = run_decontaminate_gate(
-                stream,
-                eval_df,
-                clean_path=str(tmp_path / "clean"),
-                contaminated_path=str(tmp_path / "dirty"),
-                checkpoint=str(tmp_path / "ck"),
-                threshold=0.9,
-            )
-            q.awaitTermination(180)
-
-        batches = [
-            [(1, [0.99, 0.01, 0.0]), (2, [0.0, 0.0, 1.0])],  # 1 leaks, 2 clean
-            [(3, [0.01, 0.98, 0.0]), (4, None)],  # 3 leaks, 4 null -> fail closed
-        ]
-        write_batch("b1.parquet", batches[0])
-        run_once()
-        write_batch("b2.parquet", batches[1])
-        run_once()
-
-        clean = {r["vec_id"] for r in spark.read.parquet(str(tmp_path / "clean")).collect()}
-        dirty_rows = spark.read.parquet(str(tmp_path / "dirty")).collect()
-        dirty = {r["vec_id"] for r in dirty_rows}
-        assert clean | dirty == {1, 2, 3, 4} and not (clean & dirty)
-        assert dirty == {1, 3, 4}  # 4 fail-closed (null vector)
-        # audit columns survive on the contaminated sink
-        by_id = {r["vec_id"]: r for r in dirty_rows}
-        assert by_id[1]["eval_id"] == 900 and by_id[1]["cosine"] >= 0.9
-        assert by_id[3]["eval_id"] == 901
-
-        # drained stream == the batch operator on the union of scorables
-        all_emb = spark.createDataFrame(
-            [r for b in batches for r in b if r[1] is not None],
-            "vec_id long, embedding array<float>",
-        )
-        batch_verdicts = {
-            r["train_id"]: r["contaminated"]
-            for r in semantic_decontaminate(all_emb, eval_df, threshold=0.9).collect()
-        }
-        assert clean == {i for i, c in batch_verdicts.items() if c == 0}
-
-        # empty eval set is a misconfiguration, not "everything leaks"
-        with _pytest.raises(ValueError):
-            run_decontaminate_gate(
-                spark.readStream.schema("vec_id long, embedding array<float>").parquet(str(src)),
-                eval_df.filter("vec_id < 0"),
-                clean_path=str(tmp_path / "c2"),
-                contaminated_path=str(tmp_path / "d2"),
-                checkpoint=str(tmp_path / "ck2"),
-            )
-
-    def test_duplicate_ids_scored_per_row(self, spark, tmp_path):
-        """ADVICE r12: replayed sources can deliver duplicate ids in one
-        batch. Each PHYSICAL row must be routed on its own vector — a
-        NULL-vector row fails closed even when a clean scorable row
-        shares its id (the gate scores a batch-local surrogate key, not
-        the user id)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from fantasy_premier_league_spark.streaming.decontaminate import (
-            run_decontaminate_gate,
-        )
-
-        eval_df = spark.createDataFrame(
-            [(900, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
-        )
-        src = tmp_path / "src"
-        src.mkdir()
-        pq.write_table(
-            pa.table(
-                {
-                    "vec_id": pa.array([7, 7, 8, 8], pa.int64()),
-                    "embedding": pa.array(
-                        [[0.0, 1.0, 0.0], None, [0.99, 0.01, 0.0], [0.0, 0.0, 1.0]],
-                        pa.list_(pa.float32()),
-                    ),
-                }
-            ),
-            str(src / "b1.parquet"),
-        )
-        stream = spark.readStream.schema(
-            "vec_id long, embedding array<float>"
-        ).parquet(str(src))
-        q = run_decontaminate_gate(
-            stream,
-            eval_df,
-            clean_path=str(tmp_path / "clean"),
-            contaminated_path=str(tmp_path / "dirty"),
-            checkpoint=str(tmp_path / "ck"),
-            threshold=0.9,
-        )
-        q.awaitTermination(180)
-
-        clean = spark.read.parquet(str(tmp_path / "clean")).collect()
-        dirty = spark.read.parquet(str(tmp_path / "dirty")).collect()
-        assert len(clean) + len(dirty) == 4
-        # id 7: clean orthogonal vector routes clean, its NULL twin dirty
-        assert [r["vec_id"] for r in clean if r["embedding"] is not None].count(7) == 1
-        assert [r["vec_id"] for r in dirty if r["embedding"] is None] == [7]
-        # id 8: leaking vector dirty, orthogonal vector clean
-        assert sorted(r["vec_id"] for r in clean) == [7, 8]
-        assert sorted(r["vec_id"] for r in dirty) == [7, 8]

@@ -425,23 +425,6 @@ class TestProductQuantization:
                 assert jvm[r["vid"]][j] == c, (r["vid"], j)
 
 
-class TestResizeMedia:
-    def test_resize_shape_and_determinism(self, spark):
-        from fantasy_premier_league_spark.operators.multimodal import resize_media
-        import pyspark.sql.functions as F
-
-        df = spark.createDataFrame([(1, b"abc"), (2, b"x" * 5000)], "id long, payload binary")
-        out = resize_media(df, "id", "payload", target_w=32, target_h=16).collect()
-        by_id = {r.id: r for r in out}
-        assert set(by_id) == {1, 2}
-        for r in out:
-            assert (r.width, r.height) == (32, 16)
-            assert len(r.payload) == (32 * 16) // 64
-        # deterministic across runs
-        again = {r.id: bytes(r.payload) for r in resize_media(df, "id", "payload", target_w=32, target_h=16).collect()}
-        assert {r.id: bytes(r.payload) for r in out} == again
-
-
 class TestBloomPrune:
     """operators/bloom.py — the portable Bloom semi-join reduction
     behind r68 (oracle replays the mask bit-for-bit; these pin the

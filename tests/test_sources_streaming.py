@@ -194,248 +194,6 @@ class TestStreaming:
         finally:
             spark.conf.set(key, restore)
 
-    def test_windowed_counts_match_batch(self, spark):
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        from fantasy_premier_league_spark.catalog import load as cat_load
-
-        ev = cat_load(spark, "/root/testdata/sf0.001", "events")
-        stream_expr = ST.windowed_event_counts(ev, window="1 hour", watermark="2 hours")
-        batch_equiv = (
-            ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("w.start").alias("window_start"), "event_type", "n")
-        )
-        assert sorted(map(tuple, stream_expr.collect())) == sorted(map(tuple, batch_equiv.collect()))
-
-
-class TestStreamStreamJoin:
-    def test_attribution_stream_matches_batch(self, spark, tmp_path):
-        """Stream-stream interval join (availableNow drain) == batch lookback_join."""
-        from fantasy_premier_league_spark.catalog import load as cat_load
-        from fantasy_premier_league_spark.operators.rangejoin import lookback_join
-        from fantasy_premier_league_spark.streaming.joins import attribution_join_stream
-
-        ev = cat_load(spark, "/root/testdata/sf0.001", "events")
-        src = str(tmp_path / "events_src")
-        ev.write.parquet(src)
-
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        anchors = stream.filter(F.col("event_type") == "purchase")
-        joined = attribution_join_stream(stream, anchors, window_seconds=1800)
-        # append-mode streaming agg needs the watermarked event-time column in
-        # the grouping so groups can close; anchor_ts is 1:1 with anchor_id
-        agg = joined.groupBy("anchor_id", "anchor_ts").agg(
-            F.count(F.lit(1)).alias("n_prior")
-        )
-
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        (
-            agg.writeStream.outputMode("append")  # append: watermark closes groups
-            .trigger(availableNow=True)
-            .format("memory")
-            .queryName("attribution_test")
-            .start()
-            .awaitTermination(120)
-        )
-        got = {
-            (r.anchor_id, r.n_prior)
-            for r in spark.sql("SELECT * FROM attribution_test").collect()
-        }
-
-        batch_anchors = ev.filter(F.col("event_type") == "purchase")
-        batch = (
-            lookback_join(ev, batch_anchors, window_seconds=1800, bucket_seconds=1800)
-            .groupBy("anchor_id")
-            .agg(F.count(F.lit(1)).alias("n_prior"))
-        )
-        want = {(r.anchor_id, r.n_prior) for r in batch.collect()}
-        # availableNow + watermark: groups past the final watermark emit; with
-        # a bounded drain the tail groups may be held back, so assert the
-        # emitted set is a subset and covers most anchors
-        assert got <= want
-        assert len(got) >= int(0.5 * len(want))
-
-
-class TestStreamingDedup:
-    def test_replayed_events_dedup_to_batch_distinct(self, spark, tmp_path):
-        """dropDuplicatesWithinWatermark over a doubled feed == batch distinct."""
-        from fantasy_premier_league_spark.catalog import load as cat_load
-        from fantasy_premier_league_spark.streaming.dedup import dedup_stream
-
-        ev = cat_load(spark, "/root/testdata/sf0.001", "events").limit(300)
-        src = str(tmp_path / "events_dup")
-        ev.write.parquet(src)  # original delivery
-        ev.write.mode("append").parquet(src)  # full replay (every row twice)
-
-        stream = spark.readStream.schema(ev.schema).parquet(src)
-        deduped = dedup_stream(stream, ["event_id"], ts="ts", watermark="1 hour")
-        (
-            deduped.writeStream.outputMode("append")
-            .trigger(availableNow=True)
-            .format("memory")
-            .queryName("dedup_stream_test")
-            .start()
-            .awaitTermination(120)
-        )
-        got = spark.sql("SELECT event_id FROM dedup_stream_test").collect()
-        ids = [r.event_id for r in got]
-        assert len(ids) == len(set(ids)), "a replayed event slipped through"
-        assert set(ids) == {r.event_id for r in ev.collect()}
-
-    def test_content_dedup_drops_same_text_under_new_ids(self, spark, tmp_path):
-        from fantasy_premier_league_spark.streaming.dedup import content_dedup_stream
-
-        rows = [
-            (1, "2024-01-01 00:00:00", "Hello   World"),
-            (2, "2024-01-01 00:00:10", "hello world"),  # same normalized content
-            (3, "2024-01-01 00:00:20", "something else"),
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, ts string, text string").withColumn(
-            "ts", F.to_timestamp("ts")
-        )
-        src = str(tmp_path / "docs_src")
-        df.write.parquet(src)
-        stream = spark.readStream.schema(df.schema).parquet(src)
-        out = content_dedup_stream(stream, "text", ts="ts", watermark="10 minutes")
-        (
-            out.writeStream.outputMode("append")
-            .trigger(availableNow=True)
-            .format("memory")
-            .queryName("content_dedup_test")
-            .start()
-            .awaitTermination(120)
-        )
-        kept = spark.sql("SELECT doc_id FROM content_dedup_test").collect()
-        kept_ids = sorted(r.doc_id for r in kept)
-        assert len(kept_ids) == 2 and 3 in kept_ids
-        assert len({1, 2} & set(kept_ids)) == 1  # exactly one of the dup pair survives
-
-
-class TestNearDupIngestStream:
-    def test_two_batches_dedup_within_and_across_via_index(self, spark, tmp_path):
-        """foreachBatch near-dup ingest: batch-internal LSH collapse, then a
-        probe of the persisted band-partitioned index; survivors append to
-        corpus + index so batch 2 dedups against batch 1's survivors."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from fantasy_premier_league_spark.streaming.dedup import run_near_dup_ingest
-
-        src = tmp_path / "src"
-        src.mkdir()
-        base = "quick brown fox jumps over the lazy dog near the river bank today"
-        filler = "completely different text about spark parquet columns and shuffles here now"
-
-        def write_batch(name, rows):
-            pq.write_table(
-                pa.table(
-                    {
-                        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                        "text": pa.array([r[1] for r in rows]),
-                    }
-                ),
-                str(src / name),
-            )
-
-        def run_once():
-            stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-            q = run_near_dup_ingest(
-                stream,
-                index_path=str(tmp_path / "idx"),
-                out_path=str(tmp_path / "out"),
-                checkpoint=str(tmp_path / "ck"),
-                est_threshold=0.5,
-            )
-            q.awaitTermination(180)
-
-        # batch 1: docs 1/2 are near-dups of each other, 3 is unique
-        write_batch("b1.parquet", [(1, base), (2, base.replace("today", "tonight")), (3, filler)])
-        run_once()
-        kept1 = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-        assert kept1 == {1, 3}  # higher id of the in-batch pair dropped
-
-        # batch 2: doc 10 is a near-dup of doc 1 (caught ONLY via the
-        # index — doc 1 arrived in the previous batch), 11 is new
-        write_batch(
-            "b2.parquet",
-            [
-                (10, base.replace("quick", "rapid")),
-                (11, "entirely fresh subject matter covering streaming ingestion checkpoints and watermark state"),
-            ],
-        )
-        run_once()
-        kept2 = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-        assert kept2 == {1, 3, 11}
-        # and 11's signature joined the index for future batches
-        idx_ids = {r.id for r in spark.read.parquet(str(tmp_path / "idx" / "sigs")).collect()}
-        assert idx_ids == {1, 3, 11}
-
-    def test_delta_compaction_folds_into_store_and_probe_still_hits(self, spark, tmp_path):
-        """compact_delta_files=2: batch 2 triggers compaction, so the banded
-        rows move from the flat delta into the band_pk-partitioned store —
-        and batch 3's cross-batch near-dup is caught from the COMPACTED
-        store (no delta left), proving probe equivalence across layouts."""
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from fantasy_premier_league_spark.streaming.dedup import run_near_dup_ingest
-
-        src = tmp_path / "src"
-        src.mkdir()
-        base = "quick brown fox jumps over the lazy dog near the river bank today"
-
-        def write_batch(name, rows):
-            pq.write_table(
-                pa.table(
-                    {
-                        "doc_id": pa.array([r[0] for r in rows], pa.int64()),
-                        "text": pa.array([r[1] for r in rows]),
-                    }
-                ),
-                str(src / name),
-            )
-
-        def run_once():
-            stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-            q = run_near_dup_ingest(
-                stream,
-                index_path=str(tmp_path / "idx"),
-                out_path=str(tmp_path / "out"),
-                checkpoint=str(tmp_path / "ck"),
-                est_threshold=0.5,
-                compact_delta_files=2,
-            )
-            q.awaitTermination(180)
-
-        write_batch("b1.parquet", [(1, base)])
-        run_once()
-        # pre-compaction: delta holds batch 1, no partitioned store yet
-        assert os.path.isdir(tmp_path / "idx" / "bands_delta")
-        assert not os.path.isdir(tmp_path / "idx" / "bands")
-
-        write_batch("b2.parquet", [(2, "totally unrelated second subject entirely new words only here")])
-        run_once()
-        # the second delta file crossed the threshold: folded into the
-        # store; the compacted delta files are tombstoned (deleted by the
-        # NEXT batch so this batch's plans keep their lineage valid)
-        assert os.path.isdir(tmp_path / "idx" / "bands")
-        assert os.path.exists(tmp_path / "idx" / "bands_delta_tombstones")
-
-        # batch 3: purges the tombstoned delta files, then the near-dup of
-        # doc 1 must be caught from the COMPACTED store
-        write_batch("b3.parquet", [(10, base.replace("quick", "rapid"))])
-        run_once()
-        assert not os.path.exists(tmp_path / "idx" / "bands_delta_tombstones")
-        from fantasy_premier_league_spark.operators.dedup import _delta_files
-
-        # only batch 3's own delta file survives the purge
-        assert len(_delta_files(str(tmp_path / "idx" / "bands_delta"))) == 1
-        kept = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-        assert kept == {1, 2}
-
 
 class TestFileSinks:
     """S4 (JSON sink) and S7 (CSV sink) round-trips — schema and values
@@ -460,153 +218,3 @@ class TestFileSinks:
         df.write.option("header", True).csv(out)
         back = spark.read.option("header", True).schema(df.schema).csv(out)
         assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
-
-
-class TestKmvDistinctMonitor:
-    def test_two_batch_fold_equals_single_pass(self, spark, tmp_path):
-        """Streaming KMV fold: after two micro-batches the persisted state
-        must be register-identical to a single-pass sketch over the union,
-        and the estimates log must carry one non-decreasing curve per key."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from fantasy_premier_league_spark.operators.incremental import (
-            estimate_kmv,
-            kmv_state,
-        )
-        from fantasy_premier_league_spark.streaming.distinct import (
-            run_kmv_distinct_monitor,
-        )
-
-        src = tmp_path / "src"
-        src.mkdir()
-        k = 32
-
-        def write_batch(name, rows):
-            pq.write_table(
-                pa.table(
-                    {
-                        "grp": pa.array([r[0] for r in rows]),
-                        "user": pa.array([r[1] for r in rows], pa.int64()),
-                    }
-                ),
-                str(src / name),
-            )
-
-        def run_once():
-            stream = spark.readStream.schema("grp string, user long").parquet(
-                str(src)
-            )
-            q = run_kmv_distinct_monitor(
-                stream,
-                keys=["grp"],
-                value_col="user",
-                store_path=str(tmp_path / "store"),
-                checkpoint=str(tmp_path / "ck"),
-                k=k,
-            )
-            q.awaitTermination(180)
-
-        b1 = [("a", i) for i in range(60)] + [("b", i) for i in range(10)]
-        b2 = [("a", i) for i in range(30, 90)] + [("b", i) for i in range(5, 12)]
-        write_batch("b1.parquet", b1)
-        run_once()
-        write_batch("b2.parquet", b2)
-        run_once()
-
-        from fantasy_premier_league_spark.streaming.distinct import read_kmv_state
-
-        state = {
-            r["grp"]: r["kmv_v"]
-            for r in read_kmv_state(spark, str(tmp_path / "store")).collect()
-        }
-        union = spark.createDataFrame(b1 + b2, "grp string, user long")
-        expect = {
-            r["grp"]: r["kmv_v"]
-            for r in kmv_state(union, ["grp"], "user", k=k).collect()
-        }
-        assert state == expect  # register-for-register across the batch fold
-
-        est = spark.read.parquet(str(tmp_path / "store" / "estimates")).collect()
-        by_key = {}
-        for r in est:
-            by_key.setdefault(r["grp"], {})[r["batch_id"]] = r["approx_distinct"]
-        # two batches logged per key, curve non-decreasing, final exact
-        # (both groups stay under k... except 'a' which crosses it)
-        assert set(by_key) == {"a", "b"}
-        for grp, curve in by_key.items():
-            vals = [curve[b] for b in sorted(curve)]
-            assert len(vals) == 2 and vals[0] <= vals[1]
-        assert by_key["b"][max(by_key["b"])] == 12.0  # n < k regime: exact
-        # 'a' has 90 distinct > k=32: estimate within the ~4-sigma bound
-        a_final = by_key["a"][max(by_key["a"])]
-        assert abs(a_final - 90) / 90 < 0.75
-
-    def test_partial_generation_ignored_and_state_survives(self, spark, tmp_path):
-        """Crash atomicity (ADVICE r10): a generation dir without _SUCCESS
-        (crash mid-write) must be invisible — the reader resolves the
-        previous complete generation and the next fold merges into it
-        instead of resetting the curve."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from fantasy_premier_league_spark.operators.incremental import kmv_state
-        from fantasy_premier_league_spark.streaming.distinct import (
-            _complete_generations,
-            read_kmv_state,
-            run_kmv_distinct_monitor,
-        )
-
-        src = tmp_path / "src"
-        src.mkdir()
-        k = 32
-
-        def write_batch(name, rows):
-            pq.write_table(
-                pa.table(
-                    {
-                        "grp": pa.array([r[0] for r in rows]),
-                        "user": pa.array([r[1] for r in rows], pa.int64()),
-                    }
-                ),
-                str(src / name),
-            )
-
-        def run_once(ck):
-            stream = spark.readStream.schema("grp string, user long").parquet(str(src))
-            q = run_kmv_distinct_monitor(
-                stream,
-                keys=["grp"],
-                value_col="user",
-                store_path=str(tmp_path / "store"),
-                checkpoint=str(tmp_path / ck),
-                k=k,
-            )
-            q.awaitTermination(180)
-
-        b1 = [("a", i) for i in range(50)]
-        write_batch("b1.parquet", b1)
-        run_once("ck")
-
-        # simulate a crash mid-write of the NEXT generation: partial dir,
-        # garbage content, no _SUCCESS
-        state_path = tmp_path / "store" / "state"
-        partial = state_path / "gen-00000002"
-        partial.mkdir()
-        (partial / "part-00000.parquet").write_bytes(b"not parquet")
-        assert _complete_generations(str(state_path)) == [1]
-
-        b2 = [("a", i) for i in range(25, 75)]
-        write_batch("b2.parquet", b2)
-        run_once("ck")  # same checkpoint: continues from batch 1
-
-        state = {
-            r["grp"]: r["kmv_v"]
-            for r in read_kmv_state(spark, str(tmp_path / "store")).collect()
-        }
-        union = spark.createDataFrame(b1 + b2, "grp string, user long")
-        expect = {
-            r["grp"]: r["kmv_v"]
-            for r in kmv_state(union, ["grp"], "user", k=k).collect()
-        }
-        assert state == expect  # folded into gen-1, not reset by the partial

@@ -1,8 +1,7 @@
-"""Physical-layout proofs: partition pruning + shuffle-free bucketed joins."""
+"""Physical-layout proof: partitioned writes prune at scan time."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from fantasy_premier_league_spark.catalog import load as cat_load
@@ -22,52 +21,3 @@ class TestPartitionPruning:
         n_days = ev.select("day").distinct().count()
         assert back.count() == ev.filter(F.col("day") == "2024-01-03").count()
         assert n_days > 1  # pruning actually skipped directories
-
-
-class TestBucketedJoin:
-    @pytest.fixture(scope="class")
-    def bucketed(self, spark, tmp_path_factory):
-        import shutil
-
-        warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-        for t in ("li_b", "ord_b"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            # a fresh in-memory metastore forgets old tables, but their
-            # managed locations survive on disk and block re-creation
-            shutil.rmtree(f"{warehouse}/{t}", ignore_errors=True)
-        li = cat_load(spark, "/root/testdata/sf0.001", "lineitem")
-        orders = cat_load(spark, "/root/testdata/sf0.001", "orders")
-        WH.write_bucketed_table(li, "li_b", bucket_col="l_orderkey", n_buckets=8)
-        WH.write_bucketed_table(
-            orders.withColumnRenamed("o_orderkey", "l_orderkey"),
-            "ord_b", bucket_col="l_orderkey", n_buckets=8,
-        )
-        return "li_b", "ord_b"
-
-    def test_join_has_no_shuffle(self, spark, bucketed):
-        left, right = bucketed
-        # force the non-broadcast path: the assertion must prove bucketing
-        # removed the shuffle, not that a broadcast join hid it
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = WH.bucketed_join(spark, left, right, "l_orderkey")
-            joined.collect()
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "SortMergeJoin" in plan
-            assert "Exchange hashpartitioning" not in plan
-            assert joined.count() == 6000
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-    def test_values_match_plain_join(self, spark, bucketed):
-        left, right = bucketed
-        li = cat_load(spark, "/root/testdata/sf0.001", "lineitem")
-        orders = cat_load(spark, "/root/testdata/sf0.001", "orders")
-        expected = li.join(
-            orders, li.l_orderkey == orders.o_orderkey
-        ).agg(F.round(F.sum("l_extendedprice"), 2).alias("s")).first()["s"]
-        got = WH.bucketed_join(spark, left, right, "l_orderkey").agg(
-            F.round(F.sum("l_extendedprice"), 2).alias("s")
-        ).first()["s"]
-        assert got == expected
