@@ -22,9 +22,10 @@ strings here; the transform layer casts them (F2 semantics via try_* =
 null-on-failure, matching pandas errors='coerce').
 
 Each document is parsed once per call and pinned: the parsed document is
-materialized by an eager ``localCheckpoint`` and every returned frame is a
-projection over it, so the catalog's many consumers (transform, PK checks,
-parquet write) read memory instead of re-scanning and re-parsing the JSON.
+materialized by a ``localCheckpoint``, filled by the same job that checks
+the parse, and every returned frame is a projection over it, so the
+catalog's many consumers read memory instead of re-scanning and re-parsing
+the JSON.
 The checkpoint is untracked — Spark's ContextCleaner frees its blocks once
 the last returned frame is unreachable, so no bulk release can cut a frame
 a consumer still holds.
@@ -232,23 +233,27 @@ MAIN_DOC_SCHEMA = T.StructType(
 )
 
 
-def _read_document(spark: SparkSession, path: str, schema: T.DataType, *, strict: bool = True) -> DataFrame:
+def _read_document(spark: SparkSession, path: str, schema: T.DataType) -> DataFrame:
     """Parse a whole JSON document against ``schema`` and pin it: one row per
-    file with the parsed ``doc`` column, materialized by an eager, untracked
+    file with the parsed ``doc`` column, materialized by an untracked
     ``localCheckpoint``.
 
-    ``strict`` guards the silent-corruption mode of ``from_json``: a
-    malformed document parses to null (or, for an object schema, to a
-    struct of nulls) and would give an empty catalog with no error. Non-empty
-    input that fails to parse, or whose top level is not the JSON array or
-    object the schema expects, raises ``ValueError`` naming the path.
+    The checkpoint is lazy and its first action is the parse check below,
+    a full scan, so one job both parses the document and fills the pin
+    (a lazy checkpoint is complete after its first action; see
+    ``operators/cache.py``). The check guards the silent-corruption mode of
+    ``from_json``: a malformed document parses to null (or, for an object
+    schema, to a struct of nulls) and would give an empty catalog with no
+    error. Non-empty input that fails to parse, or whose top level is not
+    the JSON array or object the schema expects, raises ``ValueError``
+    naming the path.
     """
     text = F.col("value")
     shape = F.json_array_length(text) if isinstance(schema, T.ArrayType) else F.json_object_keys(text)
     bad = (F.length(F.trim(text)) > 0) & (F.col("doc").isNull() | shape.isNull())
     parsed = spark.read.text(path, wholetext=True).select(F.from_json(text, schema).alias("doc"), text)
-    pinned = parsed.select("doc", bad.alias("bad")).localCheckpoint(eager=True)
-    if strict and pinned.filter("bad").count():
+    pinned = parsed.select("doc", bad.alias("bad")).localCheckpoint(eager=False)
+    if pinned.filter("bad").count():
         raise ValueError(f"JSON document at {path} is not parseable as the expected schema")
     return pinned.select("doc")
 
@@ -266,13 +271,13 @@ def read_main_json(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     return {key: doc.select(F.explode(f"doc.{key}").alias("r")).select("r.*") for key in _MAIN_LISTS}
 
 
-def read_players_json(spark: SparkSession, path: str, *, strict: bool = True) -> dict[str, DataFrame]:
+def read_players_json(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """players.json: dict keyed by player_id → exploded history / fixtures /
     history_past DataFrames, each carrying ``player_id`` (the dict key,
     reference run_transform.py:251-252). The parsed map is pinned, not the
-    raw text; ``strict=False`` skips the malformed-document check.
+    raw text.
     """
-    doc = _read_document(spark, path, PLAYER_DOC_SCHEMA, strict=strict)
+    doc = _read_document(spark, path, PLAYER_DOC_SCHEMA)
     per_player = doc.select(F.explode("doc").alias("player_id", "doc"))
     out = {}
     for key in ("history", "fixtures", "history_past"):

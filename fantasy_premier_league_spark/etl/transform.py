@@ -1,9 +1,11 @@
 """The 11-table FPL transform catalog, Spark-first.
 
 Semantics mirror etl/run_transform.py (cited per builder); the architecture
-does not: each table is one lazy DataFrame plan (rename → drop → cast →
-join → union → agg), dims broadcast, constraint checks are explicit actions
-in quality.py.
+does not: each builder returns one lazy DataFrame plan (rename → drop → cast
+→ join → union → agg), dims broadcast, constraint checks are explicit actions
+in quality.py. :func:`build_all` runs every builder once and pins its table,
+so the checks and the parquet write read memory instead of recomputing the
+catalog from the parsed documents.
 
 Cross-cutting semantics:
 
@@ -23,6 +25,9 @@ Cross-cutting semantics:
 
 from __future__ import annotations
 
+from concurrent.futures import Future, ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
@@ -370,34 +375,64 @@ PRIMARY_KEYS: dict[str, list[str]] = {
 }
 
 
+def _build_and_pin(build, inputs: list[Future]) -> DataFrame:
+    """Build one table from its input tables' pins and pin it."""
+    return build(*[f.result() for f in inputs]).localCheckpoint(eager=True)
+
+
 def build_all(
     raw_fixtures: DataFrame,
     raw_main: dict[str, DataFrame],
     raw_players: dict[str, DataFrame],
 ) -> dict[str, DataFrame]:
-    """The full 11-table catalog as lazy plans (run_transform.py dataflow)."""
-    fixtures = build_fixtures(raw_fixtures)
-    missing = count_missing_gameweeks(fixtures) > 0
-    gameweeks = build_gameweeks(raw_main["events"])
-    teams = build_teams(raw_main["teams"])
-    positions = build_positions(raw_main["element_types"])
-    players_summary = build_players_summary(raw_main["elements"])
-    prev_seasons = build_players_previous_seasons(raw_players["history_past"])
-    players_past = build_players_past(raw_players["history"], fixtures)
-    players_future = build_players_future(raw_players["fixtures"], fixtures, missing_gameweeks=missing)
-    players_full = build_players_full(players_past, players_future, players_summary)
-    team_results = build_team_results(fixtures)
-    league_table = build_league_table(team_results, teams)
-    return {
-        "fixtures": fixtures,
-        "gameweeks": gameweeks,
-        "teams": teams,
-        "positions": positions,
-        "players_summary": players_summary,
-        "players_previous_seasons": prev_seasons,
-        "players_past": players_past,
-        "players_future": players_future,
-        "players_full": players_full,
-        "team_results": team_results,
-        "league_table": league_table,
-    }
+    """The full 11-table catalog (run_transform.py dataflow), each table
+    built once and pinned by an eager, untracked ``localCheckpoint``.
+
+    The catalog feeds several actions (the fused PK check, one write per
+    table), and a lazy table would be recomputed from the parsed documents
+    by each. The pins are untracked for the reason given in ``ingest``: the
+    ContextCleaner frees them once the last returned frame is unreachable,
+    and no bulk release of operator caches can cut a table a consumer holds.
+
+    Each table's build and pin job runs on its own driver thread and waits
+    only for its input tables, so the planning, code generation and job
+    submission of independent tables overlap. The tasks are submitted in
+    dependency order to a pool with one thread per task, so a task that
+    waits on an upstream future never holds the thread that upstream needs.
+    Each task inherits the caller's local properties (job group, scheduler
+    pool), so the pin jobs run under the caller's labels. The first failing
+    build, in dependency order, raises here once every task has finished.
+    """
+    def players_future(fixtures: DataFrame) -> DataFrame:
+        missing = count_missing_gameweeks(fixtures) > 0
+        return build_players_future(raw_players["fixtures"], fixtures, missing_gameweeks=missing)
+
+    # (table, builder, input tables), in dependency order
+    tasks = [
+        ("fixtures", lambda: build_fixtures(raw_fixtures), ()),
+        ("gameweeks", lambda: build_gameweeks(raw_main["events"]), ()),
+        ("teams", lambda: build_teams(raw_main["teams"]), ()),
+        ("positions", lambda: build_positions(raw_main["element_types"]), ()),
+        ("players_summary", lambda: build_players_summary(raw_main["elements"]), ()),
+        ("players_previous_seasons",
+         lambda: build_players_previous_seasons(raw_players["history_past"]), ()),
+        ("players_past", lambda fixtures: build_players_past(raw_players["history"], fixtures),
+         ("fixtures",)),
+        ("players_future", players_future, ("fixtures",)),
+        ("players_full", build_players_full, ("players_past", "players_future", "players_summary")),
+        ("team_results", build_team_results, ("fixtures",)),
+        ("league_table", build_league_table, ("team_results", "teams")),
+    ]
+    spark = raw_fixtures.sparkSession
+    futures: dict[str, Future] = {}
+    pool = ThreadPoolExecutor(max_workers=len(tasks), thread_name_prefix="build_all")
+    try:
+        for name, build, inputs in tasks:
+            # one wrap per task: a wrap clones the caller's local properties
+            # once, and threads sharing a clone see each other's writes to
+            # it, the SQL execution id of their running query among them
+            target = inheritable_thread_target(spark)(_build_and_pin)
+            futures[name] = pool.submit(target, build, [futures[i] for i in inputs])
+        return {name: futures[name].result() for name, _, _ in tasks}
+    finally:
+        pool.shutdown(wait=True)

@@ -225,10 +225,81 @@ class TestMalformedSnapshots:
             reader(spark, str(shaped))
 
 
+class TestPinnedCatalog:
+    """build_all builds each table once on its own driver thread and returns
+    it pinned; the pins hold the rows the lazily composed builders give."""
+
+    @staticmethod
+    def _lazy_catalog(raw_fixtures, raw_main, raw_players) -> dict:
+        fixtures = transform.build_fixtures(raw_fixtures)
+        missing = transform.count_missing_gameweeks(fixtures) > 0
+        teams = transform.build_teams(raw_main["teams"])
+        players_summary = transform.build_players_summary(raw_main["elements"])
+        players_past = transform.build_players_past(raw_players["history"], fixtures)
+        players_future = transform.build_players_future(
+            raw_players["fixtures"], fixtures, missing_gameweeks=missing
+        )
+        team_results = transform.build_team_results(fixtures)
+        return {
+            "fixtures": fixtures,
+            "gameweeks": transform.build_gameweeks(raw_main["events"]),
+            "teams": teams,
+            "positions": transform.build_positions(raw_main["element_types"]),
+            "players_summary": players_summary,
+            "players_previous_seasons": transform.build_players_previous_seasons(raw_players["history_past"]),
+            "players_past": players_past,
+            "players_future": players_future,
+            "players_full": transform.build_players_full(players_past, players_future, players_summary),
+            "team_results": team_results,
+            "league_table": transform.build_league_table(team_results, teams),
+        }
+
+    @pytest.fixture(scope="class")
+    def raw(self, spark, tmp_path_factory):
+        paths = fpl_fixtures.write_fixture_files(str(tmp_path_factory.mktemp("fpl_raw")))
+        return (
+            ingest.read_fixtures_json(spark, paths["fixtures"]),
+            ingest.read_main_json(spark, paths["main"]),
+            ingest.read_players_json(spark, paths["players"]),
+        )
+
+    def test_rows_equal_lazy_builders(self, raw):
+        from collections import Counter
+
+        pinned = transform.build_all(*raw)
+        lazy = self._lazy_catalog(*raw)
+        assert list(pinned) == list(lazy) == list(transform.PRIMARY_KEYS)
+        for name, df in pinned.items():
+            assert df.schema == lazy[name].schema, name
+            assert Counter(df.collect()) == Counter(lazy[name].collect()), name
+
+    def test_pin_jobs_run_in_callers_job_group(self, spark, raw):
+        sc = spark.sparkContext
+        sc.setJobGroup("build-all-pins", "build_all")
+        try:
+            transform.build_all(*raw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("build-all-pins")) >= 11
+
+    def test_builder_error_raises_and_leaves_no_thread(self, raw):
+        import threading
+
+        from pyspark.errors import AnalysisException
+
+        raw_fixtures, raw_main, raw_players = raw
+        broken = {**raw_main, "teams": raw_main["teams"].drop("short_name")}
+        before = set(threading.enumerate())
+        with pytest.raises(AnalysisException, match="short_name"):
+            transform.build_all(raw_fixtures, broken, raw_players)
+        assert set(threading.enumerate()) <= before
+
+
 class TestPinnedLifetime:
-    """The readers and the model matrix return frames over an untracked
-    local checkpoint: the JSON parse and the windows run once, and a bulk
-    release of operator caches cannot cut them."""
+    """The readers, the catalog and the model matrix return frames over an
+    untracked local checkpoint: the JSON parse, the table builds and the
+    windows run once, and a bulk release of operator caches cannot cut
+    them."""
 
     @staticmethod
     def _plan(df) -> str:
@@ -247,6 +318,7 @@ class TestPinnedLifetime:
             **{f"players.{k}": v for k, v in raw_players.items()},
         }
         catalog = transform.build_all(frames["fixtures"], raw_main, raw_players)
+        frames.update({f"catalog.{k}": v for k, v in catalog.items()})
         frames["model_matrix"] = features.build_model_matrix(catalog)
         for name, df in frames.items():
             plan = self._plan(df)
