@@ -131,7 +131,7 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def spread_partitions(df: DataFrame, *, target: int | None = None) -> DataFrame:
+def spread_partitions(df: DataFrame) -> DataFrame:
     """Round-robin repartition, ONLY when upstream yields fewer partitions
     than the session's parallelism.
 
@@ -168,8 +168,7 @@ def spread_partitions(df: DataFrame, *, target: int | None = None) -> DataFrame:
         children = node.children()
         for i in range(children.length()):
             stack.append(children.apply(i))
-    sc = df.sparkSession.sparkContext
-    t = int(target or sc.defaultParallelism)
+    t = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < t:
         return df.repartition(t)
     return df

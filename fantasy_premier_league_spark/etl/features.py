@@ -88,16 +88,16 @@ def last_complete_gameweek(gameweeks: DataFrame) -> int | None:
     return row["m"]
 
 
-def build_model_matrix(catalog: dict[str, DataFrame], *, max_gameweek: int | None = None) -> DataFrame:
-    """The feature frame: one row per (player, fixture) with lagged stats,
-    schedule features, team/opponent strengths, and targets."""
+def build_model_matrix(catalog: dict[str, DataFrame]) -> DataFrame:
+    """The feature frame: one row per (player, fixture) up to the last
+    complete gameweek, with lagged stats, schedule features,
+    team/opponent strengths, and targets."""
     full = catalog["players_full"]
     teams = catalog["teams"]
     results = catalog["team_results"]
     gameweeks = catalog["gameweeks"]
 
-    if max_gameweek is None:
-        max_gameweek = last_complete_gameweek(gameweeks)
+    max_gameweek = last_complete_gameweek(gameweeks)
     if max_gameweek is not None:
         full = full.filter(F.col("gameweek_id").cast("int") <= max_gameweek)
 

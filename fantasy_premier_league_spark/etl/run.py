@@ -24,9 +24,9 @@ log = logging.getLogger("fpl_spark.etl")
 
 
 def run(
-    data_input: str, data_output: str, *, raise_errors: bool = False, fmt: str = "parquet", spark=None
+    data_input: str, data_output: str, *, raise_errors: bool = False, fmt: str = "parquet"
 ) -> dict[str, int]:
-    spark = spark or get_spark("fpl-etl")
+    spark = get_spark("fpl-etl")
     raw_fixtures = ingest.read_fixtures_json(spark, os.path.join(data_input, "fixtures.json"))
     raw_main = ingest.read_main_json(spark, os.path.join(data_input, "main.json"))
     raw_players = ingest.read_players_json(spark, os.path.join(data_input, "players.json"))
@@ -47,7 +47,7 @@ def run(
     return counts
 
 
-def main(argv: list[str] | None = None) -> int:
+def main() -> int:
     parser = argparse.ArgumentParser(description="FPL JSON -> 11-table parquet catalog")
     parser.add_argument("--data-input", required=True, help="dir with fixtures/main/players.json")
     parser.add_argument("--data-output", required=True, help="dir for the parquet catalog")
@@ -55,7 +55,7 @@ def main(argv: list[str] | None = None) -> int:
                         help="stop on data validation failure (default: warn)")
     parser.add_argument("--format", choices=("parquet", "csv", "json"), default="parquet",
                         help="catalog output format (S5/S7/S4)")
-    args = parser.parse_args(argv)
+    args = parser.parse_args()
     logging.basicConfig(level=logging.INFO, format="%(levelname)s %(name)s %(message)s")
     counts = run(args.data_input, args.data_output, raise_errors=args.raise_errors, fmt=args.format)
     for name in sorted(counts):

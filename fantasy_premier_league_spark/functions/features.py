@@ -21,24 +21,18 @@ def add_lag_features(
     entity: str,
     order: str,
     cols: Sequence[str],
-    n: int = 1,
-    prefix: str = "previous_",
 ) -> DataFrame:
     """W1: per-entity lag of many columns at once (EDA § 24-25: 24-col
-    shift(1) by player ordered by kickoff). One window → one shuffle for
-    all columns."""
+    shift(1) by player ordered by kickoff), each as ``previous_<col>``.
+    One window → one shuffle for all columns."""
     w = W.partitionBy(entity).orderBy(order)
-    return df.select(
-        "*", *[F.lag(c, n).over(w).alias(f"{prefix}{c}") for c in cols]
-    )
+    return df.select("*", *[F.lag(c, 1).over(w).alias(f"previous_{c}") for c in cols])
 
 
-def add_days_since_last(
-    df: DataFrame, *, entity: str, ts: str, out: str = "days_since_last"
-) -> DataFrame:
-    """W3: ordered diff per entity in days (EDA § 32)."""
+def add_days_since_last(df: DataFrame, *, entity: str, ts: str) -> DataFrame:
+    """W3: ordered diff per entity in days (EDA § 32), as ``days_since_last``."""
     w = W.partitionBy(entity).orderBy(ts)
-    return df.withColumn(out, F.datediff(F.col(ts), F.lag(ts).over(w)))
+    return df.withColumn("days_since_last", F.datediff(F.col(ts), F.lag(ts).over(w)))
 
 
 def add_group_share(
@@ -60,20 +54,17 @@ def add_group_decile(
     return df.withColumn(out, F.ntile(10).over(w))
 
 
-def add_time_features(df: DataFrame, *, ts: str, epoch: str | None = None) -> DataFrame:
+def add_time_features(df: DataFrame, *, ts: str) -> DataFrame:
     """F12-F14 (EDA § 30-33): hour/weekday + cyclical sin/cos encodings of
-    time-of-day, optional day offset from an epoch column/literal."""
+    time-of-day."""
     sec = (F.hour(ts) * 3600 + F.minute(ts) * 60 + F.second(ts)).cast("double")
     angle = 2 * 3.141592653589793 * sec / 86400.0
-    out = (
+    return (
         df.withColumn(f"{ts}_hour", F.hour(ts))
         .withColumn(f"{ts}_weekday", F.weekday(ts))
         .withColumn(f"{ts}_tod_sin", F.sin(angle))
         .withColumn(f"{ts}_tod_cos", F.cos(angle))
     )
-    if epoch is not None:
-        out = out.withColumn(f"{ts}_day_offset", F.datediff(F.col(ts), F.col(epoch)))
-    return out
 
 
 def missingness_profile(df: DataFrame) -> DataFrame:
@@ -172,13 +163,12 @@ def loo_target_encode(
     *,
     cat_col: str,
     target_col: str,
-    out_col: str = "loo_enc",
-    round_to: int = 4,
     decimal_type: str | None = None,
 ) -> DataFrame:
-    """Leave-one-out target encoding: each row's categorical is encoded
-    as the mean target of its group EXCLUDING the row itself —
-    (group_sum - own) / (group_cnt - 1) — the leakage-safe form of mean
+    """Leave-one-out target encoding: each row's categorical is encoded,
+    as ``loo_enc`` rounded to 4 dp, as the mean target of its group
+    EXCLUDING the row itself — (group_sum - own) / (group_cnt - 1) — the
+    leakage-safe form of mean
     encoding (plain group-mean lets every row see its own label; LOO is
     the standard fix short of full fold splits, cf. ml/splits.py for
     the fold machinery).
@@ -205,6 +195,6 @@ def loo_target_encode(
     own = t.cast("double")
     gcnt = F.count(t).over(w)
     enc = F.when(
-        gcnt > 1, F.round((gsum - own) / (gcnt - 1), round_to)
+        gcnt > 1, F.round((gsum - own) / (gcnt - 1), 4)
     ).otherwise(F.lit(None).cast("double"))
-    return df.withColumn(out_col, enc)
+    return df.withColumn("loo_enc", enc)

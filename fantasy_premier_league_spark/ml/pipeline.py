@@ -22,9 +22,14 @@ from pyspark.ml.feature import PCA, StandardScaler, UnivariateFeatureSelector, V
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: the class-weight column :func:`add_balanced_weights` writes and every
+#: classifier of :func:`make_classifier_pipeline` reads as its weightCol
+WEIGHT_COL = "weight"
 
-def add_balanced_weights(df: DataFrame, *, label: str, out: str = "weight") -> DataFrame:
-    """M4: sklearn class_weight='balanced' ≙ w_c = n / (n_classes * n_c).
+
+def add_balanced_weights(df: DataFrame, *, label: str) -> DataFrame:
+    """M4: sklearn class_weight='balanced' ≙ w_c = n / (n_classes * n_c),
+    written to ``WEIGHT_COL``.
 
     One action collects the k per-class counts (k rows, never the data
     rows); the weights go back as a literal ``CASE`` on the label, so later
@@ -40,7 +45,7 @@ def add_balanced_weights(df: DataFrame, *, label: str, out: str = "weight") -> D
             continue
         hit, w = F.col(label) == F.lit(r[label]), F.lit(n / (k * r["n_c"]))
         weight = F.when(hit, w) if weight is None else weight.when(hit, w)
-    return df.withColumn(out, F.lit(None).cast("double") if weight is None else weight)
+    return df.withColumn(WEIGHT_COL, F.lit(None).cast("double") if weight is None else weight)
 
 
 def choose_pca_k(train: DataFrame, *, features_col: str, variance: float = 0.95) -> int:
@@ -77,7 +82,6 @@ def make_classifier_pipeline(
     standardize: bool = True,
     pca_k: int | None = None,
     select_top_k: int | None = None,
-    weight_col: str = "weight",
 ) -> Pipeline:
     """M7: assembler → [scaler] → [PCA(k)] → [ANOVA-F selector] → classifier.
 
@@ -99,7 +103,7 @@ def make_classifier_pipeline(
         sel.setFeatureType("continuous").setLabelType("categorical").setSelectionThreshold(select_top_k)
         stages.append(sel)
         feats = "__sel"
-    stages.append(_CLASSIFIERS[classifier](label, feats, weight_col))
+    stages.append(_CLASSIFIERS[classifier](label, feats, WEIGHT_COL))
     return Pipeline(stages=stages)
 
 

@@ -16,12 +16,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def clean_text_column(df: DataFrame, *, text_col: str, out: str = "text_clean") -> DataFrame:
-    """M1 § 24 normalization: lower, strip to [a-z 0-9 space], collapse."""
+def clean_text_column(df: DataFrame, *, text_col: str) -> DataFrame:
+    """M1 § 24 normalization into ``text_clean``: lower, strip to
+    [a-z 0-9 space], collapse."""
     c = F.lower(F.coalesce(F.col(text_col), F.lit("")))
     c = F.regexp_replace(c, r"[^a-z\s\d]", "")
     c = F.trim(F.regexp_replace(c, r"\s+", " "))
-    return df.withColumn(out, c)
+    return df.withColumn("text_clean", c)
 
 
 def build_topic_pipeline(

@@ -100,7 +100,6 @@ def bloom_probe_keys(
     m_bits: int = 4096,
     k_hashes: int = 3,
     salt: str = "bloom:",
-    out: str = "bloom_hit",
 ) -> DataFrame:
     """Membership verdict per distinct probe key: ``(key, bloom_hit)``.
 
@@ -137,4 +136,4 @@ def bloom_probe_keys(
         .otherwise(F.lit(0))
         .alias("__bit_set"),
     )
-    return tested.groupBy(key_col).agg((F.min("__bit_set") == 1).alias(out))
+    return tested.groupBy(key_col).agg((F.min("__bit_set") == 1).alias("bloom_hit"))

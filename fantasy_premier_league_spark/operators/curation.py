@@ -112,28 +112,16 @@ def pack_sequences(
     )
 
 
-def gopher_quality_rules(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    min_words: int = 15,
-    max_words: int = 10_000,
-    min_mean_len: float = 3.0,
-    max_mean_len: float = 10.0,
-    min_stop_hits: int = 2,
-    min_alpha_ratio: float = 0.7,
-    max_top_freq: float = 0.3,
-) -> DataFrame:
+def gopher_quality_rules(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Gopher-style per-document quality rules (Rae et al. 2021, §A1.1).
 
     Emits the raw statistics, one 0/1 flag per rule, and the conjunction:
 
-    - word count within [min_words, max_words],
-    - mean word length within [min_mean_len, max_mean_len],
-    - at least ``min_stop_hits`` stop-word occurrences,
-    - alphabetic-token ratio >= min_alpha_ratio (symbol-soup guard),
-    - most-frequent-word share <= max_top_freq (repetition guard).
+    - word count within [15, 10 000],
+    - mean word length within [3, 10],
+    - at least 2 stop-word occurrences,
+    - alphabetic-token ratio >= 0.7 (symbol-soup guard),
+    - most-frequent-word share <= 0.3 (repetition guard).
 
     Scale shape: every stat except the repetition share is a pure Column
     expression over the words array (scan-speed, whole-stage codegen). The
@@ -166,13 +154,11 @@ def gopher_quality_rules(
     scored = base.join(top, "doc_id").withColumn(
         "top_word_ratio", F.round(F.col("__top_n") / F.col("n_words"), 6)
     )
-    r_count = ((F.col("n_words") >= min_words) & (F.col("n_words") <= max_words)).cast("int")
-    r_mean = (
-        (F.col("mean_word_len") >= min_mean_len) & (F.col("mean_word_len") <= max_mean_len)
-    ).cast("int")
-    r_stop = (F.col("stop_hits") >= min_stop_hits).cast("int")
-    r_alpha = (F.col("alpha_ratio") >= min_alpha_ratio).cast("int")
-    r_rep = (F.col("top_word_ratio") <= max_top_freq).cast("int")
+    r_count = ((F.col("n_words") >= 15) & (F.col("n_words") <= 10_000)).cast("int")
+    r_mean = ((F.col("mean_word_len") >= 3.0) & (F.col("mean_word_len") <= 10.0)).cast("int")
+    r_stop = (F.col("stop_hits") >= 2).cast("int")
+    r_alpha = (F.col("alpha_ratio") >= 0.7).cast("int")
+    r_rep = (F.col("top_word_ratio") <= 0.3).cast("int")
     return scored.select(
         "doc_id",
         "n_words",
@@ -189,18 +175,12 @@ def gopher_quality_rules(
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    add_k: float = 0.5,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Bigram-LM cross-entropy per document, model trained on the corpus.
 
     The classic perplexity-style quality signal one LM up from q45's unigram
     scorer: P(w2 | w1) = (c(w1 w2) + k) / (c(w1 ·) + k·V) with add-k
-    smoothing, V = vocabulary size. Emits per-doc bigram count, mean log
+    smoothing (k = 0.5), V = vocabulary size. Emits per-doc bigram count, mean log
     probability, and bits/bigram (cross-entropy).
 
     Scale shape: the model IS aggregation — bigram counts from one explode,
@@ -229,7 +209,7 @@ def bigram_logprob(
         df.select(F.explode(w).alias("word")).agg(F.countDistinct("word").alias("__v"))
     )
     logp = F.log(
-        (F.col("__c_bg") + F.lit(add_k)) / (F.col("__c_prefix") + F.lit(add_k) * F.col("__v"))
+        (F.col("__c_bg") + F.lit(0.5)) / (F.col("__c_prefix") + F.lit(0.5) * F.col("__v"))
     )
     return (
         bg.join(bgc, "bigram")
@@ -612,11 +592,10 @@ def waterfill_budgets(
     total_budget: int | None = None,
     budget_frac: float | None = None,
     capacity: "F.Column",
-    group_weight: "F.Column | None" = None,
 ) -> DataFrame:
     """Budget-constrained proportional allocation across domains
     (water-filling): split ``total_budget`` tokens over groups in
-    proportion to ``weight``, capped at each group's ``capacity``, with
+    proportion to their weight, capped at each group's ``capacity``, with
     every capped group's surplus redistributed proportionally among the
     uncapped — the step that turns a mixture spec ("weights w_i, budget
     B") into the per-domain budgets a sampler then enforces.
@@ -638,20 +617,15 @@ def waterfill_budgets(
     collapses before any of the allocation arithmetic runs.
 
     ``capacity`` is a per-row Column summed per group (e.g. a token
-    count); ``group_weight`` is a Column over the AGGREGATED frame
-    (columns ``capacity`` and ``n_docs`` are in scope) — default
-    ``sqrt(n_docs)``, the temperature-0.5 mixture weight (sqrt, not
-    pow, because IEEE-754 guarantees sqrt correctly rounded on every
-    engine, keeping the oracle bit-exact). Weights must be strictly
-    positive.
+    count). A group's weight is ``sqrt(n_docs)``, the temperature-0.5
+    mixture weight (sqrt, not pow, because IEEE-754 guarantees sqrt
+    correctly rounded on every engine, keeping the oracle bit-exact).
     """
     keys = [group_col] if isinstance(group_col, str) else list(group_col)
-    if group_weight is None:
-        group_weight = F.sqrt(F.col("n_docs").cast("double"))
     g = df.groupBy(*keys).agg(
         F.sum(capacity).cast("double").alias("capacity"),
         F.count(F.lit(1)).alias("n_docs"),
-    ).withColumn("weight", group_weight)
+    ).withColumn("weight", F.sqrt(F.col("n_docs").cast("double")))
     totals = g.agg(
         F.sum("capacity").alias("__total_cap"), F.sum("weight").alias("__total_w")
     )

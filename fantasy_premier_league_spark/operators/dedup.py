@@ -50,8 +50,7 @@ def _cap_band_buckets(
     members emits m^2/2 candidate rows inside a single task — AQE's skew
     split cannot save a logically quadratic explosion, so at corpus scale
     the guard is what keeps the worst bucket bounded. Mirrors the
-    ``max_doc_freq`` shingle blocking above and the reference's own
-    candidate cap (/root/reference/etl/additional_fifa.py:314-320).
+    reference's own candidate cap (its etl/additional_fifa.py:314-320).
 
     Dropping a bucket loses its candidate pairs (recall, not precision),
     so the guard defaults to off and — per the no-silent-caps rule — an
@@ -219,16 +218,13 @@ def ngram_jaccard_pairs(
     *,
     n: int = 3,
     threshold: float = 0.5,
-    max_doc_freq: int | None = None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard similarity over distinct word n-gram sets, for every
     pair sharing >= 1 shingle, filtered to >= threshold.
 
     Plan: inverted index (id, shingle) → self-join on shingle with id<id2 →
-    count common shingles per pair → join per-doc set sizes → |∩|/|∪|.
-    ``max_doc_freq`` drops super-frequent shingles before pairing (standard
-    blocking at scale; changes recall slightly, so default off).
+    count common shingles per pair with both set sizes → |∩|/|∪|.
 
     ``shingle_arrays``: a pre-built (id, __arr) frame from
     :func:`doc_shingle_arrays` — the TOKENIZE-ONCE hook for compositions
@@ -237,57 +233,21 @@ def ngram_jaccard_pairs(
     the shared frame each pipeline re-tokenizes). The caller owns its
     materialization/tracking.
     """
-    if max_doc_freq is not None and shingle_arrays is not None:
-        raise ValueError("shingle_arrays requires max_doc_freq=None")
-    if max_doc_freq is None:
-        # materialize the docs-sized array frame LAZILY (the caller's one
-        # action full-scans it via the self-join, so the blocks build
-        # inside that job — eager would schedule a separate fixed-cost
-        # job, the round-7 bench regression), explode lazily, carry the
-        # set size with each posting: the verify collapses to self-join
-        # + one pair-keyed aggregate (see _jaccard_pairs_from_sized_index)
-        arr = (
-            shingle_arrays
-            if shingle_arrays is not None
-            else tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
-        )
-        shs = arr.select(
-            "id", F.size("__arr").alias("n_shingles"), F.explode("__arr").alias("shingle")
-        )
-        return _jaccard_pairs_from_sized_index(shs, threshold)
-    sh = doc_shingles(df, id_col, text_col, n)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    sh = sh.join(freq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle")
-    # the filtered index feeds three consumers (sizes, both join sides);
-    # without an explicit persist Spark re-scans and re-shuffles it 3x
-    sh = tracked_persist(sh)
-    return _jaccard_pairs_from_index(sh, threshold)
-
-
-def _jaccard_pairs_from_index(sh: DataFrame, threshold: float) -> DataFrame:
-    """Naive inverted-index verify: self-join on shingle, count common
-    shingles per id<id2 pair, score |∩|/|∪|. Shared by
-    :func:`ngram_jaccard_pairs` and the below-crossover path of
-    :func:`prefix_filtered_jaccard_pairs` (same output by construction).
-    ``sh`` must be a persisted (id, shingle) distinct index."""
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    # materialize the docs-sized array frame LAZILY (the caller's one
+    # action full-scans it via the self-join, so the blocks build
+    # inside that job — eager would schedule a separate fixed-cost
+    # job, the round-7 bench regression), explode lazily, carry the
+    # set size with each posting: the verify collapses to self-join
+    # + one pair-keyed aggregate (see _jaccard_pairs_from_sized_index)
+    arr = (
+        shingle_arrays
+        if shingle_arrays is not None
+        else tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
     )
-    return (
-        common.join(sizes.withColumnsRenamed({"id": "id_a", "n_shingles": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "n_shingles": "n_b"}), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "n_common", F.round("jaccard", 6).alias("jaccard"))
+    shs = arr.select(
+        "id", F.size("__arr").alias("n_shingles"), F.explode("__arr").alias("shingle")
     )
+    return _jaccard_pairs_from_sized_index(shs, threshold)
 
 
 # naive-verify broadcast gate: below this many postings the sized index
@@ -381,8 +341,7 @@ def _jaccard_pairs_from_sized_index(
     shs: DataFrame, threshold: float, *, broadcast: bool = False
 ) -> DataFrame:
     """Naive verify over a size-carrying posting frame — see
-    :func:`_pair_overlap_counts`. Same output as
-    :func:`_jaccard_pairs_from_index`; the length filter (lossless at a
+    :func:`_pair_overlap_counts`. The length filter (lossless at a
     Jaccard threshold) prunes size-incompatible pairs inside the join."""
     return (
         _pair_overlap_counts(
@@ -423,7 +382,6 @@ def containment_pairs(
     *,
     n: int = 3,
     threshold: float = 0.6,
-    max_doc_freq: int | None = None,
     anchor_filter: "F.Column | None" = None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
@@ -442,44 +400,20 @@ def containment_pairs(
     ``shingle_arrays``: a pre-built (id, __arr) frame from
     :func:`doc_shingle_arrays` / :func:`containment_sketch_arrays` — the
     tokenize-once hook (see :func:`ngram_jaccard_pairs`); the caller owns
-    its materialization. Requires ``max_doc_freq=None``.
+    its materialization.
     """
-    if max_doc_freq is not None and shingle_arrays is not None:
-        raise ValueError("shingle_arrays requires max_doc_freq=None")
-    if max_doc_freq is None:
-        # same lazy-materialized size-carrying single-aggregate verify as
-        # ngram_jaccard_pairs, same contract guard (_pair_overlap_counts)
-        arr = (
-            shingle_arrays.select("id", "__arr")
-            if shingle_arrays is not None
-            else tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
-        )
-        shs = arr.select(
-            "id", F.size("__arr").alias("n_shingles"), F.explode("__arr").alias("shingle")
-        )
-        return (
-            _pair_overlap_counts(shs, anchor_filter=anchor_filter)
-            .withColumn("containment", F.col("n_common") / F.least("n_a", "n_b"))
-            .filter(F.col("containment") >= threshold)
-            .select("id_a", "id_b", "n_common", F.round("containment", 6).alias("containment"))
-        )
-    if anchor_filter is not None:
-        raise ValueError("anchor_filter requires max_doc_freq=None")
-    sh = doc_shingles(df, id_col, text_col, n)
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    sh = sh.join(freq.filter(F.col("df") <= max_doc_freq).select("shingle"), "shingle")
-    sh = tracked_persist(sh)
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    # same lazy-materialized size-carrying single-aggregate verify as
+    # ngram_jaccard_pairs, same contract guard (_pair_overlap_counts)
+    arr = (
+        shingle_arrays.select("id", "__arr")
+        if shingle_arrays is not None
+        else tracked_local_checkpoint(doc_shingle_arrays(df, id_col, text_col, n), eager=False)
+    )
+    shs = arr.select(
+        "id", F.size("__arr").alias("n_shingles"), F.explode("__arr").alias("shingle")
     )
     return (
-        common.join(sizes.withColumnsRenamed({"id": "id_a", "n_shingles": "n_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"id": "id_b", "n_shingles": "n_b"}), "id_b")
+        _pair_overlap_counts(shs, anchor_filter=anchor_filter)
         .withColumn("containment", F.col("n_common") / F.least("n_a", "n_b"))
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "n_common", F.round("containment", 6).alias("containment"))
@@ -831,7 +765,6 @@ def minhash_incremental_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     est_threshold: float = 0.5,
-    seed: int = 42,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dups of a NEW batch against a stored signature index — the
@@ -848,11 +781,11 @@ def minhash_incremental_pairs(
     exactly how the store grows.
 
     Same seeded permutation family as :func:`minhash_signatures` — the
-    caller must build the index with identical (n, num_hashes, seed) or
-    estimates are meaningless.
+    caller must build the index with identical (n, num_hashes) and the
+    default seed or estimates are meaningless.
     """
     new_sigs = tracked_local_checkpoint(
-        minhash_signatures(new_docs, id_col, text_col, n=n, num_hashes=num_hashes, seed=seed),
+        minhash_signatures(new_docs, id_col, text_col, n=n, num_hashes=num_hashes),
         eager=False,
     )
     nb = _cap_band_buckets(
@@ -1010,6 +943,10 @@ def simhash_near_dup_pairs(
 #: whose per-round cost at that size is pure job/plan overhead.
 _LOCAL_FINISH_EDGES = 200_000
 
+#: Fixpoint round cap of both connected-components operators; a dedup pair
+#: graph converges in O(log d) (pointer jumping) or O(log^2 n) (star) rounds.
+_CC_MAX_ITER = 20
+
 
 def _finish_components_locally(E: DataFrame) -> DataFrame:
     """Driver union-find over a BOUNDED edge frame → (id, cluster_id).
@@ -1059,14 +996,13 @@ def _finish_components_locally(E: DataFrame) -> DataFrame:
 def connected_components(
     pairs: DataFrame,
     *,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 20,
+    max_iter: int = _CC_MAX_ITER,
     shortcut_from: int = 2,
     local_finish_edges: int = _LOCAL_FINISH_EDGES,
 ) -> DataFrame:
-    """(id, cluster_id) — connected components over a near-dup pair graph;
-    ``cluster_id`` is the minimum node id in the component.
+    """(id, cluster_id) — connected components over an (id_a, id_b)
+    near-dup pair graph; ``cluster_id`` is the minimum node id in the
+    component.
 
     This is the final step of dedup at scale: candidate pairs (MinHash /
     SimHash / Jaccard) form a graph whose components are the duplicate
@@ -1114,7 +1050,7 @@ def connected_components(
     # LAZY: the gate's count() below is a full scan, so the checkpoint
     # blocks build inside that one job instead of a separate eager job.
     e1 = tracked_local_checkpoint(
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")),
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")),
         eager=False,
     )
     # stats-gated hybrid on the raw count: 2*raw bounds the symmetric
@@ -1210,13 +1146,10 @@ def connected_components(
 def connected_components_star(
     pairs: DataFrame,
     *,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iter: int = 20,
-    probe_skip_rounds: int = 2,
     local_finish_edges: int = _LOCAL_FINISH_EDGES,
 ) -> DataFrame:
-    """(id, cluster_id) by ALTERNATING small-star / large-star contraction
+    """(id, cluster_id) of an (id_a, id_b) pair graph by ALTERNATING
+    small-star / large-star contraction
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14) — the hub-robust alternative to :func:`connected_components`.
 
@@ -1246,7 +1179,7 @@ def connected_components_star(
     job plus a probe job (round-7 fixed-cost fix — the rewiring is not
     monotone row-wise, so a plain cache would pin superseded edge
     sets without cutting the exponentially-growing plan). The first
-    ``probe_skip_rounds`` rounds skip the probe entirely (no action at
+    two rounds skip the probe entirely (no action at
     all — the rounds stay plan extensions and the first probed round's
     aggregate materializes the chained prefix in one job): star
     contraction cannot converge that early on any non-trivial graph,
@@ -1277,7 +1210,7 @@ def connected_components_star(
     from .cache import tracked_local_checkpoint
 
     e0 = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
     )
     # RAW canonical half first (narrow map, no distinct): the stats gate
@@ -1313,7 +1246,7 @@ def connected_components_star(
         return _finish_components_locally(E)
     prev = None
     pending_large: list[DataFrame] = []
-    for it in range(max_iter + 1):
+    for it in range(_CC_MAX_ITER + 1):
         # large-star: neighborhoods from both directions; m = min of the
         # closed neighborhood; strictly-larger neighbors re-attach to m.
         # v > u and m <= u  =>  output rows are already canonical.
@@ -1350,7 +1283,7 @@ def connected_components_star(
         # one job per PROBED round (the global agg scans every partition,
         # which the lazy-checkpoint contract requires)
         E = tracked_local_checkpoint(small, eager=False)
-        if it < probe_skip_rounds:
+        if it < 2:
             # star contraction cannot converge this early on a non-trivial
             # graph, so skip the probe entirely: no action runs, the round
             # stays a pure plan extension, and the FIRST probed round's
@@ -1381,7 +1314,7 @@ def connected_components_star(
             return _finish_components_locally(E)
     else:
         warnings.warn(
-            f"connected_components_star did not converge in {max_iter} rounds; "
+            f"connected_components_star did not converge in {_CC_MAX_ITER} rounds; "
             "components are partial.",
             RuntimeWarning,
             stacklevel=2,

@@ -12,28 +12,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import portable_hash32
+from .sessionize import EPOCH
 
 
-def assign_arm(user_col: F.Column, *, n_arms: int = 2, salt: str = "exp1") -> F.Column:
-    """Deterministic, engine-portable arm assignment: md5-derived hash of
-    (salt || user) mod n_arms. Stable across runs/engines (the same
+def assign_arm(user_col: F.Column) -> F.Column:
+    """Deterministic, engine-portable two-arm assignment: md5-derived hash
+    of ('exp1' || user) mod 2. Stable across runs/engines (the same
     portable hash the sketch family uses), uniform enough for bucketing,
     and reproducible in the DuckDB oracle."""
-    return portable_hash32(F.concat(F.lit(salt), user_col.cast("string"))) % n_arms
+    return portable_hash32(F.concat(F.lit("exp1"), user_col.cast("string"))) % 2
 
 
-def ab_conversion_ztest(
-    per_user: DataFrame,
-    *,
-    arm_col: str = "arm",
-    converted_col: str = "converted",
-    z_threshold: float = 1.96,
-) -> DataFrame:
+def ab_conversion_ztest(per_user: DataFrame) -> DataFrame:
     """Two-proportion z-test between arm 0 (control) and arm 1
     (treatment) over per-user conversion flags.
 
-    Input: one row per user with an integer arm and a 0/1 conversion
-    flag. The whole test is ONE conditional aggregation over the
+    Input: one row per user with an integer ``arm`` and a 0/1
+    ``converted`` flag. The whole test is ONE conditional aggregation over the
     per-user frame plus closed-form math on the pooled rate — the event
     log is touched exactly once upstream to build that frame. ALWAYS
     returns one row: n/conversions/rate per arm, pooled z (4 dp — the
@@ -45,7 +40,7 @@ def ab_conversion_ztest(
     # ONE conditional aggregation, not two filtered aggregates crossJoined:
     # that shape returns ZERO rows when an arm is empty, breaking the
     # one-row contract below (and costs an extra scan)
-    arm, conv = F.col(arm_col), F.col(converted_col)
+    arm, conv = F.col("arm"), F.col("converted")
     row = per_user.agg(
         F.coalesce(F.sum(F.when(arm == 0, 1).otherwise(0)), F.lit(0)).alias("n_control"),
         F.coalesce(F.sum(F.when(arm == 0, conv).otherwise(0)), F.lit(0)).alias("conv_control"),
@@ -72,17 +67,11 @@ def ab_conversion_ztest(
         "conv_treat",
         F.round(p_b, 6).alias("rate_treat"),
         z.alias("zstat"),
-        F.when(F.abs(z) >= z_threshold, F.lit(1)).otherwise(F.lit(0)).alias("significant"),
+        F.when(F.abs(z) >= 1.96, F.lit(1)).otherwise(F.lit(0)).alias("significant"),
     )
 
 
-def growth_accounting(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    epoch: str = "2024-01-01",
-) -> DataFrame:
+def growth_accounting(events: DataFrame) -> DataFrame:
     """Daily growth accounting: active users, new vs returning split, and
     the cumulative user curve — the DAU/new/returning decomposition on
     every growth dashboard.
@@ -92,10 +81,10 @@ def growth_accounting(
     sum over the day-ordered totals. All shuffles are on bounded keys;
     the final cumulative window is over the days-sized frame only.
     """
-    day = F.datediff(F.col(ts_col), F.lit(epoch).cast("date"))
+    day = F.datediff(F.col("ts"), F.lit(EPOCH).cast("date"))
     from pyspark.sql import Window as W
 
-    ud = events.select(F.col(key_col).alias("u"), day.alias("day")).distinct()
+    ud = events.select(F.col("user_id").alias("u"), day.alias("day")).distinct()
     first_day = F.min("day").over(W.partitionBy("u"))
     flagged = ud.withColumn("is_new", (F.col("day") == first_day).cast("int"))
     daily = flagged.groupBy("day").agg(
@@ -119,7 +108,6 @@ def growth_accounting(
 def cuped_adjusted_ab(
     per_user: DataFrame,
     *,
-    arm_col: str = "arm",
     metric_col: str = "y",
     covariate_col: str = "x",
 ) -> DataFrame:
@@ -127,7 +115,7 @@ def cuped_adjusted_ab(
     WSDM'13): adjust each user's metric with a pre-experiment covariate
     — y_adj = y - θ·(x - x̄), θ = cov(x,y)/var(x) — shrinking metric
     variance by the squared correlation without biasing the treatment
-    difference (θ is fit on the pooled population, and E[x] is arm-
+    difference between ``arm`` 0 and 1 (θ is fit on the pooled population, and E[x] is arm-
     independent under randomization).
 
     Everything reduces to INTEGER sufficient statistics (n, Σx, Σy,
@@ -154,7 +142,7 @@ def cuped_adjusted_ab(
         F.sum(x * y).alias("sxy"),
         F.sum(y * y).alias("syy"),
     )
-    arm = F.col(arm_col)
+    arm = F.col("arm")
     arms = per_user.agg(
         F.coalesce(F.sum(F.when(arm == 0, 1).otherwise(0)), F.lit(0)).alias("n_c"),
         F.coalesce(F.sum(F.when(arm == 0, x).otherwise(0)), F.lit(0)).alias("sx_c"),

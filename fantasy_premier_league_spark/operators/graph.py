@@ -50,14 +50,12 @@ def _reduce_width(df: DataFrame) -> int:
 def pagerank(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     iterations: int = 3,
     damping: float = 0.85,
     checkpoint_every: int = 2,
     local_finish_edges: int | None = 200_000,
 ) -> DataFrame:
-    """Power-iteration PageRank over a directed edge list.
+    """Power-iteration PageRank over a directed (src, dst) edge list.
 
     Handles the full standard semantics on ANY edge list, not just
     symmetric co-occurrence graphs: the rank vector is keyed on the
@@ -99,9 +97,9 @@ def pagerank(
     # multiple first-job consumers below compute the upstream edge build
     # once, not once per subtree. Tracked: release via
     # operators.cache.release_operator_caches after consumption.
-    e = tracked_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
+    # re-aliased, not a bare select: the pinned frame gets its own
+    # attribute ids and keeps its projection over the caller's plan
+    e = tracked_persist(edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")))
     # the complete node set with out-degree AND in-degree in ONE pass /
     # ONE shuffle (explode both endpoints, partial-agg the counters) —
     # replaces the old deg-aggregate + dst-distinct + full-outer-join
@@ -336,12 +334,10 @@ def co_occurrence_edges(
 def triangle_stats(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """Exact triangle count + global clustering coefficient, by
-    degree-ordered edge orientation with adjacency-array intersection
+    """Exact triangle count + global clustering coefficient of a (src, dst)
+    edge list, by degree-ordered edge orientation with adjacency-array intersection
     (the "compact-forward" algorithm — Latapy, TCS 2008; orientation as
     in Suri & Vassilvitskii's MR version / GraphX's formulation).
 
@@ -378,13 +374,11 @@ def triangle_stats(
     # upstream work on the q41 composition.
     if assume_canonical:
         und = tracked_local_checkpoint(
-            edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")),
+            edges.select(F.col("src").alias("u"), F.col("dst").alias("v")),
             eager=False,
         )
     else:
-        u, v = F.least(F.col(src_col), F.col(dst_col)), F.greatest(
-            F.col(src_col), F.col(dst_col)
-        )
+        u, v = F.least(F.col("src"), F.col("dst")), F.greatest(F.col("src"), F.col("dst"))
         und = tracked_persist(
             edges.select(u.alias("u"), v.alias("v"))
             .filter(F.col("u") != F.col("v"))
@@ -459,16 +453,9 @@ def triangle_stats(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    iterations: int = 2,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, *, iterations: int = 2) -> DataFrame:
     """Synchronous label propagation (community detection) over a directed
-    edge list, with a fully deterministic tie-break.
+    (src, dst) edge list, with a fully deterministic tie-break.
 
     Standard LPA is notoriously non-deterministic (random visit order,
     random tie-breaks); this is the *reproducible* formulation suitable
@@ -490,16 +477,15 @@ def label_propagation(
     is a ``min_by`` over (count desc, label asc) — a partial aggregate,
     not a node-keyed sort window. Iteration count is fixed (the plan is
     a finite unrolled chain); deep runs cut lineage with a tracked
-    localCheckpoint every ``checkpoint_every`` rounds. A 100 TB edge
+    localCheckpoint every 4 rounds. A 100 TB edge
     list distributes on dst; hub skew salts cleanly because the
     per-label count is a sum (operators/skew.py).
 
     Returns (node, label). Reference analogue: community grouping of the
     co-occurrence graphs the reference builds pairwise in pandas.
     """
-    e = tracked_persist(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-    )
+    # re-aliased for the same reason as pagerank's pin
+    e = tracked_persist(edges.select(F.col("src").alias("src"), F.col("dst").alias("dst")))
     nodes = tracked_persist(
         e.select(
             F.explode(
@@ -559,7 +545,7 @@ def label_propagation(
             labels = labels.join(picked, "node", "left").select(
                 "node", F.coalesce(F.col("__new"), F.col("label")).alias("label")
             )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < int(iterations):
+        if (i + 1) % 4 == 0 and (i + 1) < int(iterations):
             labels = tracked_local_checkpoint(labels)
     return labels
 

@@ -63,21 +63,19 @@ def merge_partial_aggs(*parts: DataFrame) -> DataFrame:
     )
 
 
-def partial_distinct_state(
-    df: DataFrame, keys: list[str], value_col: str, *, lg_k: int = 12
-) -> DataFrame:
+def partial_distinct_state(df: DataFrame, keys: list[str], value_col: str) -> DataFrame:
     """Per-key mergeable DISTINCT-COUNT state (Apache DataSketches HLL via
     ``hll_sketch_agg``) — the non-trivial member of the incremental
     family: count/sum/min/max merge with arithmetic, COUNT DISTINCT does
     not (|A ∪ B| != |A| + |B|), so an incrementally-maintained distinct
     requires a sketch whose union is exact over its register state.
 
-    Binary sketch column ``hll_v`` is 2^lg_k registers (~4 KB at the
-    default): per-key state is constant-size no matter how many raw rows
+    Binary sketch column ``hll_v`` is 2^12 registers (lg_k = 12, ~4 KB):
+    per-key state is constant-size no matter how many raw rows
     fold in. Same one-shuffle shape as :func:`partial_aggs`.
     """
     return df.groupBy(*keys).agg(
-        F.hll_sketch_agg(value_col, F.lit(int(lg_k))).alias("hll_v"),
+        F.hll_sketch_agg(value_col, F.lit(12)).alias("hll_v"),
         F.count(value_col).alias("cnt"),
     )
 
@@ -101,7 +99,7 @@ def merge_distinct_state(*parts: DataFrame) -> DataFrame:
 def estimate_distinct(state: DataFrame) -> DataFrame:
     """Read-time estimate from merged state: (keys..., cnt,
     approx_distinct). Relative error ~1.04/sqrt(2^lg_k) (~1.6% at the
-    default lg_k=12)."""
+    lg_k=12 of :func:`partial_distinct_state`)."""
     return state.select(
         *[c for c in state.columns if c not in ("hll_v", "cnt")],
         "cnt",
@@ -199,8 +197,9 @@ def merge_kmv_state(*parts: DataFrame, k: int = 256) -> DataFrame:
     return topk.groupBy(*keys).agg(F.array_sort(F.collect_list("__h")).alias("kmv_v"))
 
 
-def estimate_kmv(state: DataFrame, *, k: int = 256, round_to: int = 4) -> DataFrame:
-    """Read-time estimate from KMV state: (keys..., ``approx_distinct``).
+def estimate_kmv(state: DataFrame, *, k: int = 256) -> DataFrame:
+    """Read-time estimate from KMV state: (keys..., ``approx_distinct``,
+    4 dp).
 
     A sketch holding fewer than k hashes saw fewer than k distinct
     values — the estimate is exact. A full sketch estimates
@@ -215,5 +214,5 @@ def estimate_kmv(state: DataFrame, *, k: int = 256, round_to: int = 4) -> DataFr
     )
     return state.select(
         *[c for c in state.columns if c != "kmv_v"],
-        F.round(est, round_to).alias("approx_distinct"),
+        F.round(est, 4).alias("approx_distinct"),
     )

@@ -47,11 +47,10 @@ def extract_features(
     payload_col: str,
     *,
     decoder: Decoder = _not_implemented_decoder,
-    batch_feature_dim: int = FEATURE_DIM,
 ) -> DataFrame:
     """Decode payloads → fixed-dim feature vectors via mapInPandas.
 
-    Output: (id, n_bytes, features array<double>[batch_feature_dim]).
+    Output: (id, n_bytes, features array<double>[FEATURE_DIM]).
     Partitioning is preserved (no shuffle); each Arrow batch decodes in one
     Python call. Failures raise (fail-fast contract).
     """

@@ -29,30 +29,26 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def redact(col: F.Column, patterns: list[tuple[str, str, str]] = PII_PATTERNS) -> F.Column:
+def redact(col: F.Column) -> F.Column:
     """Replace every PII match with its typed placeholder, in rule order."""
     out = col
-    for _, pattern, replacement in patterns:
+    for _, pattern, replacement in PII_PATTERNS:
         out = F.regexp_replace(out, pattern, replacement)
     return out
 
 
-def pii_profile(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    patterns: list[tuple[str, str, str]] = PII_PATTERNS,
-) -> DataFrame:
-    """Per-document PII counts + the redacted text and its content hash.
+def pii_profile(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document ``PII_PATTERNS`` counts + the redacted text and its
+    content hash.
 
     Returns (id, n_<name>... , n_pii, redacted, redacted_key). The hash key
     lets a pipeline verify redaction idempotence (re-running changes
     nothing) and dedup the scrubbed corpus without re-reading full text.
     """
     c = F.col(text_col)
-    counts = [F.regexp_count(c, F.lit(p)).alias(f"n_{name}") for name, p, _ in patterns]
-    total = sum(F.regexp_count(c, F.lit(p)) for _, p, _ in patterns)
-    red = redact(c, patterns)
+    counts = [F.regexp_count(c, F.lit(p)).alias(f"n_{name}") for name, p, _ in PII_PATTERNS]
+    total = sum(F.regexp_count(c, F.lit(p)) for _, p, _ in PII_PATTERNS)
+    red = redact(c)
     return df.select(
         F.col(id_col),
         *counts,

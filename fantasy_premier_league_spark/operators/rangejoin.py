@@ -27,15 +27,13 @@ def lookback_join(
     events: DataFrame,
     anchors: DataFrame,
     *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    anchor_ts_col: str = "ts",
-    anchor_id_col: str = "event_id",
     window_seconds: int = 1800,
     bucket_seconds: int | None = None,
 ) -> DataFrame:
     """Pairs (anchor, event) where the event is in the anchor's look-back
-    window ``[anchor_ts - window, anchor_ts)`` for the same key.
+    window ``[anchor_ts - window, anchor_ts)`` for the same ``user_id``.
+    Both sides carry the events schema's ``user_id`` and ``ts``; anchors
+    are identified by ``event_id``.
 
     Returns the exploded pair frame: every ``events`` column plus
     ``anchor_id`` and ``anchor_us``; aggregate per anchor downstream. The
@@ -50,14 +48,14 @@ def lookback_join(
     # floor division, NOT double-divide-then-cast: casting truncates toward
     # zero, which shifts every pre-1970 (negative-microsecond) timestamp
     # into the wrong bucket and silently drops its matches
-    e = events.withColumn("__us", F.unix_micros(F.col(ts_col).cast("timestamp"))).withColumn(
+    e = events.withColumn("__us", F.unix_micros(F.col("ts").cast("timestamp"))).withColumn(
         "__bucket", F.floor(F.col("__us") / F.lit(bucket_us)).cast("long")
     )
     a = (
         anchors.select(
-            F.col(key_col).alias("__akey"),
-            F.col(anchor_id_col).alias("anchor_id"),
-            F.unix_micros(F.col(anchor_ts_col).cast("timestamp")).alias("anchor_us"),
+            F.col("user_id").alias("__akey"),
+            F.col("event_id").alias("anchor_id"),
+            F.unix_micros(F.col("ts").cast("timestamp")).alias("anchor_us"),
         )
         .withColumn("__abucket", F.floor(F.col("anchor_us") / F.lit(bucket_us)).cast("long"))
         # probe every bucket the look-back window can overlap
@@ -71,7 +69,7 @@ def lookback_join(
     )
     pairs = a.join(
         e,
-        (F.col("__akey") == F.col(key_col)) & (a["__bucket"] == e["__bucket"]),
+        (F.col("__akey") == F.col("user_id")) & (a["__bucket"] == e["__bucket"]),
     ).filter(
         (F.col("__us") >= F.col("anchor_us") - F.lit(window_us))
         & (F.col("__us") < F.col("anchor_us"))

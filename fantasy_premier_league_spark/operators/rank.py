@@ -108,8 +108,8 @@ def global_cumsum(
     )
 
 
-def global_rank(df: DataFrame, order: list[Column], *, out: str = "rank", start: int = 1) -> DataFrame:
-    """Dense global row numbering under a total order (ties must be broken
+def global_rank(df: DataFrame, order: list[Column], *, out: str = "rank") -> DataFrame:
+    """Dense 1-based global row numbering under a total order (ties must be broken
     by the caller's ``order`` — append a unique key for determinism).
 
     Pure-DataFrame two-phase rank: one range sort, zero Python, no
@@ -126,7 +126,7 @@ def global_rank(df: DataFrame, order: list[Column], *, out: str = "rank", start:
     cum = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = sizes.select(
         "__pid",
-        (F.coalesce(F.sum("__n").over(cum), F.lit(0)) + F.lit(start)).alias("__off"),
+        (F.coalesce(F.sum("__n").over(cum), F.lit(0)) + F.lit(1)).alias("__off"),
     )
 
     local = Window.partitionBy("__pid").orderBy(*order)

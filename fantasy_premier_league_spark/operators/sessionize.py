@@ -18,6 +18,10 @@ user whose timeline outgrows a task is the documented salting case
 
 Timestamps compare in integer microseconds (``unix_micros``) so gap
 arithmetic is exact and engine-portable (DuckDB: ``epoch_us``).
+
+Every operator here reads the events table's columns: ``user_id`` is the
+entity key, ``ts`` the event time, ``event_type`` the state, ``event_id``
+the unique tie-break and ``value`` the amount.
 """
 
 from __future__ import annotations
@@ -25,25 +29,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+#: day offsets index off this fixed date via the engine-portable datediff
+#: idiom (q18), so day and cohort boundaries match across engines/timezones
+EPOCH = "2024-01-01"
+#: trailing window, in days, of the decayed-activity and rolling z-score frames
+LOOKBACK_DAYS = 28
 
-def sessionize(
-    df: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Assign a dense per-key ``session_seq`` (1-based) to every row.
+
+def sessionize(df: DataFrame, *, gap_seconds: int = 1800) -> DataFrame:
+    """Assign a dense per-user ``session_seq`` (1-based) to every row.
 
     Rows belong to the same session while consecutive gaps are
-    <= ``gap_seconds``; ordering ties break on ``tiebreak_col`` so the
+    <= ``gap_seconds``; ordering ties break on ``event_id`` so the
     assignment is deterministic under duplicate timestamps.
     """
     # .cast("timestamp") tolerates TIMESTAMP_NTZ inputs (unix_micros rejects
     # them); under a UTC session the cast is epoch-exact either way
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    order = W.partitionBy(key_col).orderBy(us, F.col(tiebreak_col))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    order = W.partitionBy("user_id").orderBy(us, F.col("event_id"))
     gap_us = F.lit(int(gap_seconds) * 1_000_000)
     opens = (
         F.when(F.lag(us).over(order).isNull(), 1)
@@ -54,56 +57,36 @@ def sessionize(
     return df.withColumn("session_seq", F.sum(opens).over(running).cast("int"))
 
 
-def session_stats(
-    df: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    value_col: str | None = "value",
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Per-session aggregates: (key, session_seq, n_events, session_start,
-    session_end, total_value). One shuffle total — the groupBy reuses the
-    sessionize partitioning."""
-    s = sessionize(
-        df, key_col=key_col, ts_col=ts_col, tiebreak_col=tiebreak_col, gap_seconds=gap_seconds
-    )
-    aggs = [
+def session_stats(df: DataFrame, *, gap_seconds: int = 1800) -> DataFrame:
+    """Per-session aggregates: (user_id, session_seq, n_events,
+    session_start, session_end, total_value). One shuffle total — the
+    groupBy reuses the sessionize partitioning."""
+    return sessionize(df, gap_seconds=gap_seconds).groupBy("user_id", "session_seq").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-    ]
-    if value_col is not None:
-        aggs.append(F.round(F.sum(value_col), 2).alias("total_value"))
-    return s.groupBy(key_col, "session_seq").agg(*aggs)
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+        F.round(F.sum("value"), 2).alias("total_value"),
+    )
 
 
-def funnel_counts(
-    df: DataFrame,
-    stages: list[str],
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
+def funnel_counts(df: DataFrame, stages: list[str]) -> DataFrame:
     """Ordered-sequence funnel: stage k counts users whose earliest
     stage-k event lies STRICTLY after their stage-(k-1) time.
 
     Returns ``(stage_idx, stage, n_users, conversion)`` with conversion
     relative to stage 1. The strict ordering is the part plain
     per-stage filters get wrong: a purchase that precedes the click must
-    not convert. Each stage is one key-keyed aggregation joined to the
+    not convert. Each stage is one user-keyed aggregation joined to the
     previous stage's (shrinking) frame — shuffles stay on the user key,
     stage frames shrink monotonically, output is stages-sized.
     """
     prev: DataFrame | None = None
     stage_frames: list[DataFrame] = []
     for stage in stages:
-        cur = df.filter(F.col(type_col) == stage)
+        cur = df.filter(F.col("event_type") == stage)
         if prev is not None:
-            cur = cur.join(prev, key_col).filter(F.col(ts_col) > F.col("__t"))
-        cur = cur.groupBy(key_col).agg(F.min(ts_col).alias("__t"))
+            cur = cur.join(prev, "user_id").filter(F.col("ts") > F.col("__t"))
+        cur = cur.groupBy("user_id").agg(F.min("ts").alias("__t"))
         stage_frames.append(cur)
         prev = cur
     counted = [
@@ -128,43 +111,33 @@ def funnel_counts(
     )
 
 
-def retention_cohorts(
-    df: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    epoch: str = "2024-01-01",
-    period_days: int = 7,
-) -> DataFrame:
-    """Retention triangle: users cohorted by the period of their first
-    event; each (cohort, period-offset) cell counts distinct active
+def retention_cohorts(df: DataFrame) -> DataFrame:
+    """Weekly retention triangle: users cohorted by the week of their
+    first event; each (cohort, week-offset) cell counts distinct active
     users and its retention rate vs the cohort size (offset 0).
 
-    Periods index off a fixed ``epoch`` via the engine-portable datediff
-    idiom (q18), so cohort boundaries are deterministic across engines
-    and timezones. Two key-keyed aggregations + one distinct; all
-    shuffles on bounded keys.
+    Weeks index off ``EPOCH``, so cohort boundaries are deterministic
+    across engines and timezones. Two user-keyed aggregations + one
+    distinct; all shuffles on bounded keys.
     """
 
-    def period(col: str) -> F.Column:
-        return F.floor(
-            F.datediff(col, F.lit(epoch).cast("timestamp")) / period_days
-        ).cast("int")
+    def week(col: str) -> F.Column:
+        return F.floor(F.datediff(col, F.lit(EPOCH).cast("timestamp")) / 7).cast("int")
 
-    f = df.groupBy(key_col).agg(F.min(ts_col).alias("__first"))
+    f = df.groupBy("user_id").agg(F.min("ts").alias("__first"))
     a = (
-        df.join(f, key_col)
+        df.join(f, "user_id")
         .select(
-            key_col,
-            period("__first").alias("cohort_week"),
-            (period(ts_col) - period("__first")).alias("week_offset"),
+            "user_id",
+            week("__first").alias("cohort_week"),
+            (week("ts") - week("__first")).alias("week_offset"),
         )
         .distinct()
     )
     sizes = (
         a.filter(F.col("week_offset") == 0)
         .groupBy("cohort_week")
-        .agg(F.countDistinct(key_col).alias("__size"))
+        .agg(F.countDistinct("user_id").alias("__size"))
     )
     return (
         a.groupBy("cohort_week", "week_offset")
@@ -181,26 +154,18 @@ def retention_cohorts(
     )
 
 
-def decayed_activity(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    epoch: str = "2024-01-01",
-    halflife_days: float = 7.0,
-    lookback_days: int = 28,
-) -> DataFrame:
-    """Exponentially-decayed activity score per entity — the recency-
+def decayed_activity(events: DataFrame) -> DataFrame:
+    """Exponentially-decayed activity score per user — the recency-
     weighted engagement feature behind churn/propensity models.
 
-    score(u, t) = sum over u's events in [t - lookback, t] of
-    0.5 ** ((t - t_event) / halflife), evaluated at u's LAST event; one
-    row per entity: (key, last_day, decayed_score).
+    score(u, t) = sum over u's events in [t - LOOKBACK_DAYS, t] of
+    0.5 ** ((t - t_event) / 7), a 7-day half-life, evaluated at u's LAST
+    event; one row per user: (user_id, last_day, decayed_score).
 
     A true EWMA is a recurrence (state_t = a*state_{t-1} + x_t) that SQL
     window frames can't express; the truncated form is expressible AND
     is what you actually want at scale — the >lookback tail is below
-    2^-(lookback/halflife) and its state would otherwise be unbounded.
+    2^-(28/7) and its state would otherwise be unbounded.
     The trick: a RANGE window frame on integer day offsets (deterministic
     under timestamp ties, unlike ROWS frames) collects the in-range event
     days into an array, and ``F.aggregate`` folds the decay sum JVM-side
@@ -212,14 +177,10 @@ def decayed_activity(
     both on the same key, so Catalyst reuses the exchange. State per row
     is bounded by the entity's events inside the lookback, not history.
     """
-    day = F.datediff(F.col(ts_col), F.lit(epoch).cast("date"))
-    w = (
-        W.partitionBy(key_col)
-        .orderBy("__day")
-        .rangeBetween(-int(lookback_days), 0)
-    )
+    day = F.datediff(F.col("ts"), F.lit(EPOCH).cast("date"))
+    w = W.partitionBy("user_id").orderBy("__day").rangeBetween(-LOOKBACK_DAYS, 0)
     scored = (
-        events.select(F.col(key_col), day.alias("__day"))
+        events.select(F.col("user_id"), day.alias("__day"))
         .withColumn("__days", F.collect_list("__day").over(w))
         .withColumn(
             "decayed_score",
@@ -230,34 +191,25 @@ def decayed_activity(
                     lambda acc, x: acc
                     + F.pow(
                         F.lit(0.5),
-                        (F.col("__day") - x) / F.lit(float(halflife_days)),
+                        (F.col("__day") - x) / F.lit(7.0),
                     ),
                 ),
                 6,
             ),
         )
     )
-    pick = W.partitionBy(key_col).orderBy(F.col("__day").desc())
+    pick = W.partitionBy("user_id").orderBy(F.col("__day").desc())
     return (
         scored.withColumn("__rn", F.row_number().over(pick))
         .filter(F.col("__rn") == 1)
-        .select(F.col(key_col), F.col("__day").alias("last_day"), "decayed_score")
+        .select(F.col("user_id"), F.col("__day").alias("last_day"), "decayed_score")
     )
 
 
-def rolling_zscore_outliers(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    epoch: str = "2024-01-01",
-    lookback_days: int = 28,
-    z_threshold: float = 2.0,
-    value_decimals: int = 2,
-) -> DataFrame:
-    """Rolling z-score anomaly flags per entity: each event's value is
-    standardized against the entity's own trailing window — the
+def rolling_zscore_outliers(events: DataFrame) -> DataFrame:
+    """Rolling z-score anomaly flags per user: each event's value is
+    standardized against the user's own trailing ``LOOKBACK_DAYS``
+    window and flagged at |z| >= 2 — the
     monitoring primitive behind spend-spike / metric-drift alerts.
 
     The frame is a RANGE window on integer day offsets (all timestamp
@@ -267,7 +219,7 @@ def rolling_zscore_outliers(
     the tie rows arrive, and this corpus contains z values within 1e-10
     of a 4-dp rounding boundary, so the rounded output flipped with the
     partition layout.  The moments are therefore computed from EXACT
-    integer sums: ``value`` is scaled to its ``value_decimals``-dp
+    integer sums: ``value`` is scaled to its 2-dp
     integer representation (lossless for this corpus's 2-dp amounts),
     count / sum / sum-of-squares accumulate exactly (order-independent
     by construction), and the z numerator ``c*n - s`` and second-moment
@@ -275,28 +227,23 @@ def rolling_zscore_outliers(
     correctly-rounded cast to double feeds a fixed IEEE expression —
     identical bit-for-bit across partitionings and across engines
     (the oracle SQL mirrors the same expression tree).  Inputs with
-    more than ``value_decimals`` decimals are standardized on their
-    rounded representation.
+    more than 2 decimals are standardized on their rounded
+    representation.
 
     A window with fewer than 2 observations (or zero variance, E == 0)
     yields a null z and a 0 flag rather than a division blow-up.
 
-    One entity-keyed exchange; all three sums share the single window.
+    One user-keyed exchange; all three sums share the single window.
     """
-    day = F.datediff(F.col(ts_col), F.lit(epoch).cast("date"))
-    w = (
-        W.partitionBy(key_col)
-        .orderBy("__day")
-        .rangeBetween(-int(lookback_days), 0)
-    )
-    scale = 10 ** int(value_decimals)
+    day = F.datediff(F.col("ts"), F.lit(EPOCH).cast("date"))
+    w = W.partitionBy("user_id").orderBy("__day").rangeBetween(-LOOKBACK_DAYS, 0)
     base = events.select(
-        F.col(key_col),
+        F.col("user_id"),
         day.alias("__day"),
-        F.col(value_col).alias("value"),
+        F.col("value"),
         # exact integer representation; round() clears the double's
         # representation error (560.21*100 = 56020.999999999993 -> 56021)
-        F.round(F.col(value_col) * F.lit(scale))
+        F.round(F.col("value") * F.lit(100))
         .cast("decimal(18,0)")
         .alias("__c"),
     )
@@ -305,7 +252,7 @@ def rolling_zscore_outliers(
     # Spark's physical Window does not CSE repeated window expressions —
     # inlining them produced 26 duplicate aggregates in the Window node.
     moments = base.select(
-        F.col(key_col),
+        F.col("user_id"),
         F.col("__day"),
         "value",
         "__c",
@@ -325,45 +272,35 @@ def rolling_zscore_outliers(
         (n < 2) | (e == 0), F.lit(None).cast("double")
     ).otherwise(F.round(zraw, 4))
     return moments.select(
-        F.col(key_col),
+        F.col("user_id"),
         F.col("__day").alias("day"),
         "value",
         z.alias("zscore"),
-        F.when(F.abs(z) >= z_threshold, F.lit(1)).otherwise(F.lit(0)).alias("is_outlier"),
+        F.when(F.abs(z) >= 2.0, F.lit(1)).otherwise(F.lit(0)).alias("is_outlier"),
     )
 
 
-def transition_matrix(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("event_id",),
-    round_to: int = 6,
-) -> DataFrame:
-    """First-order Markov transition matrix over per-entity event
+def transition_matrix(events: DataFrame) -> DataFrame:
+    """First-order Markov transition matrix over per-user event-type
     sequences: P(next state | state), from lead() pairs — the path
     model behind "what do users do after X" product analytics and
     next-event baselines.
 
-    Ordering inside an entity is (ts, *order_cols) — the extra unique
-    tie-break columns make lead() deterministic when timestamps collide
+    Ordering inside a user is (ts, event_id) — the unique tie-break
+    column makes lead() deterministic when timestamps collide
     (a bare ts ORDER BY silently depends on partition order). Terminal
     events (no successor) are dropped, matching the standard estimator.
 
-    One entity-keyed window shuffle + one (state, next) groupBy; the
+    One user-keyed window shuffle + one (state, next) groupBy; the
     per-state totals fold in via a window sum over the tiny pair-count
     frame (a join against a separate totals aggregate would re-evaluate
     the unpersisted pairs subtree and double every upstream shuffle).
     """
-    w = W.partitionBy(key_col).orderBy(
-        F.col(ts_col), *[F.col(c) for c in order_cols]
-    )
+    w = W.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     pairs = (
-        events.withColumn("__next", F.lead(state_col).over(w))
+        events.withColumn("__next", F.lead("event_type").over(w))
         .filter(F.col("__next").isNotNull())
-        .groupBy(F.col(state_col).alias("from_state"), F.col("__next").alias("to_state"))
+        .groupBy(F.col("event_type").alias("from_state"), F.col("__next").alias("to_state"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
     # per-state totals as a window over the (state, next) counts — NOT a
@@ -374,20 +311,13 @@ def transition_matrix(
         "from_state",
         "to_state",
         "n",
-        F.round(F.col("n") / total, round_to).alias("prob"),
+        F.round(F.col("n") / total, 6).alias("prob"),
     )
 
 
-def calendar_fill(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    epoch: str = "2024-01-01",
-) -> DataFrame:
-    """Dense-calendar gap fill with forward carry: one row per (entity,
-    day) between the entity's first and last activity, daily totals
+def calendar_fill(events: DataFrame) -> DataFrame:
+    """Dense-calendar gap fill with forward carry: one row per (user,
+    day) between the user's first and last activity, daily totals
     where observed, and the last observed total carried forward across
     gap days — the resampling step every time-series feature pipeline
     needs before window math, where a missing day must mean "carried
@@ -402,28 +332,24 @@ def calendar_fill(
     the one place a ROWS frame is deterministic). Spine and daily share
     the entity key, so AQE coalesces onto one exchange family.
 
-    Returns (key, day, daily_sum, observed, filled); sums rounded to
+    Returns (user_id, day, daily_sum, observed, filled); sums rounded to
     6 dp before the carry so both engines carry identical values.
     """
-    day = F.datediff(F.col(ts_col), F.lit(epoch).cast("date"))
+    day = F.datediff(F.col("ts"), F.lit(EPOCH).cast("date"))
     daily = (
-        events.select(F.col(key_col), day.alias("day"), F.col(value_col).alias("v"))
-        .groupBy(key_col, "day")
+        events.select(F.col("user_id"), day.alias("day"), F.col("value").alias("v"))
+        .groupBy("user_id", "day")
         .agg(F.round(F.sum("v"), 6).alias("daily_sum"))
     )
     spine = (
-        daily.groupBy(key_col)
+        daily.groupBy("user_id")
         .agg(F.min("day").alias("__mn"), F.max("day").alias("__mx"))
-        .select(F.col(key_col), F.explode(F.sequence("__mn", "__mx")).alias("day"))
+        .select(F.col("user_id"), F.explode(F.sequence("__mn", "__mx")).alias("day"))
     )
-    joined = spine.join(daily, [key_col, "day"], "left")
-    w = (
-        W.partitionBy(key_col)
-        .orderBy("day")
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
+    joined = spine.join(daily, ["user_id", "day"], "left")
+    w = W.partitionBy("user_id").orderBy("day").rowsBetween(W.unboundedPreceding, 0)
     return joined.select(
-        F.col(key_col),
+        F.col("user_id"),
         "day",
         "daily_sum",
         F.col("daily_sum").isNotNull().cast("int").alias("observed"),

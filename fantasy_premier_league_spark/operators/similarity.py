@@ -42,16 +42,28 @@ _IVF_INLINE_PROBE_ROWS = 262_144
 #: n_centroids this engine ships
 _IVF_TRAIN_SAMPLE = 32_768
 
+#: Lloyd's rounds of the IVF coarse quantizers: a coarse quantizer only
+#: shapes cells — recall comes from n_probe, so training to convergence
+#: buys nothing
+_IVF_TRAIN_ITERS = 8
 
-def _local_lloyds(x: np.ndarray, *, k: int, iters: int, seed: int = 42) -> np.ndarray:
+#: decimal places every cosine scorer here rounds to before ranking or
+#: thresholding (rounded cosine + id tie-break is what oracles replay)
+COSINE_DIGITS = 4
+
+#: embedding width the product quantizers slice into ``m`` subspaces
+PQ_DIM = 64
+
+
+def _local_lloyds(x: np.ndarray, *, k: int, iters: int) -> np.ndarray:
     """DETERMINISTIC Lloyd's k-means on a BOUNDED sample (driver-side,
     numpy), every step engine-portable so an external SQL engine can
     replay the whole training loop value-for-value (the q16 oracle does):
 
     - init = the FIRST k sample rows — the sample arrives md5-hash-
       ordered (a fixed random permutation of the corpus), so this is
-      random init that any engine reproduces; ``seed`` is retained for
-      API stability but the hash order is the randomness source,
+      random init that any engine reproduces; the hash order is the sole
+      randomness source,
     - per-round distances are round(sqrt(Σ(x-c)²), 6) with first-index
       tie-break — the same rounded metric the Spark-side assignment and
       probe expressions use, so a knife-edge assignment cannot diverge
@@ -63,11 +75,6 @@ def _local_lloyds(x: np.ndarray, *, k: int, iters: int, seed: int = 42) -> np.nd
     Early termination is unnecessary for replay correctness: once
     assignments repeat, the rounded means are a fixpoint, so a fixed
     ``iters`` replay and a converged shorter run agree exactly.
-
-    ``seed`` is a dead parameter since the hash-order init landed: the
-    md5 permutation is the sole randomness source, so every seed yields
-    the same quantizer. A non-default seed warns instead of silently
-    returning byte-identical output (ADVICE r9).
 
     Rounding-mode note (accepted knife-edge flake mode, ADVICE r9):
     training rounds with ``np.round`` (half-to-even on the scaled
@@ -83,14 +90,6 @@ def _local_lloyds(x: np.ndarray, *, k: int, iters: int, seed: int = 42) -> np.nd
     failure is a value-hash mismatch on one row, not a silent wrong
     answer.
     """
-    if seed != 42:
-        import warnings
-
-        warnings.warn(
-            "_local_lloyds: 'seed' is inert — init is the first-k rows of the "
-            "md5-hash order, so all seeds produce the same quantizer",
-            stacklevel=2,
-        )
     n = len(x)
     if n == 0:
         raise ValueError("ivf_topk: empty corpus — nothing to train the quantizer on")
@@ -128,14 +127,14 @@ def _train_sample(c: "DataFrame", *, id_field: str, vec_field: str) -> np.ndarra
 
 
 def _train_quantizer(
-    c: "DataFrame", *, id_field: str, vec_field: str, k: int, iters: int, seed: int = 42
+    c: "DataFrame", *, id_field: str, vec_field: str, k: int, iters: int
 ) -> np.ndarray:
     """Bounded deterministic sample → local Lloyd's (see
     :func:`_local_lloyds`). Hash order (not head) keeps the sample
     unbiased under any input partitioning/sort; the md5-derived hash
     (not xxhash64) keeps the permutation replayable by SQL oracles."""
     sample = _train_sample(c, id_field=id_field, vec_field=vec_field)
-    return _local_lloyds(sample, k=k, iters=iters, seed=seed)
+    return _local_lloyds(sample, k=k, iters=iters)
 
 
 def _assign_cells(c: "DataFrame", centroids: np.ndarray, *, vec_field: str) -> "DataFrame":
@@ -197,7 +196,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Exact brute-force cosine top-k: for each query vector the k nearest
     corpus vectors (excluding itself), ranked on rounded cosine with id
@@ -224,7 +222,7 @@ def cosine_topk(
         )
     ).withColumn("__cn", _norm(F.col("cvec")))
     pairs = c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
-    cosine = F.round(_dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), round_digits)
+    cosine = F.round(_dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), COSINE_DIGITS)
     scored = pairs.select("query_id", "neighbor_id", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -238,7 +236,6 @@ def hard_negative_topk(
     vec_col: str = "embedding",
     label_col: str = "label",
     k: int = 3,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Hard-negative mining for embedding/contrastive training: for each
     query (anchor), the k most-similar corpus vectors with a DIFFERENT
@@ -273,7 +270,7 @@ def hard_negative_topk(
     # per-side norms precomputed (see cosine_topk) -- value-identical
     cosine = F.round(
         _dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")),
-        round_digits,
+        COSINE_DIGITS,
     )
     scored = pairs.select("query_id", "neighbor_id", "neg_label", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -293,10 +290,8 @@ def semantic_decontaminate(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.35,
-    round_digits: int = 4,
     eval_broadcast_max_rows: int = _DECON_EVAL_BROADCAST_MAX_ROWS,
     n_probe: int = 8,
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding-space decontamination: for every TRAIN vector, its best
     cosine match in the EVAL set, plus a contamination verdict — the
@@ -336,10 +331,8 @@ def semantic_decontaminate(
             id_col=id_col,
             vec_col=vec_col,
             threshold=threshold,
-            round_digits=round_digits,
             eval_rows=n_eval,
             n_probe=n_probe,
-            seed=seed,
         )
     # the per-pair cosine folds (|train| x |eval|) and the partial argmax
     # run on the train scan's partitions: spread a too-narrow local scan
@@ -360,7 +353,7 @@ def semantic_decontaminate(
     # per-side norms precomputed (see cosine_topk) -- value-identical
     cosine = F.round(
         _dot(F.col("tvec"), F.col("evec")) / (F.col("__tn") * F.col("__en")),
-        round_digits,
+        COSINE_DIGITS,
     )
     scored = t.crossJoin(F.broadcast(e)).select(
         "train_id", "eval_id", cosine.alias("cosine")
@@ -383,12 +376,9 @@ def semantic_decontaminate_ivf(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.35,
-    round_digits: int = 4,
     eval_rows: int | None = None,
     n_centroids: int | None = None,
     n_probe: int = 8,
-    seed: int = 42,
-    max_iter: int = 8,
 ) -> DataFrame:
     """Beyond-broadcast decontamination: the eval set is IVF-bucketed
     (coarse quantizer trained on a bounded seeded eval sample — the
@@ -431,7 +421,7 @@ def semantic_decontaminate_ivf(
         n_eval = eval_rows if eval_rows is not None else e.count()
         n_centroids = max(16, min(4096, -(-n_eval // 4096)))
     centroids = _train_quantizer(
-        e, id_field="eval_id", vec_field="evec", k=n_centroids, iters=max_iter, seed=seed
+        e, id_field="eval_id", vec_field="evec", k=n_centroids, iters=_IVF_TRAIN_ITERS
     )
     bucketed = _assign_cells(e, centroids, vec_field="evec")
 
@@ -462,7 +452,7 @@ def semantic_decontaminate_ivf(
 
     cosine = F.round(
         _dot(F.col("tvec"), F.col("evec")) / (F.col("__tn") * F.col("__en")),
-        round_digits,
+        COSINE_DIGITS,
     )
     scored = fanned.join(bucketed, "cell").select(
         "train_id", "eval_id", cosine.alias("cosine")
@@ -487,7 +477,6 @@ def cosine_topk_block(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Blocked-BLAS variant. ``queries_pdf`` has columns (query_id, vec).
 
@@ -519,7 +508,7 @@ def cosine_topk_block(
                 # block-local top-k under the SAME total order as the global
                 # merge (rounded cosine desc, id asc) — otherwise a rounded
                 # tie can be resolved differently per block vs globally
-                col_m = np.round(sims[mask, j], round_digits)
+                col_m = np.round(sims[mask, j], COSINE_DIGITS)
                 order = np.lexsort((ids_m, -col_m))[: min(k, len(ids_m))]
                 out.append(pd.DataFrame({"query_id": qid, "neighbor_id": ids_m[order], "cosine": col_m[order]}))
             if out:
@@ -528,7 +517,7 @@ def cosine_topk_block(
     partial = corpus.select(id_col, vec_col).mapInPandas(
         block_topk, schema="query_id long, neighbor_id long, cosine double"
     )
-    rounded = partial.withColumn("cosine", F.round("cosine", round_digits))
+    rounded = partial.withColumn("cosine", F.round("cosine", COSINE_DIGITS))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return rounded.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -597,7 +586,6 @@ def cosine_pairs_grid(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.5,
-    round_digits: int = 4,
     n_blocks: int = 8,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold via a distributed block
@@ -660,7 +648,7 @@ def cosine_pairs_grid(
                 {
                     "id_a": ids[ia[mask]],
                     "id_b": ids[ib[mask]],
-                    "cosine": np.round(vals[mask], round_digits),
+                    "cosine": np.round(vals[mask], COSINE_DIGITS),
                 }
             )
         ma = pdf["b"].to_numpy() == ti
@@ -674,7 +662,7 @@ def cosine_pairs_grid(
             {
                 "id_a": np.minimum(x, y),
                 "id_b": np.maximum(x, y),
-                "cosine": np.round(sims[ia, ib], round_digits),
+                "cosine": np.round(sims[ia, ib], COSINE_DIGITS),
             }
         )
 
@@ -687,14 +675,9 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
-    round_digits: int = 4,
-    max_iter: int = 8,
     probe_rows: int | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: KMeans-partition the corpus into
@@ -709,28 +692,28 @@ def ivf_topk(
 
     Scanned fraction ~ n_probe/n_centroids. The corpus keeps its cell id as
     a join key (in production: a partition column, so a probe is partition
-    pruning); centroids are driver-sized by construction. ``max_iter``
-    defaults LOW (8): a coarse quantizer only shapes cells — recall comes
-    from n_probe, so training to convergence buys nothing.
+    pruning); centroids are driver-sized by construction. Training runs
+    ``_IVF_TRAIN_ITERS`` (8) rounds: a coarse quantizer only shapes cells —
+    recall comes from n_probe, so training to convergence buys nothing.
 
     The coarse quantizer trains DRIVER-SIDE on a bounded, seeded sample
     (``_IVF_TRAIN_SAMPLE`` rows, portable-md5-hash-ordered so it is
     deterministic and engine-independent) — the FAISS convention, and the
     right call at any scale: 16-256 centroids never need a distributed
     fit over the full corpus, and a local Lloyd's loop replaces ~2x
-    ``max_iter`` scheduled jobs. Training, assignment and probing all
+    ``_IVF_TRAIN_ITERS`` scheduled jobs. Training, assignment and probing all
     use the ROUNDED metric (round(sqrt(L2²), 6), first-index tie-break)
     and rounded per-round means, so the whole trained pipeline is
     replayable value-for-value in an external SQL engine whenever the
     corpus fits the sample bound (the q16 oracle replays all
-    ``max_iter`` Lloyd's rounds in DuckDB). Cell ASSIGNMENT is a
+    ``_IVF_TRAIN_ITERS`` Lloyd's rounds in DuckDB). Cell ASSIGNMENT is a
     map-side argmin against the broadcast centroid array (one projection
     inside codegen — no shuffle, no model transform), so the
     corpus-side plan is scan → project → join.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cvec"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").cast("array<double>").alias("cvec"),
     )
     # the corpus-side argmin assignment + per-candidate cosines run on
     # the scan's partitions — a single-file local scan serialized the
@@ -741,7 +724,7 @@ def ivf_topk(
     c = spread_partitions(c)
     spark = corpus.sparkSession
     centroids = _train_quantizer(c, id_field="neighbor_id", vec_field="cvec",
-                                 k=n_centroids, iters=max_iter, seed=seed)
+                                 k=n_centroids, iters=_IVF_TRAIN_ITERS)
     assigned = _assign_cells(c, centroids, vec_field="cvec")
 
     # probe ASSIGNMENT stays in-engine: the only driver-sized state is the
@@ -759,7 +742,7 @@ def ivf_topk(
         "cell int, ctr array<double>",
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("qvec")
     )
     l2 = F.round(
         F.sqrt(
@@ -805,7 +788,7 @@ def ivf_topk(
             q.withColumn("__qn", _norm(F.col("qvec"))), "query_id"
         )
     cand = cand.filter(F.col("neighbor_id") != F.col("query_id"))
-    cosine = F.round(_dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), round_digits)
+    cosine = F.round(_dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), COSINE_DIGITS)
     scored = cand.select("query_id", "neighbor_id", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -815,12 +798,9 @@ def ivf_topk_seeded(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     n_cells: int = 16,
     n_probe: int = 4,
-    round_digits: int = 4,
 ) -> DataFrame:
     """IVF ANN with deterministic data-derived cells: the ``n_cells``
     lowest-id corpus vectors act as cell seeds; every vector is assigned to
@@ -834,7 +814,7 @@ def ivf_topk_seeded(
     oracle-checkable IVF; ``ivf_topk`` is the KMeans-trained variant.
     """
     e = corpus.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id").alias("vid"), F.col("embedding").cast("array<double>").alias("v")
     )
     # the seed fan-out's distance arithmetic and the downstream
     # per-candidate cosines run on the scan's partitions: spread a
@@ -867,7 +847,7 @@ def ivf_topk_seeded(
         F.col("vid").alias("neighbor_id"), F.col("v").alias("cvec"), "cell"
     )
     probes = (
-        ranked.join(queries.select(F.col(id_col).alias("vid")), "vid", "left_semi")
+        ranked.join(queries.select(F.col("vec_id").alias("vid")), "vid", "left_semi")
         .filter(F.col("rn") <= n_probe)
         .select(F.col("vid").alias("query_id"), F.col("v").alias("qvec"), "cell")
     )
@@ -877,7 +857,7 @@ def ivf_topk_seeded(
     # per-side norms precomputed (see cosine_topk) -- value-identical
     cosine = F.round(
         _dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")),
-        round_digits,
+        COSINE_DIGITS,
     )
     scored = cand.select("query_id", "neighbor_id", cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -914,9 +894,6 @@ def semantic_dedup(
     n_clusters: int | None = None,
     threshold: float = 0.95,
     max_iter: int = 8,
-    seed: int = 42,
-    round_digits: int = 4,
-    pair_block_rows: int = 4_096,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     near-duplicate pruning — k-means-bucket the embedding space, compare
@@ -950,8 +927,8 @@ def semantic_dedup(
       value-identical to the uncollapsed pair join.
     - **tiled-BLAS pairing**: per-cell pairs run as one
       ``applyInPandas`` over the cell key — Arrow batch in, blocked
-      numpy matmul (``pair_block_rows`` x ``pair_block_rows`` gram
-      tiles, so a skewed cell never materializes an m x m matrix) —
+      numpy matmul (4096 x 4096 gram tiles, so a skewed cell never
+      materializes an m x m matrix) —
       instead of a per-pair interpreted zip_with fold. Same
       dot/(sqrt*sqrt) arithmetic and 4-dp round as the q53 grid
       operator, whose BLAS-vs-DuckDB value parity is oracle-pinned.
@@ -977,7 +954,7 @@ def semantic_dedup(
     if n_clusters is None:
         n_rows = len(sample) if len(sample) < _IVF_TRAIN_SAMPLE else c.count()
         n_clusters = derived_n_clusters(n_rows)
-    centroids = _local_lloyds(sample, k=n_clusters, iters=max_iter, seed=seed)
+    centroids = _local_lloyds(sample, k=n_clusters, iters=max_iter)
     # exact-vector collapse: ONE shuffle on the vector key (the same
     # one-shuffle shape as exact dedup) — min-id rep and group size as
     # window aggregates over the vector partition, no re-join of the
@@ -996,7 +973,7 @@ def semantic_dedup(
         _assign_cells(reps, centroids, vec_field="v").select("id", "v", "cell", "gsz")
     )
     thr = float(threshold)
-    blk = int(pair_block_rows)
+    blk = 4_096
 
     def cell_pairs(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy()
@@ -1015,7 +992,7 @@ def semantic_dedup(
                 sims = np.round(
                     (mat[i0:i1] @ mat[j0:j1].T)
                     / np.outer(nrm[i0:i1], nrm[j0:j1]),
-                    round_digits,
+                    COSINE_DIGITS,
                 )
                 ia, ib = np.nonzero(sims >= thr)
                 if i0 == j0:  # diagonal tile: keep strict upper triangle
@@ -1084,13 +1061,9 @@ def lsh_bucket_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 3,
     n_planes: int = 8,
     n_tables: int = 1,
-    seed: int = 42,
-    round_digits: int = 4,
 ) -> DataFrame:
     """Approximate top-k: multi-table random-hyperplane LSH candidate
     buckets, exact cosine rerank over the deduped candidate union.
@@ -1109,8 +1082,8 @@ def lsh_bucket_topk(
     bit-for-bit (and the q55 oracle replays any configuration by
     embedding the same literals).
     """
-    rng = np.random.default_rng(seed)
-    dim_row = queries.select(F.size(F.col(vec_col)).alias("d")).first()
+    rng = np.random.default_rng(42)
+    dim_row = queries.select(F.size(F.col("embedding")).alias("d")).first()
     planes = rng.standard_normal((n_tables, n_planes, int(dim_row["d"])))
 
     # the plane tensor rides in ONE broadcast row (t x p x d nested array),
@@ -1125,7 +1098,7 @@ def lsh_bucket_topk(
     )
 
     def tabled(df: DataFrame, out_id: str, out_vec: str, out_norm: str) -> DataFrame:
-        vec = F.col(vec_col).cast("array<double>")
+        vec = F.col("embedding").cast("array<double>")
 
         def bit(plane: F.Column) -> F.Column:
             dot = F.aggregate(
@@ -1147,7 +1120,7 @@ def lsh_bucket_topk(
         return (
             df.crossJoin(F.broadcast(planes_df))
             .select(
-                F.col(id_col).alias(out_id),
+                F.col("vec_id").alias(out_id),
                 vec.alias(out_vec),
                 _norm(vec).alias(out_norm),
                 F.explode(tables).alias("tb"),
@@ -1172,7 +1145,7 @@ def lsh_bucket_topk(
     pairs = c.join(F.broadcast(q), ["t", "bucket"]).filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    cosine = F.round(_dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), round_digits)
+    cosine = F.round(_dot(F.col("qvec"), F.col("cvec")) / (F.col("__qn") * F.col("__cn")), COSINE_DIGITS)
     # a pair colliding in several tables must score once in the OUTPUT —
     # but dedup AFTER the map-side cosine, not before: deduping the raw
     # pairs shuffled both 64-dim vectors per candidate and fell to a
@@ -1193,16 +1166,12 @@ def ivf_pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     n_cells: int = 16,
     n_probe: int = 4,
     m: int = 8,
     k_codes: int = 16,
     shortlist: int = 8,
     k: int = 3,
-    round_digits: int = 4,
 ) -> DataFrame:
     """The full 100 TB ANN composition in one lazy plan: IVF cell pruning →
     PQ asymmetric-distance scan of the probed cells → exact cosine rerank
@@ -1254,10 +1223,10 @@ def ivf_pq_topk(
     recall); precision of what is returned is exact. Returns
     (query_id, neighbor_id, cosine, rank).
     """
-    d_sub = dim // m
+    d_sub = PQ_DIM // m
     spark = corpus.sparkSession
     e = corpus.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id").alias("vid"), F.col("embedding").cast("array<double>").alias("v")
     )
     # the fused numpy pass carries ids as int64 (and the self-pair filter
     # compares them as such): a string or float id column would silently
@@ -1267,20 +1236,20 @@ def ivf_pq_topk(
     _id_t = dict(e.dtypes)["vid"]
     if _id_t not in ("tinyint", "smallint", "int", "bigint"):
         raise TypeError(
-            f"ivf_pq_topk requires an integral id column; got {id_col}: {_id_t}"
+            f"ivf_pq_topk requires an integral id column; got vec_id: {_id_t}"
         )
 
     # one bounded collect feeds BOTH quantizers: IVF seeds = the n_cells
     # lowest-id vectors, PQ codebook = the k_codes lowest-id vectors
     seed_rows = e.orderBy("vid").limit(max(n_cells, k_codes)).collect()
     q_rows = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qvec"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qvec"),
     ).collect()
     if not seed_rows or not q_rows:
         return queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(id_col).alias("neighbor_id"),
+            F.col("vec_id").alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.lit(0.0).alias("cosine"),
             F.lit(1).alias("rank"),
         ).limit(0)
@@ -1395,7 +1364,7 @@ def ivf_pq_topk(
     )
     cosine = F.round(
         _dot(F.col("qvec"), F.col("cvec")) / (_norm(F.col("qvec")) * _norm(F.col("cvec"))),
-        round_digits,
+        COSINE_DIGITS,
     )
     scored = rer.select("query_id", F.col("vid").alias("neighbor_id"), cosine.alias("cosine"))
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
@@ -1405,20 +1374,17 @@ def ivf_pq_topk(
 def pq_codebook(
     corpus: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     m: int = 8,
     k_codes: int = 16,
 ) -> DataFrame:
     """(j, code, cent) — product-quantization codebook with deterministic
     data-derived codes: the ``k_codes`` lowest-id corpus vectors, sliced
-    into ``m`` subspaces of ``dim/m`` dims; the seed's id is the code id.
+    into ``m`` subspaces of ``PQ_DIM/m`` dims; the seed's id is the code id.
     Closed-form (no KMeans), so an external SQL engine replays it — same
     seeding idea as :func:`ivf_topk_seeded`."""
-    d_sub = dim // m
+    d_sub = PQ_DIM // m
     e = corpus.select(
-        F.col(id_col).alias("code"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id").alias("code"), F.col("embedding").cast("array<double>").alias("v")
     )
     seeds = e.orderBy("code").limit(k_codes)
     subs = F.array(*[F.slice("v", j * d_sub + 1, d_sub) for j in range(m)])
@@ -1429,9 +1395,6 @@ def pq_encode(
     corpus: DataFrame,
     codebook: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     m: int = 8,
 ) -> DataFrame:
     """(vid, codes: array<long>[m]) — nearest-code assignment per subspace
@@ -1439,9 +1402,9 @@ def pq_encode(
     broadcasts, the corpus never shuffles until the final per-vector
     collect_list — 8-byte-per-subspace codes in place of 8 doubles is the
     ~8x footprint cut that makes exhaustive ADC scans affordable."""
-    d_sub = dim // m
+    d_sub = PQ_DIM // m
     e = corpus.select(
-        F.col(id_col).alias("vid"), F.col(vec_col).cast("array<double>").alias("v")
+        F.col("vec_id").alias("vid"), F.col("embedding").cast("array<double>").alias("v")
     )
     subs = F.array(*[F.slice("v", j * d_sub + 1, d_sub) for j in range(m)])
     ev = e.select("vid", F.posexplode(subs).alias("j", "sub"))
@@ -1470,9 +1433,6 @@ def pq_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
     m: int = 8,
     k_codes: int = 16,
     k: int = 3,
@@ -1503,20 +1463,20 @@ def pq_topk(
     """
     import pandas as pd
 
-    cb = pq_codebook(corpus, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k_codes=k_codes)
-    codes = pq_encode(corpus, cb, id_col=id_col, vec_col=vec_col, dim=dim, m=m)
+    cb = pq_codebook(corpus, m=m, k_codes=k_codes)
+    codes = pq_encode(corpus, cb, m=m)
 
     cb_rows = cb.collect()
     code_ids = sorted({r["code"] for r in cb_rows})
     code_idx = {c: i for i, c in enumerate(code_ids)}
-    d_sub = dim // m
+    d_sub = PQ_DIM // m
     cents = np.zeros((m, len(code_ids), d_sub))
     for r in cb_rows:
         cents[r["j"], code_idx[r["code"]]] = r["cent"]
 
     q_rows = (
         queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("v")
+            F.col("vec_id").alias("query_id"), F.col("embedding").cast("array<double>").alias("v")
         )
         .orderBy("query_id")
         .collect()

@@ -112,8 +112,6 @@ def bm25_scores(
     text_col: str,
     *,
     n_query_terms: int = 3,
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """BM25 relevance of every document against the corpus's top-df terms —
     the classic lexical-retrieval scorer (the keyword half of a
@@ -125,6 +123,8 @@ def bm25_scores(
 
         score = sum_t idf(t) * tf * (k1+1) / (tf + k1*(1 - b + b*dl/avgdl))
         idf(t) = ln(1 + (N - df + 0.5) / (df + 0.5))        (Lucene form)
+
+    with the Lucene defaults k1 = 1.2, b = 0.75.
 
     Scale shape: tokenize -> (doc, term) tf and (doc) length aggregates
     (two partial-agg shuffles over the exploded stream); document
@@ -147,8 +147,8 @@ def bm25_scores(
     qterms = dfreq.orderBy(F.col("df").desc(), F.col("word").asc()).limit(n_query_terms)
     idf = F.log(F.lit(1.0) + (F.col("__n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     tf_part = (
-        F.col("tf") * (F.lit(k1) + 1)
-        / (F.col("tf") + F.lit(k1) * (1 - F.lit(b) + F.lit(b) * F.col("dl") / F.col("__avgdl")))
+        F.col("tf") * (F.lit(1.2) + 1)
+        / (F.col("tf") + F.lit(1.2) * (1 - F.lit(0.75) + F.lit(0.75) * F.col("dl") / F.col("__avgdl")))
     )
     return (
         tf.join(F.broadcast(qterms), "word")
@@ -260,14 +260,7 @@ def pmi_collocations(
     )
 
 
-def compression_ratio(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    *,
-    level: int = 6,
-    max_ratio: float = 0.3,
-) -> DataFrame:
+def compression_ratio(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """zlib compression ratio per document — the quality signal CCNet /
     Gopher-style pipelines use to catch machine-generated and
     template-stamped text: highly repetitive documents compress far
@@ -278,14 +271,14 @@ def compression_ratio(
     mapInPandas pass (zlib is C-speed per batch; Arrow moves the
     columns), narrow, no shuffle, embarrassingly parallel — the UDF
     cost model is per-row CPU, not dataflow. DEFLATE at a fixed level
-    is deterministic for fixed input bytes, so the output is stable
+    (6, zlib's default) is deterministic for fixed input bytes, so the output is stable
     across runs/partitionings; there is still no SQL oracle (DuckDB has
     no zlib), so the query is rows-only and the numerics are pinned by
     pytest against direct zlib calls.
 
     Returns (id, raw_bytes, compressed_bytes, ratio, too_repetitive)
-    with ratio = compressed/raw rounded to 6 dp (1.0 for empty docs —
-    never flagged).
+    with ratio = compressed/raw rounded to 6 dp, flagged below 0.3
+    (1.0 for empty docs — never flagged).
     """
     import pandas as pd
 
@@ -304,7 +297,7 @@ def compression_ratio(
         for pdf in it:
             raw = pdf[text_col].fillna("").str.encode("utf-8")
             raw_len = raw.str.len()
-            comp_len = raw.map(lambda b: len(zlib.compress(b, level)))
+            comp_len = raw.map(lambda b: len(zlib.compress(b, 6)))
             ratio = (comp_len / raw_len.where(raw_len > 0, 1)).where(
                 raw_len > 0, 1.0
             ).round(6)
@@ -314,7 +307,7 @@ def compression_ratio(
                     "raw_bytes": raw_len,
                     "compressed_bytes": comp_len,
                     "ratio": ratio,
-                    "too_repetitive": ((raw_len > 0) & (ratio < max_ratio)).astype(
+                    "too_repetitive": ((raw_len > 0) & (ratio < 0.3)).astype(
                         "int32"
                     ),
                 }

@@ -594,18 +594,18 @@ def v57_epoch_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.epoch_interleave(docs, "doc_id", "source", salt="ep")
 
 
-def _containment_lsh_oracle(threshold: float, ratio: float, cap: int | None = 256) -> str:
+def _containment_lsh_oracle(threshold: float, ratio: float) -> str:
     """DuckDB SQL replaying containment_lsh_pairs(num_hashes=32,
     seed=42): single-hash-band MinHash candidates (the
     _minhash_oracle at bands=num_hashes and threshold 0 is exactly the
     r=1 candidate set), the default degenerate-bucket cap (buckets over
-    ``cap`` members dropped before pairing — deterministic, replayed
+    256 members dropped before pairing — deterministic, replayed
     value-for-value like q46's), exact shingle-count containment
     verify, size-ratio scope filter."""
     from .dedup import _minhash_oracle
 
     cand_sql = _minhash_oracle(
-        num_hashes=32, bands=32, threshold=0.0, seed=42, max_bucket_size=cap
+        num_hashes=32, bands=32, threshold=0.0, seed=42, max_bucket_size=256
     )
     return f"""
     WITH {_SH_CTE},

@@ -905,7 +905,7 @@ def q12_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     "proves the optimized plan returns byte-identical results while "
     "indexing a fraction of the postings; frequent boilerplate shingles "
     "(which sort last) leave the self-join entirely, killing the k^2 "
-    "bucket blow-up WITHOUT the recall loss of max_doc_freq blocking.",
+    "bucket blow-up WITHOUT the recall loss of document-frequency blocking.",
     tags=("dedup", "jaccard", "prefix-filter", "llm-pipeline"),
 )
 def v18_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,7 +20,7 @@ _LLOYD_L2 = (
 )
 
 
-def _lloyd_ctes(*, n_centroids: int | str, iters: int, sample: int, dim: int = _EMB_DIM) -> str:
+def _lloyd_ctes(*, n_centroids: int | str, iters: int, sample: int) -> str:
     """Shared WITH-body replaying the deterministic Lloyd's trainer
     (operators/similarity.py::_local_lloyds) in DuckDB: md5-hash-ordered
     bounded sample, first-k init, ``iters`` unrolled (assign ->
@@ -34,7 +34,7 @@ def _lloyd_ctes(*, n_centroids: int | str, iters: int, sample: int, dim: int = _
     the engine's standard rounded-expression determinism convention."""
     rounds = []
     for t in range(1, iters + 1):
-        d = _LLOYD_L2.format(dim=dim, a="s", c="c")
+        d = _LLOYD_L2.format(dim=_EMB_DIM, a="s", c="c")
         rounds.append(f"""
     a{t} AS (
         SELECT vec_id, v, cell FROM (
@@ -44,7 +44,7 @@ def _lloyd_ctes(*, n_centroids: int | str, iters: int, sample: int, dim: int = _
     ),
     m{t} AS (
         SELECT cell, gs.i AS i, round(avg(v[gs.i]), 6) AS m
-        FROM a{t}, generate_series(1, {dim}) gs(i)
+        FROM a{t}, generate_series(1, {_EMB_DIM}) gs(i)
         GROUP BY cell, gs.i
     ),
     c{t} AS MATERIALIZED (
@@ -68,15 +68,15 @@ def _lloyd_ctes(*, n_centroids: int | str, iters: int, sample: int, dim: int = _
 
 def _ivf_lloyd_oracle(
     *, n_centroids: int, n_probe: int, iters: int, k: int,
-    sample: int, query_pred: str, dim: int = _EMB_DIM,
+    sample: int, query_pred: str,
 ) -> str:
     """DuckDB SQL replaying ivf_topk's TRAINED quantizer value-for-value
     (see :func:`_lloyd_ctes`), followed by the same rounded-metric corpus
     assignment, n_probe cell probe, and rounded-cosine rerank the engine
     runs."""
-    d_final = _LLOYD_L2.format(dim=dim, a="e", c="c")
+    d_final = _LLOYD_L2.format(dim=_EMB_DIM, a="e", c="c")
     return f"""
-    WITH {_lloyd_ctes(n_centroids=n_centroids, iters=iters, sample=sample, dim=dim)},
+    WITH {_lloyd_ctes(n_centroids=n_centroids, iters=iters, sample=sample)},
     assign AS (
         SELECT vec_id AS neighbor_id, v AS cvec, cell FROM (
             SELECT e.vec_id, e.v, c.cell,
@@ -366,16 +366,16 @@ _DERIVED_K_SQL = "greatest(16, least(2048, (SELECT count(*) FROM e) // 512))"
 
 
 def _semantic_dedup_oracle(
-    *, n_clusters: int | str, iters: int, threshold: float, sample: int, dim: int = _EMB_DIM,
+    *, n_clusters: int | str, iters: int, threshold: float, sample: int,
 ) -> str:
     """DuckDB SQL replaying semantic_dedup end-to-end: the shared Lloyd's
     training chain (:func:`_lloyd_ctes`), the rounded-metric cell
     assignment, within-cell rounded-cosine pairing, partner counts, and
     the keep-first (min-id survivor) rule. ``n_clusters`` may be a SQL
     expression (:data:`_DERIVED_K_SQL`) — the corpus-derived auto-k."""
-    d_final = _LLOYD_L2.format(dim=dim, a="e", c="c")
+    d_final = _LLOYD_L2.format(dim=_EMB_DIM, a="e", c="c")
     return f"""
-    WITH {_lloyd_ctes(n_centroids=n_clusters, iters=iters, sample=sample, dim=dim)},
+    WITH {_lloyd_ctes(n_centroids=n_clusters, iters=iters, sample=sample)},
     assign AS MATERIALIZED (
         SELECT vec_id AS id, v, cell FROM (
             SELECT e.vec_id, e.v, c.cell,

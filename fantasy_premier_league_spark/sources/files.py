@@ -78,11 +78,9 @@ def latest_snapshot(spark: SparkSession, directory: str, *, prefix: str, ext: st
     return rows[0]["file_path"] if rows else None
 
 
-def snapshots_asof_deadlines(
-    snapshots: DataFrame, deadlines: DataFrame, *, deadline_ts: str = "gameweek_deadline_time"
-) -> DataFrame:
-    """J10 (M1.ipynb § 20 get_closest_dates): for each gameweek deadline,
-    the latest snapshot strictly before it. The reference cross-joins
+def snapshots_asof_deadlines(snapshots: DataFrame, deadlines: DataFrame) -> DataFrame:
+    """J10 (M1.ipynb § 20 get_closest_dates): for each gameweek deadline
+    (``gameweek_deadline_time``), the latest snapshot strictly before it. The reference cross-joins
     files x gameweeks then keeps the group max; this is the union-merge
     as-of join — no pair materialization.
     """
@@ -91,7 +89,7 @@ def snapshots_asof_deadlines(
         snapshots.withColumn("__k", F.lit(1)),
         left_on="__k",
         right_on="__k",
-        left_ts=deadline_ts,
+        left_ts="gameweek_deadline_time",
         right_ts="date_extracted",
         right_value_cols=("date_extracted", "file_path", "file_name"),
         allow_exact_matches=False,

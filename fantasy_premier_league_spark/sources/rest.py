@@ -24,19 +24,12 @@ from collections.abc import Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
-#: public FPL API endpoints (fpltools/constants.py:5-24 catalog)
-FPL_API = {
-    "main": "https://fantasy.premierleague.com/api/bootstrap-static/",
-    "fixtures": "https://fantasy.premierleague.com/api/fixtures/",
-    "player": "https://fantasy.premierleague.com/api/element-summary/{key}/",
-}
-
 Transport = Callable[[str], bytes]
 
 
-def default_transport(url: str, *, timeout: float = 30.0) -> bytes:
+def default_transport(url: str) -> bytes:
     req = urllib.request.Request(url, headers={"User-Agent": "spark-engine/0.1"})
-    with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
+    with urllib.request.urlopen(req, timeout=30.0) as resp:  # noqa: S310
         return resp.read()
 
 

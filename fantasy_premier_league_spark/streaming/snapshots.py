@@ -7,8 +7,8 @@ streaming append sink: each new snapshot contributes one point-in-time row
 per player, keyed (snapshot_ts, player_id) — late/duplicate files are
 dropped by watermark + dropDuplicates, which the batch reference cannot do.
 
-At scale: file-source listing is incremental (maxFilesPerTrigger), state
-for the dedup is bounded by the watermark, and checkpointing makes the
+At scale: file-source listing is incremental, state for the dedup is
+bounded by the one-hour watermark, and checkpointing makes the
 append log exactly-once.
 """
 
@@ -39,12 +39,10 @@ SNAPSHOT_DOC_SCHEMA = T.StructType(
 )
 
 
-def stream_snapshots(spark: SparkSession, directory: str, *, max_files_per_trigger: int | None = None) -> DataFrame:
+def stream_snapshots(spark: SparkSession, directory: str) -> DataFrame:
     """Streaming file source over the snapshot directory; one row per
     snapshot document with its name-embedded timestamp."""
     reader = spark.readStream.schema(SNAPSHOT_DOC_SCHEMA).option("multiLine", True)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.json(directory).withColumn("__file", F.input_file_name())
     name = F.element_at(F.split("__file", "/"), -1)
     return raw.withColumn(
@@ -52,10 +50,10 @@ def stream_snapshots(spark: SparkSession, directory: str, *, max_files_per_trigg
     )
 
 
-def players_status_stream(snapshots: DataFrame, *, watermark: str = "1 hour") -> DataFrame:
+def players_status_stream(snapshots: DataFrame) -> DataFrame:
     """The players_statuses append log as a stream: explode elements, stamp
-    the snapshot timestamp, dedup (snapshot_ts, player_id) within the
-    watermark (duplicate file drops are a real S3 failure mode)."""
+    the snapshot timestamp, dedup (snapshot_ts, player_id) within a
+    one-hour watermark (duplicate file drops are a real S3 failure mode)."""
     exploded = snapshots.select(
         "snapshot_ts", F.explode("elements").alias("e")
     ).select(
@@ -70,14 +68,14 @@ def players_status_stream(snapshots: DataFrame, *, watermark: str = "1 hour") ->
         F.col("e.transfers_in_event").cast("int").alias("transfers_in_event"),
         F.col("e.transfers_out_event").cast("int").alias("transfers_out_event"),
     )
-    return exploded.withWatermark("snapshot_ts", watermark).dropDuplicates(
+    return exploded.withWatermark("snapshot_ts", "1 hour").dropDuplicates(
         ["snapshot_ts", "player_id"]
     )
 
 
-def run_to_parquet(stream: DataFrame, *, path: str, checkpoint: str, mode: str = "append") -> None:
-    """Drain a stream to parquet with trigger=availableNow (incremental
-    batch): processes everything currently in the source, checkpoints, and
+def run_to_parquet(stream: DataFrame, *, path: str, checkpoint: str) -> None:
+    """Append-drain a stream to parquet with trigger=availableNow
+    (incremental batch): processes everything currently in the source, checkpoints, and
     stops — the scheduled-ingest pattern for snapshot drops.
 
     A stateful stream (the snapshot dedup) fixes its state-store partition
@@ -96,7 +94,7 @@ def run_to_parquet(stream: DataFrame, *, path: str, checkpoint: str, mode: str =
     try:
         query = (
             stream.writeStream.format("parquet")
-            .outputMode(mode)
+            .outputMode("append")
             .option("path", path)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)

@@ -194,6 +194,19 @@ def _used_names(node, aliases: dict[str, set[str]]) -> set[str]:
     return out.union(*(aliases.get(n, ()) for n in out))
 
 
+def _scan_trees() -> tuple[dict[str, ast.Module], list[ast.Module]]:
+    """The package modules by path, and the root-side files outside it:
+    ``__spark_entry__.py``, ``tools/*.py`` and perfbench's non-test files.
+    Both the def and the parameter scans start from these."""
+    import glob
+
+    pkg = os.path.join(_REPO, "fantasy_premier_league_spark")
+    trees = {p: ast.parse(open(p, encoding="utf-8").read()) for p in glob.glob(f"{pkg}/**/*.py", recursive=True)}
+    others = [os.path.join(_REPO, "__spark_entry__.py"), *glob.glob(f"{_REPO}/tools/*.py")]
+    others += [p for p in glob.glob(f"{_REPO}/perfbench/*.py") if not os.path.basename(p).startswith("test_")]
+    return trees, [ast.parse(open(p, encoding="utf-8").read()) for p in others]
+
+
 def test_package_defs_reachable():
     """Every top-level package def is reachable from a root or kept on
     ``_REACH_KEEP`` with its reason, so code that no query, tool or
@@ -206,13 +219,8 @@ def test_package_defs_reachable():
     but live code is never flagged — as long as nothing dispatches to a
     package def through a string (``getattr`` by name), which the scan
     cannot see."""
-    import glob
-
+    trees, other_trees = _scan_trees()
     pkg = os.path.join(_REPO, "fantasy_premier_league_spark")
-    trees = {p: ast.parse(open(p, encoding="utf-8").read()) for p in glob.glob(f"{pkg}/**/*.py", recursive=True)}
-    others = [os.path.join(_REPO, "__spark_entry__.py"), *glob.glob(f"{_REPO}/tools/*.py")]
-    others += [p for p in glob.glob(f"{_REPO}/perfbench/*.py") if not os.path.basename(p).startswith("test_")]
-    other_trees = [ast.parse(open(p, encoding="utf-8").read()) for p in others]
 
     aliases: dict[str, set[str]] = {}
     for tree in [*trees.values(), *other_trees]:
@@ -255,3 +263,162 @@ def test_package_defs_reachable():
     live = close(reached | {defs[k][0] for k in _REACH_KEEP})
     dead = sorted(set(defs) - live)
     assert not dead, f"package defs no root reaches (delete them or keep-list them with a reason): {dead}"
+
+
+#: Defaulted package parameters that no root-side call sets but that stay,
+#: keyed ``path:def.param`` (nested and method defs by their dotted path).
+#: Each reason is a COVERAGE.md ID, a deployment setting, a test fake, or a
+#: test-forced path (a value only tests pass, to drive on a small input a
+#: branch that large inputs take).
+_PARAM_KEEP = {
+    # COVERAGE.md IDs: the parameters of _REACH_KEEP defs and of the
+    # capabilities a §2.1-§2.10 row names
+    "etl/features.py:point_in_time_features.ts_col": "training-data additions: point-in-time features",
+    "etl/fifa.py:clean_fifa.max_tags": "F4/F6",
+    "etl/quality.py:check_notnull_pk.raise_errors": "Q2",
+    "etl/quality.py:validated_join.how": "Q4 (J6/J7)",
+    "etl/quality.py:validated_join.left_keys": "Q4 (J6/J7)",
+    "etl/quality.py:validated_join.raise_errors": "Q4 (J6/J7)",
+    "etl/quality.py:validated_join.right_keys": "Q4 (J6/J7)",
+    "etl/quality.py:validated_join.validate": "J6/J7: one_to_one vs many_to_one",
+    "functions/features.py:bin_values.out": "F21",
+    "functions/features.py:group_mean_impute.out": "A6",
+    "functions/features.py:one_hot.prefix": "U5/F20",
+    "ml/impute.py:regression_impute_loglog.eps": "M14",
+    "ml/impute.py:regression_impute_loglog.out": "M14",
+    "ml/percentage.py:PercentageCalc.__init__.constant": "M7 (A2)",
+    "ml/percentage.py:PercentageCalc.__init__.drop_originals": "M7 (A2)",
+    "ml/percentage.py:PercentageCalc.__init__.final_suffix": "M7 (A2)",
+    "ml/pipeline.py:choose_pca_k.variance": "M2: PCA(n_components=0.95) as a variance target",
+    "ml/pipeline.py:grid_search_grouped.k": "M8",
+    "ml/pipeline.py:grid_search_grouped.metric": "M8",
+    "ml/pipeline.py:grid_search_grouped.seed": "M8",
+    "ml/pipeline.py:make_classifier_pipeline.classifier": "M5/M6: the GBT and RF classifiers",
+    "ml/pipeline.py:make_classifier_pipeline.pca_k": "M2",
+    "ml/pipeline.py:make_classifier_pipeline.select_top_k": "M3",
+    "ml/pipeline.py:make_classifier_pipeline.standardize": "M1: the StandardScaler stage",
+    "ml/splits.py:cross_validate_grouped.seed": "M9",
+    "ml/splits.py:entity_train_test_split.seed": "M10: a seeded split",
+    "ml/stats.py:correlation_matrix.method": "A13: pearson or spearman",
+    "ml/stats.py:top_correlations.k": "O5",
+    "ml/text.py:topic_features.n_topics": "M13",
+    "operators/curation.py:domain_mix_rates.target_shares": "training-data additions: domain-mix rebalancing to a target mix",
+    "operators/fuzzy.py:resolve_entities.existing_lookup": "J13 anti-membership incremental",
+    "operators/skew.py:salted_join.how": "J + skew salting: outer salted joins",
+    "operators/similarity.py:cosine_pairs_block.id_col": "test reference for cosine_pairs_grid",
+    "operators/similarity.py:cosine_pairs_block.round_digits": "test reference for cosine_pairs_grid",
+    "operators/similarity.py:cosine_pairs_block.threshold": "test reference for cosine_pairs_grid",
+    "operators/similarity.py:cosine_pairs_block.vec_col": "test reference for cosine_pairs_grid",
+    "sources/files.py:latest_snapshot.ext": "S13",
+    "sources/jdbc.py:batch_append.target_columns": "S10",
+    "sources/jdbc.py:batch_overwrite.target_columns": "S9",
+    "sources/jdbc.py:load_catalog.mode": "S10 (FK-ordered catalog load)",
+    "sources/rest.py:fetch_keyed_documents.max_retries": "S2",
+    "sources/rest.py:fetch_keyed_documents.num_partitions": "S2",
+    "sources/rest.py:fetch_keyed_documents.retry_backoff_s": "S2",
+    # deployment settings
+    "session.py:get_spark.cpus": "deployment setting: task slots",
+    "sources/jdbc.py:batch_append.properties": "deployment setting: JDBC connection properties",
+    "sources/jdbc.py:batch_overwrite.properties": "deployment setting: JDBC connection properties",
+    "sources/jdbc.py:load_catalog.properties": "deployment setting: JDBC connection properties",
+    "sources/jdbc.py:read_query.properties": "deployment setting: JDBC connection properties",
+    "sources/jdbc.py:read_table.properties": "deployment setting: JDBC connection properties",
+    # test fakes
+    "sources/rest.py:fetch_document.transport": "test fake: no network in tests",
+    "sources/rest.py:fetch_keyed_documents.transport": "test fake: no network in tests",
+    # test-forced paths: a small input reaches the branch large inputs take
+    "operators/cache.py:release_operator_caches.blocking": "test-forced: a synchronous release to assert freed storage",
+    "operators/curation.py:waterfill_budgets.total_budget": "test-forced: the absolute-budget mode and its validation",
+    "operators/dedup.py:connected_components.local_finish_edges": "test-forced: 0 runs the distributed fixpoint",
+    "operators/dedup.py:connected_components.max_iter": "test-forced: 1 hits the non-convergence warning",
+    "operators/dedup.py:connected_components.shortcut_from": "test-forced: pointer jumping from round 0 or never",
+    "operators/dedup.py:connected_components_star.local_finish_edges": "test-forced: 0 runs the distributed fixpoint",
+    "operators/dedup.py:containment_lsh_pairs.max_bucket_size": "test-forced: the degenerate-bucket cap",
+    "operators/dedup.py:minhash_incremental_pairs.max_bucket_size": "test-forced: the degenerate-bucket cap",
+    "operators/dedup.py:prefix_filtered_jaccard_pairs.naive_candidate_ratio": "test-forced: the prefix-filter path",
+    "operators/dedup.py:simhash.bits": "test-forced: the unsupported-width raise",
+    "operators/dedup.py:simhash_near_dup_pairs.max_bucket_size": "test-forced: the degenerate-bucket cap",
+    "operators/fuzzy.py:resolve_entities.n_salt": "test-forced: the salted blocking join",
+    "operators/graph.py:pagerank.checkpoint_every": "test-forced: lineage cuts at a shallow depth",
+    "operators/graph.py:pagerank.local_finish_edges": "test-forced: None runs the distributed rounds",
+    "operators/incremental.py:estimate_kmv.k": "test-forced: the estimate's k matches the sketch's",
+    "operators/incremental.py:merge_kmv_state.k": "test-forced: a 64-hash sketch fills on a small input",
+    "operators/similarity.py:cosine_pairs_grid.n_blocks": "test-forced: cross-block and within-block tasks",
+    "operators/similarity.py:semantic_decontaminate.eval_broadcast_max_rows": "test-forced: the IVF route",
+    "operators/similarity.py:semantic_decontaminate.n_probe": "test-forced: partial IVF probing",
+    "operators/similarity.py:semantic_decontaminate_ivf.n_centroids": "test-forced: full-probe equivalence",
+}
+
+
+def _defaulted_params(tree: ast.Module, path: str) -> dict[str, tuple[str, int | None, str]]:
+    """``path:def.param`` -> (name calls use, position in a call's
+    positional arguments or None if keyword-only, parameter name) for every
+    parameter with a default. A method's position skips ``self``; a class
+    is called by its own name for its ``__init__``."""
+    out = {}
+
+    def visit(node, prefix: str, cls: str | None):
+        for st in ast.iter_child_nodes(node):
+            if isinstance(st, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a, qual = st.args, prefix + st.name
+                pos = a.posonlyargs + a.args
+                static = any(getattr(d, "id", None) == "staticmethod" for d in st.decorator_list)
+                skip = 1 if cls and not static else 0
+                called = cls if cls and st.name == "__init__" else st.name
+                for i, arg in enumerate(pos[len(pos) - len(a.defaults):], len(pos) - len(a.defaults)):
+                    out[f"{path}:{qual}.{arg.arg}"] = (called, i - skip, arg.arg)
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        out[f"{path}:{qual}.{arg.arg}"] = (called, None, arg.arg)
+                visit(st, qual + ".", None)
+            elif isinstance(st, ast.ClassDef):
+                visit(st, prefix + st.name + ".", st.name)
+            else:
+                visit(st, prefix, cls)
+
+    visit(tree, "", None)
+    return out
+
+
+def test_package_params_set():
+    """Every defaulted package parameter is set by some root-side call or
+    kept on ``_PARAM_KEEP`` with its reason: a default that no query, tool
+    or benchmark changes is a constant, and the branches only another value
+    reaches are dead.
+
+    Root-side calls are every call in the package (the def scan above holds
+    each package def to a root) and in the root files outside it. Calls
+    match a def by NAME, as the def scan does; a call sets a parameter when
+    it passes it by keyword, covers its position, or passes ``*``/``**``
+    (which may carry any parameter). A shared name can therefore hide an
+    unset parameter, but a set one is never flagged."""
+    trees, other_trees = _scan_trees()
+    pkg = os.path.join(_REPO, "fantasy_premier_league_spark")
+    params = {}
+    for path, tree in trees.items():
+        params.update(_defaulted_params(tree, os.path.relpath(path, pkg)))
+
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in [*trees.values(), *other_trees]:
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                calls.setdefault(name, []).append(n)
+
+    def is_set(called: str, pos: int | None, name: str) -> bool:
+        return any(
+            any(k.arg in (None, name) for k in c.keywords)
+            or any(isinstance(a, ast.Starred) for a in c.args)
+            or (pos is not None and pos < len(c.args))
+            for c in calls.get(called, ())
+        )
+
+    unset = {k for k, spec in params.items() if not is_set(*spec)}
+    stale = sorted(set(_PARAM_KEEP) - unset)
+    assert not stale, f"keep-list names a parameter that is set or does not exist: {stale}"
+    offenders = sorted(unset - set(_PARAM_KEEP))
+    assert not offenders, (
+        f"{len(offenders)} defaulted package parameters no root-side call sets (make each "
+        f"a constant and delete what only another value reaches, or keep-list it with a "
+        f"reason): {offenders}"
+    )
